@@ -739,7 +739,7 @@ final class GraftDatabase private (
       // NEVER patch-safe: the batch inserts NEW PKs, and two concurrent
       // appliers (multi-source replication) committing commuting
       // patches would both land the same key — the exact write-skew
-      // fileGranularPut's gate documents; upsert stays absolute for
+      // fileGranularAction's gate documents; upsert stays absolute for
       // the same reason
       commitGranularOrFull(name, tdef, base, hitRaw, touched,
         table(name).schema, emptyHitsAppend = true,
@@ -1330,22 +1330,7 @@ final class GraftDatabase private (
       batchId: Long): Boolean = {
     requireNoOpenTx()
     if (txlog.snapshot().txns.get(appId).exists(_ >= batchId)) return false
-    val tdef = tableDef(name)
-    val base = txlog.settledVersion
-    val existing = if (tableExists(name)) Some(table(name)) else None
-    val parents = tdef.fks.map(fk => fk.parentTable -> table(fk.parentTable)).toMap
-    enforceLimitSize()
-    val staged = stageConcurrently(norm(name), rows) {
-      requireClean(ConstrainedDml.validateInsert(
-        spark, tdef, rows, existing, parents))
-    }
-    txlog.commit(
-      Seq(TxLog.Add(norm(name), staged),
-        TxLog.Txn(appId, batchId)) ++
-        schemaSyncActions(norm(name), rows.schema),
-      readVersion = base,
-      readTables = tdef.fks.map(_.parentTable).toSet)
-    invalidateSqlEngine()
+    appendChecked(name, rows, Seq(TxLog.Txn(appId, batchId)))
     true
   }
 
@@ -1460,23 +1445,12 @@ final class GraftDatabase private (
       // rewrite read falls back on unmapped files (hitFilesScan) and
       // fileGranularAction re-checks the binding before committing,
       // degrading to the full-rewrite fallback under any interleaving.
-      val snapNow = txlog.snapshot()
-      val marked = txlog.readMarked(norm(name), "_graft_file").get
-      val hitRaw = knownHitFiles.getOrElse {
-        val affected = repl.select(col(tdef.pk)).union(dels).distinct()
-        graft.core.JobLabel(spark, s"merge hit probe $name") {
-          marked
-            .join(broadcast(affected), Seq(tdef.pk), "left_semi")
-            .select("_graft_file").distinct()
-            .collect()
-        }.map(_.getString(0))
-      }.filter(_.nonEmpty)
-      val touched = ConstrainedDml.upsert(
-        hitFilesScan(snapNow, norm(name), hitRaw, marked, "_graft_file")
-          .join(dels, Seq(tdef.pk), "left_anti"),
-        repl, tdef.pk)
-      commitGranularOrFull(name, tdef, base, hitRaw, touched,
-        existing.schema, emptyHitsAppend = true, extra = ledger)(merged)
+      keyedRewrite(name, tdef, base, txlog.snapshot(),
+        txlog.readMarked(norm(name), "_graft_file").get,
+        broadcast(repl.select(col(tdef.pk)).union(dels).distinct()),
+        knownHitFiles, existing.schema, emptyHitsAppend = true,
+        patchSafe = false, extra = ledger)(scan => ConstrainedDml.upsert(
+          scan.join(dels, Seq(tdef.pk), "left_anti"), repl, tdef.pk))(merged)
       true
     } finally { repl.unpersist(); dels.unpersist(); () }
   }
@@ -1501,10 +1475,18 @@ final class GraftDatabase private (
     */
   def insert(name: String, rows: DataFrame): Unit = {
     requireNoOpenTx()
+    appendChecked(name, rows, Nil)
+  }
+
+  /** The body of [[insert]] and [[insertBatch]]: validate `rows` and
+    * append them in one commit carrying the `ledger` marks.
+    */
+  private def appendChecked(name: String, rows: DataFrame,
+      ledger: Seq[TxLog.Action]): Unit = {
     val tdef = tableDef(name)
     val base = txlog.settledVersion
     val existing = if (tableExists(name)) Some(table(name)) else None
-    val parents = tdef.fks.map(fk => fk.parentTable -> table(fk.parentTable)).toMap
+    val parents = parentsOf(tdef)
     enforceLimitSize()
     // validation and staging are INDEPENDENT Spark actions (both read
     // `rows`; nothing publishes until the commit below) — run them
@@ -1512,17 +1494,15 @@ final class GraftDatabase private (
     // violation the staged-but-unpublished files are abandoned exactly
     // like a lost commit race (vacuum reclaims them).
     val staged = stageConcurrently(norm(name), rows) {
-      val violations =
-        ConstrainedDml.validateInsert(spark, tdef, rows, existing, parents)
-      if (violations.nonEmpty)
-        throw new IllegalStateException(s"constraint violations: $violations")
+      requireClean(ConstrainedDml.validateInsert(
+        spark, tdef, rows, existing, parents))
     }
     // an append is an ADD action — but it was VALIDATED against `base`
     // (unique/PK sets, FK PARENTS), so a concurrent commit touching
     // this table OR a validated parent must conflict (a parent delete
     // interleaving with this insert is the classic write-skew orphan)
     txlog.commit(
-      TxLog.Add(norm(name), staged) +:
+      (TxLog.Add(norm(name), staged) +: ledger) ++
         schemaSyncActions(norm(name), rows.schema),
       readVersion = base,
       readTables = tdef.fks.map(_.parentTable).toSet)
@@ -1547,11 +1527,15 @@ final class GraftDatabase private (
     catch {
       case t: Throwable => stagedF.cancel(false); throw t
     }
-    try stagedF.get(30, java.util.concurrent.TimeUnit.MINUTES)
+    await(stagedF)
+  }
+
+  /** A staging-pool result, its failure rethrown unwrapped. */
+  private def await[T](f: java.util.concurrent.CompletableFuture[T]): T =
+    try f.get(30, java.util.concurrent.TimeUnit.MINUTES)
     catch {
       case e: java.util.concurrent.ExecutionException => throw e.getCause
     }
-  }
 
   /** Upsert by the table's PK (TableCollection.cs:1195-1240); unique/FK
     * constraints hold on the merged state like the reference's
@@ -1573,23 +1557,17 @@ final class GraftDatabase private (
     val batch = rows.cache()
     try {
       if (batch.isEmpty) return // empty batch: true no-op, no version
-      val merged = ConstrainedDml.upsert(table(name), batch, tdef.pk)
+      val existing = table(name)
+      val merged = ConstrainedDml.upsert(existing, batch, tdef.pk)
       requireClean(ConstrainedDml.validateUpdate(
         spark, tdef, batch, merged, parentsOf(tdef)))
       // file-granular: only files holding a PK the batch REPLACES
-      // rewrite; a batch of all-new PKs is a pure append (files kept).
-      // The rewrite read scans ONLY the hit files (hitFilesScan).
-      val snapNow = txlog.snapshot()
-      val marked = txlog.readMarked(norm(name), "_graft_file").get
-      val hitRaw = marked
-        .join(batch.select(col(tdef.pk)), Seq(tdef.pk), "left_semi")
-        .select("_graft_file").distinct()
-        .collect().map(_.getString(0)).filter(_.nonEmpty)
-      val touched = ConstrainedDml.upsert(
-        hitFilesScan(snapNow, norm(name), hitRaw, marked, "_graft_file"),
-        batch, tdef.pk)
-      commitGranularOrFull(name, tdef, base, hitRaw, touched,
-        table(name).schema, emptyHitsAppend = true)(merged)
+      // rewrite; a batch of all-new PKs is a pure append (files kept)
+      keyedRewrite(name, tdef, base, txlog.snapshot(),
+        txlog.readMarked(norm(name), "_graft_file").get,
+        batch.select(col(tdef.pk)), None, existing.schema,
+        emptyHitsAppend = true, patchSafe = false, extra = Nil)(
+        ConstrainedDml.upsert(_, batch, tdef.pk))(merged)
     } finally batch.unpersist()
   }
 
@@ -1616,19 +1594,11 @@ final class GraftDatabase private (
         requireClean(ConstrainedDml.validateUpdate(
           spark, tdef, matched, merged, parentsOf(tdef)))
         // file-granular: rewrite only the files holding a replaced PK
-        // (and read only those — hitFilesScan)
-        val snapNow = txlog.snapshot()
-        val marked = txlog.readMarked(norm(name), "_graft_file").get
-        val hitRaw = marked
-          .join(matched.select(col(tdef.pk)), Seq(tdef.pk), "left_semi")
-          .select("_graft_file").distinct()
-          .collect().map(_.getString(0)).filter(_.nonEmpty)
-        val touched = ConstrainedDml.upsert(
-          hitFilesScan(snapNow, norm(name), hitRaw, marked, "_graft_file"),
-          matched, tdef.pk)
-        commitGranularOrFull(name, tdef, base, hitRaw, touched,
-          existing.schema, emptyHitsAppend = false,
-          patchSafe = tdef.uniqueCols.isEmpty)(merged)
+        keyedRewrite(name, tdef, base, txlog.snapshot(),
+          txlog.readMarked(norm(name), "_graft_file").get,
+          matched.select(col(tdef.pk)), None, existing.schema,
+          emptyHitsAppend = false, patchSafe = tdef.uniqueCols.isEmpty,
+          extra = Nil)(ConstrainedDml.upsert(_, matched, tdef.pk))(merged)
       }
       n
     } finally matched.unpersist()
@@ -1991,21 +1961,33 @@ final class GraftDatabase private (
   private def clearClusterMeta(name: String): Unit =
     Files.deleteIfExists(Paths.get(s"$tablesDir/.${norm(name)}_cluster"))
 
-  /** Map a scan's ABSOLUTE hit-file URIs (input_file_name form) back to
-    * the snapshot's root-relative binding entries, refusing loudly when
-    * any scanned file no longer maps — an interleaved rewrite would
-    * also fail the commit's conflict check, but a silent partial
-    * staging must be impossible. Shared by the hit-file DML paths.
+  /** The one map from a scan's ABSOLUTE hit-file URIs (input_file_name
+    * form) back to the snapshot's root-relative binding entries: (URI,
+    * entry) pairs in binding order, or None when any scanned file no
+    * longer maps (an interleaved rewrite replaced it since the scan).
+    * Every hit-file path resolves through here.
+    */
+  private def hitEntries(snap: TxLog.Snapshot, table: String,
+      hitRaw: Seq[String]): Option[Vector[(String, String)]] = {
+    val rawOf = hitRaw.map(r => new java.net.URI(r).getPath -> r).toMap
+    val hits = snap.tables.getOrElse(table, Vector.empty).flatMap(rel =>
+      rawOf.get(Paths.get(s"$root/$rel").toAbsolutePath.toString)
+        .map(_ -> rel))
+    if (hits.size == rawOf.size) Some(hits) else None
+  }
+
+  /** [[hitEntries]]' binding entries, refusing loudly when any scanned
+    * file no longer maps — an interleaved rewrite would also fail the
+    * commit's conflict check, but a silent partial staging must be
+    * impossible.
     */
   private def hitRelOf(snap: TxLog.Snapshot, table: String,
       hitRaw: Array[String], what: String): Seq[String] = {
-    val hitAbs = hitRaw.map(r => new java.net.URI(r).getPath).toSet
-    val hitRel = snap.tables.getOrElse(table, Vector.empty).filter(r =>
-      hitAbs.contains(Paths.get(s"$root/$r").toAbsolutePath.toString))
-    require(hitRel.size == hitAbs.size,
+    val hits = hitEntries(snap, table, hitRaw.toSeq)
+    require(hits.isDefined,
       s"$what: scanned hit files no longer in the committed binding " +
         "(interleaved rewrite?) — retry")
-    hitRel
+    hits.get.map(_._2)
   }
 
   /** The DV-masked rows of exactly the hit files — the rewrite-side
@@ -2021,15 +2003,40 @@ final class GraftDatabase private (
     * correctness never rests on this mapping.
     */
   private def hitFilesScan(snap: TxLog.Snapshot, table: String,
-      hitRaw: Array[String], marked: DataFrame,
-      fileCol: String): DataFrame = {
-    if (hitRaw.isEmpty) return marked.limit(0).drop(fileCol)
-    val hitAbs = hitRaw.map(r => new java.net.URI(r).getPath).toSet
-    val hitRel = snap.tables.getOrElse(table, Vector.empty).filter(r =>
-      hitAbs.contains(Paths.get(s"$root/$r").toAbsolutePath.toString))
-    if (hitRel.size == hitAbs.size)
-      txlog.readFilesMasked(snap, table, hitRel)
-    else marked.filter(col(fileCol).isin(hitRaw.toSeq: _*)).drop(fileCol)
+      hitRaw: Array[String], marked: DataFrame): DataFrame =
+    if (hitRaw.isEmpty) marked.limit(0).drop("_graft_file")
+    else hitEntries(snap, table, hitRaw.toSeq) match {
+      case Some(hits) => txlog.readFilesMasked(snap, table, hits.map(_._2))
+      case None => marked.filter(col("_graft_file").isin(hitRaw.toSeq: _*))
+        .drop("_graft_file")
+    }
+
+  /** The keyed rewrite shared by every PK-addressed write (upsert,
+    * update, mergeBatch, a persisted LiteSql statement): ONE labelled
+    * probe collects the files of `marked` (read at `snap`) holding a PK
+    * in `keys` (null-safe, so a null-PK row is addressable) — skipped
+    * when the caller already knows them — then `rewrite` turns exactly
+    * those files' rows ([[hitFilesScan]]) into their replacement, and
+    * [[commitGranularOrFull]] commits it or rewrites the table as
+    * `fallback`. The caller owns the probe's join strategy (a hint on
+    * `keys`, built only when the probe runs) and the snapshot.
+    */
+  private def keyedRewrite(name: String, tdef: TableDef, base: Long,
+      snap: TxLog.Snapshot, marked: DataFrame, keys: => DataFrame,
+      knownHits: Option[Array[String]],
+      expectedSchema: org.apache.spark.sql.types.StructType,
+      emptyHitsAppend: Boolean, patchSafe: Boolean,
+      extra: Seq[TxLog.Action])(rewrite: DataFrame => DataFrame)(
+      fallback: => DataFrame): Unit = {
+    val hitRaw = knownHits.getOrElse(
+      graft.core.JobLabel(spark, s"keyed hit probe ${norm(name)}") {
+        val k = keys.select(col(tdef.pk).as("_graft_key"))
+        marked.join(k, marked(tdef.pk) <=> k("_graft_key"), "left_semi")
+          .select("_graft_file").distinct().collect()
+      }.map(_.getString(0))).filter(_.nonEmpty)
+    commitGranularOrFull(name, tdef, base, hitRaw,
+      rewrite(hitFilesScan(snap, norm(name), hitRaw, marked)),
+      expectedSchema, emptyHitsAppend, patchSafe, extra)(fallback)
   }
 
   private def parentsOf(tdef: TableDef): Map[String, DataFrame] =
@@ -2075,12 +2082,7 @@ final class GraftDatabase private (
     val hits = hits0.map { case (n, df) =>
       n -> java.util.concurrent.CompletableFuture.supplyAsync(
         () => df.localCheckpoint(eager = true), stagingPool)
-    }.map { case (n, fut) =>
-      n -> (try fut.get(30, java.util.concurrent.TimeUnit.MINUTES)
-        catch {
-          case e: java.util.concurrent.ExecutionException => throw e.getCause
-        })
-    }
+    }.map { case (n, fut) => n -> await(fut) }
     // ONE aggregation per touched table answers BOTH "any match?" and
     // "which files" (a separate isEmpty probe would double the job
     // count — the dominant fixed cost of small DMLs), and each table's
@@ -2100,11 +2102,6 @@ final class GraftDatabase private (
             () => txlog.stage(n, touched), stagingPool)
         }
       }.toMap
-    def awaitStaged(n: String): Seq[String] =
-      try stagedF(n).get(30, java.util.concurrent.TimeUnit.MINUTES)
-      catch {
-        case e: java.util.concurrent.ExecutionException => throw e.getCause
-      }
     val rootPerFile =
       try hits.get(norm(name)).map(perFileOf)
       catch {
@@ -2133,7 +2130,7 @@ final class GraftDatabase private (
             // commuting patch on the table being constraint-free
             Some(fileGranularAction(n, hitRaw, plain.schema, plain.schema,
               patchSafe = defs.get(n).forall(_.uniqueCols.isEmpty),
-              staged = awaitStaged(n))
+              staged = await(stagedF(n)))
               .getOrElse(full))
           // the walk VISITED this table but touched no row in it (a
           // cascade whose doomed parents have no children here): its
@@ -2235,17 +2232,12 @@ final class GraftDatabase private (
           }
         }
       }
-      val allRel = snap.tables.getOrElse(n, Vector.empty)
-      def toRel(abs: String): String = {
-        val p = new java.net.URI(abs).getPath
-        allRel.find(r =>
-          Paths.get(s"$root/$r").toAbsolutePath.toString == p)
-          .getOrElse(throw new IllegalStateException(
-            s"deleteVectorized('$n'): scanned file $abs is not in the " +
-              "committed binding (interleaved rewrite?) — retry"))
-      }
+      val relOf = hitEntries(snap, n, perFile.map(_._1).toSeq)
+        .getOrElse(throw new IllegalStateException(
+          s"deleteVectorized('$n'): a scanned file is not in the " +
+            "committed binding (interleaved rewrite?) — retry")).toMap
       val actions = perFile.map { case (abs, _) =>
-        val rel = toRel(abs)
+        val rel = relOf(abs)
         val newPks = hits.filter(col("_graft_file") === abs).select(col(pk))
         // a re-masked file replaces its DV with the UNION — the
         // snapshot holds exactly one complete mask per file
@@ -2268,24 +2260,15 @@ final class GraftDatabase private (
   }
 
   /** File-granular PUT action (the Delta/Iceberg copy-on-write shape):
-    * bind the files NOT in `hitRaw` unchanged and stage `touched` as
-    * their replacement. None when the raw↔log path mapping does not
-    * account for every hit file or the replacement drifts the schema —
-    * the caller then falls back to a full rewrite. An EMPTY hit set is
-    * a pure append (all files kept, `touched` staged alongside).
-    */
-  private def fileGranularPut(name: String, hitRaw: Array[String],
-      touched: DataFrame,
-      expectedSchema: org.apache.spark.sql.types.StructType,
-      patchSafe: Boolean = false): Option[TxLog.Action] =
-    fileGranularAction(name, hitRaw, touched.schema, expectedSchema,
-      patchSafe, txlog.stage(norm(name), touched))
-
-  /** [[fileGranularPut]] with the replacement files ALREADY staged (a
-    * by-name block, so the mapping checks run before the write when the
-    * caller is sequential, or concurrently with it when the caller
-    * overlapped the staging — abandoned staged files are unpublished
-    * garbage either way, reclaimed by vacuum).
+    * bind the files NOT in `hitRaw` unchanged and `staged` (the
+    * replacement rows, schema `touchedSchema`) beside them. None when
+    * the raw↔log path mapping does not account for every hit file or
+    * the replacement drifts the schema — the caller then falls back to
+    * a full rewrite. An EMPTY hit set is a pure append (all files kept).
+    * `staged` is by-name, so the mapping checks run before the write
+    * when the caller is sequential, or concurrently with it when the
+    * caller overlapped the staging — abandoned staged files are
+    * unpublished garbage either way, reclaimed by vacuum.
     */
   private def fileGranularAction(name: String, hitRaw: Array[String],
       touchedSchema: org.apache.spark.sql.types.StructType,
@@ -2293,14 +2276,8 @@ final class GraftDatabase private (
       patchSafe: Boolean,
       staged: => Seq[String]): Option[TxLog.Action] = {
     val n = norm(name)
-    val hitAbs = hitRaw.map(r => new java.net.URI(r).getPath).toSet
-    val allRel = txlog.snapshot().tables.getOrElse(n, Vector.empty)
-    val (hitRel, keepRel) = allRel.partition(r =>
-      hitAbs.contains(Paths.get(s"$root/$r").toAbsolutePath.toString))
-    // every file hit → granular staging degenerates to a full rewrite
-    // but through an extra per-row file filter; the caller's plain
-    // full-rewrite fallback is the same bytes for less work
-    if (keepRel.isEmpty && allRel.nonEmpty) return None
+    val snap = txlog.snapshot()
+    val allRel = snap.tables.getOrElse(n, Vector.empty)
     // the staged rows must carry EVERY expected column at its exact
     // type (a missing one would silently null a column of the rewritten
     // rows); EXTRA columns are fine — a widening DML (MERGE autoMerge,
@@ -2308,17 +2285,21 @@ final class GraftDatabase private (
     // the same commit so untouched files null-fill
     val touchedMap = touchedSchema
       .map(f => f.name.toLowerCase -> f.dataType).toMap
-    val ok = keepRel.size + hitAbs.size == allRel.size &&
-      expectedSchema.forall(f =>
-        touchedMap.get(f.name.toLowerCase).contains(f.dataType))
-    if (!ok) None
-    // patchSafe (no unique constraints a concurrent writer's unseen
-    // rows could break, no new PKs): commit as a RELATIVE remove/add
-    // patch, so concurrent statements on DISJOINT files of this table
-    // both land — the Delta-style concurrency unit
-    else if (patchSafe)
-      Some(TxLog.Patch(n, hitRel, staged))
-    else Some(TxLog.Put(n, keepRel ++ staged))
+    val schemaOk = expectedSchema.forall(f =>
+      touchedMap.get(f.name.toLowerCase).contains(f.dataType))
+    hitEntries(snap, n, hitRaw.toSeq).map(_.map(_._2)).flatMap { hitRel =>
+      val keepRel = allRel.diff(hitRel)
+      // every file hit → granular staging degenerates to a full rewrite
+      // but through an extra per-row file filter; the caller's plain
+      // full-rewrite fallback is the same bytes for less work
+      if ((keepRel.isEmpty && allRel.nonEmpty) || !schemaOk) None
+      // patchSafe (no unique constraints a concurrent writer's unseen
+      // rows could break, no new PKs): commit as a RELATIVE remove/add
+      // patch, so concurrent statements on DISJOINT files of this table
+      // both land — the Delta-style concurrency unit
+      else if (patchSafe) Some(TxLog.Patch(n, hitRel, staged))
+      else Some(TxLog.Put(n, keepRel ++ staged))
+    }
   }
 
   /** The shared tail of every single-table granular DML: commit the
@@ -2331,14 +2312,13 @@ final class GraftDatabase private (
       hitRaw: Array[String], touched: DataFrame,
       expectedSchema: org.apache.spark.sql.types.StructType,
       emptyHitsAppend: Boolean, patchSafe: Boolean = false,
-      extra: Seq[TxLog.Action] = Nil,
-      preStaged: Option[Seq[String]] = None)(
+      extra: Seq[TxLog.Action] = Nil)(
       fallback: => DataFrame): Unit = {
     enforceLimitSize()
     val granular =
       if (hitRaw.nonEmpty || emptyHitsAppend)
         fileGranularAction(name, hitRaw, touched.schema, expectedSchema,
-          patchSafe, preStaged.getOrElse(txlog.stage(norm(name), touched)))
+          patchSafe, txlog.stage(norm(name), touched))
       else None
     granular match {
       case Some(action) =>
@@ -2914,83 +2894,67 @@ final class GraftDatabase private (
           engine.modified.foreach { case (n, state0) =>
             check(n, state0)
             val state = decollate(state0)
-            val readTabs = defs.get(n).map(_.fks.map(_.parentTable).toSet)
-              .getOrElse(Set.empty)
             // File-granular persist, like the facade DML: the statement
             // knows which rows it touched (changedRows/deletedRows), so
             // only files HOLDING one of their PKs rewrite; rows with
             // brand-new PKs (INSERT, SELECT INTO an existing table)
             // append. Falls back to the full rewrite when the table has
             // no declared PK, isn't materialized yet, or mapping fails.
-            val touchedKeys = (engine.changedRows.get(n).toSeq ++
-              engine.deletedRows.get(n).toSeq).map(decollate)
-            val granularDone = defs.get(n).exists { tdef =>
-              val pk = tdef.pk
-              touchedKeys.nonEmpty && tableExists(n) &&
-                state.columns.contains(pk) &&
-                touchedKeys.forall(_.columns.contains(pk)) && {
-                  val keys = touchedKeys.map(_.select(col(pk)))
-                    .reduce(_ unionByName _).distinct()
-                  if (keys.isEmpty)
-                    // the statement matched no row (0-hit UPDATE/
-                    // DELETE): state is unchanged — persist nothing
-                    true
-                  else {
-                    // hit files resolve at the ENGINE's snapshot — the
-                    // data the statement actually read. If an
-                    // interleaved commit replaced one of them, the
-                    // mapping against the head binding inside
-                    // fileGranularPut fails → absolute fallback → the
-                    // commit's conflict check fires. Resolving at head
-                    // instead would let a commuting patch silently
-                    // revert a concurrent writer's rows.
-                    val marked = txlog
-                      .readMarkedAt(engineBase, n, "_graft_file")
-                      .getOrElse(txlog.readMarked(n, "_graft_file").get)
-                    val atBase = marked.drop("_graft_file")
-                    val hitRaw = marked.join(keys, Seq(pk), "left_semi")
-                      .select("_graft_file").distinct()
-                      .collect().map(_.getString(0)).filter(_.nonEmpty)
-                    val hitPks = marked
-                      .filter(col("_graft_file").isin(hitRaw: _*))
-                      .select(col(pk))
-                    val newPks = keys.join(marked.select(col(pk)),
-                      Seq(pk), "left_anti")
-                    val touched = state.join(
-                      hitPks.unionByName(newPks).distinct(),
-                      Seq(pk), "left_semi")
-                    enforceLimitSize()
-                    // commuting patch only for statements that add NO
-                    // PKs (UPDATE/DELETE/insert-free MERGE) on
-                    // constraint-free tables — two concurrent patches
-                    // could otherwise both land the same new PK
-                    val stmtPatchSafe = tdef.uniqueCols.isEmpty &&
-                      !engine.lastHadInserts &&
-                      (engine.lastSetTargets.nonEmpty ||
-                        engine.deletedRows.contains(n))
-                    fileGranularPut(n, hitRaw, touched,
-                      atBase.schema, patchSafe = stmtPatchSafe) match {
-                      case Some(action) =>
-                        // a widening statement (MERGE INSERT * with a
-                        // wider source, SET of a new path) extends or
-                        // creates the pin IN the same commit
-                        txlog.commit(action +: widenSyncActions(n,
-                          touched.schema, atBase.schema),
-                          readVersion = engineBase,
-                          readTables = readTabs)
-                        invalidateSqlEngine()
-                        true
-                      case None => false
-                    }
-                  }
+            val changed = engine.changedRows.get(n).map(decollate)
+            val touchedKeys =
+              changed.toSeq ++ engine.deletedRows.get(n).map(decollate)
+            defs.get(n).filter(tdef => touchedKeys.nonEmpty &&
+              tableExists(n) && state.columns.contains(tdef.pk) &&
+              touchedKeys.forall(_.columns.contains(tdef.pk))) match {
+              case Some(tdef) =>
+                val keys = touchedKeys.map(_.select(col(tdef.pk)))
+                  .reduce(_ unionByName _).distinct()
+                // a statement that matched no row (0-hit UPDATE/DELETE)
+                // left the state unchanged — persist nothing
+                if (!keys.isEmpty) {
+                  // hit files resolve at the ENGINE's snapshot — the
+                  // data the statement actually read. If an interleaved
+                  // commit replaced one of them, the mapping against
+                  // the head binding inside fileGranularAction fails →
+                  // absolute fallback → the commit's conflict check
+                  // fires. Resolving at head instead would let a
+                  // commuting patch silently revert a concurrent
+                  // writer's rows.
+                  val marked = txlog
+                    .readMarkedAt(engineBase, n, "_graft_file")
+                    .getOrElse(txlog.readMarked(n, "_graft_file").get)
+                  // commuting patch only for statements that add NO
+                  // PKs (UPDATE/DELETE/insert-free MERGE) on
+                  // constraint-free tables — two concurrent patches
+                  // could otherwise both land the same new PK
+                  val stmtPatchSafe = tdef.uniqueCols.isEmpty &&
+                    !engine.lastHadInserts &&
+                    (engine.lastSetTargets.nonEmpty ||
+                      engine.deletedRows.contains(n))
+                  // the hit files' rows the statement did not touch
+                  // (null-safe: a null PK is a key too) keep; its
+                  // changed rows land beside them
+                  val gone = keys.select(col(tdef.pk).as("_graft_key"))
+                  keyedRewrite(n, tdef, engineBase,
+                    txlog.snapshotAt(engineBase), marked, keys, None,
+                    marked.drop("_graft_file").schema,
+                    emptyHitsAppend = true, patchSafe = stmtPatchSafe,
+                    extra = Nil) { scan =>
+                    changed.foldLeft(scan.join(gone,
+                      scan(tdef.pk) <=> gone("_graft_key"), "left_anti"))(
+                      _.unionByName(_, allowMissingColumns = true))
+                  }(state)
                 }
+              case None =>
+                // conflict-checked against the version the engine's
+                // views were LOADED at (the data this statement actually
+                // read), with FK parents in the read set — a concurrent
+                // writer since then must conflict, not be silently
+                // overwritten
+                writeReplace(n, state, base = engineBase, readTables =
+                  defs.get(n).fold(Set.empty[String])(
+                    _.fks.map(_.parentTable).toSet))
             }
-            // conflict-checked against the version the engine's views
-            // were LOADED at (the data this statement actually read),
-            // with FK parents in the read set — a concurrent writer
-            // since then must conflict, not be silently overwritten
-            if (!granularDone)
-              writeReplace(n, state, base = engineBase, readTables = readTabs)
           }
       }
       out

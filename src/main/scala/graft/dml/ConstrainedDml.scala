@@ -53,19 +53,17 @@ object ConstrainedDml {
     // the build (right) side, so this direction lets the planner (AQE
     // re-plans from runtime sizes) broadcast the bounded batch keys and
     // probe the table with a map-side scan — no shuffle, no broadcast of
-    // table-scale data. The old direction (batch LEFT, table RIGHT)
-    // could only broadcast the TABLE or sort-merge-shuffle its whole key
-    // column on every insert — the exact anti-pattern the LSH verify
-    // joins were pinned against. Bulk loads whose key set outgrows the
-    // broadcast threshold degrade to the same sort-merge as before.
+    // table-scale data. The planner picks the join from the batch's size
+    // estimate: a bulk load whose key set outgrows the broadcast
+    // threshold sort-merges instead of collecting its keys on the driver.
     // ALL table-side probes (PK, 1:1 FK children, unique columns, the
-    // null-PK presence flag) now ride ONE pass over the table — a chain
-    // of broadcast left-outer marker joins feeding a single aggregate —
-    // instead of one table scan per checked column (the table scan is
-    // the per-statement cost a 100 TB insert feels; the bounded batch
-    // builds are the same either way). Violation.n still counts
-    // conflicting TABLE rows, exactly like the per-column semi-joins.
-    val probe = existing.map(e => new TableProbe(e))
+    // null-PK presence flag) ride ONE pass over the table — a chain of
+    // left-outer marker joins feeding a single aggregate — instead of
+    // one table scan per checked column (the table scan is the
+    // per-statement cost a 100 TB insert feels; the bounded batch builds
+    // are the same either way). Violation.n counts conflicting TABLE
+    // rows, exactly like per-column semi-joins would.
+    val probe = existing.map(b.probe)
 
     table.fks.foreach { fk =>
       val parent = parents.getOrElse(fk.parentTable,
@@ -125,7 +123,6 @@ object ConstrainedDml {
       probe.foreach(p => p.matchCount(
         b.slot("unique_conflict", uc), incoming, uc))
     }
-    probe.foreach(p => b.emitter(p.emit()))
     b.run()
   }
 
@@ -144,6 +141,8 @@ object ConstrainedDml {
       .empty[Int, Map[Int, Long] => Long]
     private val emitters = scala.collection.mutable.ArrayBuffer
       .empty[DataFrame]
+    private val probes = scala.collection.mutable.ArrayBuffer
+      .empty[TableProbe]
     var batchNullSlot: Option[Int] = None
 
     def slot(kind: String, column: String): Int = {
@@ -160,10 +159,15 @@ object ConstrainedDml {
         .select(lit(i).as("i"), col("n"))
     }
     def emitter(df: DataFrame): Unit = emitters += df
+    /** A [[TableProbe]] over `table`, emitted by `run` when asked anything. */
+    def probe(table: DataFrame): TableProbe = {
+      val p = new TableProbe(table); probes += p; p
+    }
 
     def run(): Seq[Violation] = {
-      if (emitters.isEmpty) return Nil
-      val union = emitters.reduce(_.unionByName(_))
+      val all = emitters ++ probes.filter(_.nonEmpty).map(_.emit())
+      if (all.isEmpty) return Nil
+      val union = all.reduce(_.unionByName(_))
       val ns = graft.core.JobLabel(union.sparkSession,
         s"constraint check $tableName") { union.collect() }
         .map(r => r.getInt(0) -> r.getLong(1)).toMap
@@ -177,13 +181,18 @@ object ConstrainedDml {
     }
   }
 
-  /** ONE pass over the existing table answering every table-side
-    * question an insert validation asks: for each requested column,
-    * how many table rows carry a value present in the batch (broadcast
-    * left-outer marker join per column — bounded batch builds, the
-    * table never shuffles and is scanned once), plus null-presence
-    * flags. Count semantics match the former per-column semi-joins:
-    * matched TABLE rows (matches imply non-null on both sides).
+  /** ONE pass over a table answering every table-side question a
+    * validation asks: for each requested column, how many table rows
+    * carry a value present in the batch (a left-outer marker join per
+    * column — broadcast when the planner's size estimate of the batch
+    * keys allows, so bounded batches never shuffle the table, and bulk
+    * batches sort-merge instead of collecting on the driver), plus
+    * null-presence flags. Counts are matched TABLE rows (matches imply
+    * non-null on both sides), like a per-column semi-join. Marker
+    * columns carry the engine-internal `_graft_probe_` prefix, so a
+    * checked column named like a short marker (`_k0`) stays unambiguous.
+    * Self-validation (`validateUpdate` with incoming == result) passes
+    * the whole table as the batch — the reason no broadcast is forced.
     */
   private final class TableProbe(existing: DataFrame) {
     private val reqs = scala.collection.mutable.ArrayBuffer
@@ -195,30 +204,32 @@ object ConstrainedDml {
       reqs += ((slot, batch, column))
     def nullCount(slot: Int, column: String): Unit =
       nulls += ((slot, column))
+    def nonEmpty: Boolean = reqs.nonEmpty || nulls.nonEmpty
 
     def emit(): DataFrame = {
+      def m(kind: Char, j: Int) = s"_graft_probe_$kind$j"
       val cols = (reqs.map(_._3) ++ nulls.map(_._2)).distinct
       var t = existing.select(cols.map(col).toSeq: _*)
       reqs.zipWithIndex.foreach { case ((_, batch, c), j) =>
-        val keys = batch.select(col(c).as(s"_k$j"))
-          .filter(col(s"_k$j").isNotNull).distinct()
-          .withColumn(s"_m$j", lit(1))
-        t = t.join(broadcast(keys), t(c) === col(s"_k$j"), "left_outer")
-          .drop(s"_k$j")
+        val keys = batch.select(col(c).as(m('k', j)))
+          .filter(col(m('k', j)).isNotNull).distinct()
+          .withColumn(m('m', j), lit(1))
+        t = t.join(keys, t(c) === col(m('k', j)), "left_outer")
+          .drop(m('k', j))
       }
       val aggs: Seq[org.apache.spark.sql.Column] =
-        (reqs.zipWithIndex.map { case ((_, _, _), j) =>
-          sum(when(col(s"_m$j") === 1, 1L).otherwise(0L)).as(s"_n$j") } ++
+        (reqs.indices.map(j =>
+          sum(when(col(m('m', j)) === 1, 1L).otherwise(0L)).as(m('n', j))) ++
         nulls.zipWithIndex.map { case ((_, c), j) =>
-          max(when(col(c).isNull, 1L).otherwise(0L)).as(s"_z$j") }).toSeq
+          max(when(col(c).isNull, 1L).otherwise(0L)).as(m('z', j)) }).toSeq
       val a = t.agg(aggs.head, aggs.drop(1): _*)
       val pairs =
         reqs.zipWithIndex.map { case ((slot, _, _), j) =>
           struct(lit(slot).as("i"),
-            coalesce(col(s"_n$j"), lit(0L)).as("n")) } ++
+            coalesce(col(m('n', j)), lit(0L)).as("n")) } ++
         nulls.zipWithIndex.map { case ((slot, _), j) =>
           struct(lit(slot).as("i"),
-            coalesce(col(s"_z$j"), lit(0L)).as("n")) }
+            coalesce(col(m('z', j)), lit(0L)).as("n")) }
       a.select(explode(array(pairs.toSeq: _*)).as("s"))
         .select(col("s.i").as("i"), col("s.n").as("n"))
     }
@@ -227,39 +238,6 @@ object ConstrainedDml {
   /** Distinct values of `c` appearing more than once (nulls excluded). */
   private def duplicatedKeys(df: DataFrame, c: String): DataFrame =
     df.filter(col(c).isNotNull).groupBy(c).count().filter(col("count") > 1)
-
-  /** Existing-table values of `c` also present in the batch (nulls
-    * excluded on both sides — null never conflicts). Table LEFT, batch
-    * RIGHT: see the direction note in validateInsert.
-    */
-  private def crossMatch(existing: DataFrame, incoming: DataFrame,
-      c: String): DataFrame =
-    existing.select(col(c)).filter(col(c).isNotNull)
-      .join(incoming.select(col(c)).filter(col(c).isNotNull),
-        Seq(c), "left_semi")
-
-  /** Evaluate every check set's cardinality in ONE Spark job: each check
-    * reduces to a 1-row (check index, count) aggregate and the union of
-    * all of them is collected once — same counts, same emission order as
-    * counting each separately, but one action instead of N (a facade
-    * write with FK + PK + unique constraints previously paid 3-5 job
-    * round-trips per statement).
-    */
-  private def runChecks(tableName: String,
-      checks: Seq[(String, String, DataFrame)]): Seq[Violation] = {
-    if (checks.isEmpty) return Nil
-    val counted = checks.zipWithIndex.map { case ((_, _, df), i) =>
-      df.agg(count(lit(1)).as("n")).select(lit(i).as("i"), col("n"))
-    }
-    val union = counted.reduce(_.unionByName(_))
-    val ns = graft.core.JobLabel(union.sparkSession,
-      s"constraint check $tableName") { union.collect() }
-      .map(r => r.getInt(0) -> r.getLong(1)).toMap
-    checks.zipWithIndex.collect {
-      case ((kind, column, _), i) if ns.getOrElse(i, 0L) > 0 =>
-        Violation(kind, tableName, column, ns(i))
-    }
-  }
 
   /** Insert with constraint enforcement: throws on any violation (the
     * reference's insert path), else returns the appended state.
@@ -304,32 +282,33 @@ object ConstrainedDml {
       result: DataFrame,
       parents: Map[String, DataFrame],
       pkImmutable: Boolean = false): Seq[Violation] = {
-    val checks = scala.collection.mutable.ArrayBuffer
-      .empty[(String, String, DataFrame)]
-    lazy val unchanged = unchangedOf(table, incoming, result)
+    val b = new CheckBuilder(table.name)
     // Null-PK rows cannot be identified as "self" by the PK anti-join
     // (null never equi-matches), so they are EXCLUDED from `unchanged`
     // and compared separately against the non-null-PK slice of the
     // batch — otherwise a legitimately-inserted null-PK row would
     // self-collide on its own unique value in the self-validation paths
     // (RESTORE, rebuild, replica bootstrap pass incoming == result).
-    lazy val nullPkRows = result.filter(col(table.pk).isNull)
+    // Each side is ONE fused probe pass, however many columns it checks
+    // (built only when a unique or 1:1 column asks).
+    lazy val unchanged = b.probe(unchangedOf(table, incoming, result))
+    lazy val nullPkRows = b.probe(result.filter(col(table.pk).isNull))
     lazy val nonNullPkIncoming = incoming.filter(col(table.pk).isNotNull)
     def crossChecks(kind: String, c: String): Unit = {
-      checks += ((kind, c, crossMatch(unchanged, incoming, c)))
-      checks += ((kind, c, crossMatch(nullPkRows, nonNullPkIncoming, c)))
+      unchanged.matchCount(b.slot(kind, c), incoming, c)
+      nullPkRows.matchCount(b.slot(kind, c), nonNullPkIncoming, c)
     }
 
     table.fks.foreach { fk =>
       val parent = parents.getOrElse(fk.parentTable,
         throw new IllegalArgumentException(s"missing parent ${fk.parentTable}"))
-      checks += (("fk_missing", fk.childCol,
+      b.single("fk_missing", fk.childCol,
         incoming.filter(col(fk.childCol).isNotNull)
           .join(broadcast(parent.select(col(fk.parentCol))),
-            incoming(fk.childCol) === parent(fk.parentCol), "left_anti")))
+            incoming(fk.childCol) === parent(fk.parentCol), "left_anti"))
       if (fk.oneToOne) {
-        checks += (("one_to_one_conflict", fk.childCol,
-          duplicatedKeys(incoming.select(col(fk.childCol)), fk.childCol)))
+        b.single("one_to_one_conflict", fk.childCol,
+          duplicatedKeys(incoming.select(col(fk.childCol)), fk.childCol))
         crossChecks("one_to_one_conflict", fk.childCol)
       }
     }
@@ -338,8 +317,8 @@ object ConstrainedDml {
     // SET targets) — the duplicate scan is then a wasted Spark job per
     // statement, the dominant fixed cost of small DMLs
     if (!pkImmutable) {
-      checks += (("pk_conflict", table.pk,
-        incoming.groupBy(table.pk).count().filter(col("count") > 1)))
+      b.single("pk_conflict", table.pk,
+        incoming.groupBy(table.pk).count().filter(col("count") > 1))
       // the result-shape precondition, ENFORCED (see the scaladoc): a
       // PK-mutating transform landing on a PK that also survives on an
       // untouched row leaves that row outside `unchanged` (the anti-join
@@ -347,28 +326,28 @@ object ConstrainedDml {
       // rows per incoming PK and reject multiplicity > 1. Scalable
       // direction: result probes map-side against the broadcast bounded
       // batch keys; the groupBy aggregates only the semi-matched slice.
-      checks += (("pk_conflict", table.pk, {
+      b.single("pk_conflict", table.pk, {
         val keys = incoming.select(col(table.pk))
           .filter(col(table.pk).isNotNull).distinct()
         result.filter(col(table.pk).isNotNull)
           .join(broadcast(keys), Seq(table.pk), "left_semi")
           .groupBy(table.pk).count().filter(col("count") > 1)
-      }))
+      })
       // the one-null-PK-row rule (see validateInsert) on the POST-update
       // state: catches a transform nulling a pk while a null-PK row
       // exists, and makes whole-set self-validation (incoming == result:
       // restore, validateConstraints) reject exactly the states write
       // enforcement rejects. limit(2) bounds the scan.
-      checks += (("pk_conflict", table.pk,
+      b.single("pk_conflict", table.pk,
         result.filter(col(table.pk).isNull).limit(2)
-          .groupBy().count().filter(col("count") > 1)))
+          .groupBy().count().filter(col("count") > 1))
     }
     table.uniqueCols.foreach { uc =>
-      checks += (("unique_conflict", uc,
-        duplicatedKeys(incoming.select(col(uc)), uc)))
+      b.single("unique_conflict", uc,
+        duplicatedKeys(incoming.select(col(uc)), uc))
       crossChecks("unique_conflict", uc)
     }
-    runChecks(table.name, checks.toSeq)
+    b.run()
   }
 
   /** Post-update rows NOT touched by the statement: the full result

@@ -1,9 +1,20 @@
 package graft
 
+import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.catalyst.plans.LeftOuter
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
+import graft.catalog.GraftDatabase
 import graft.dml.ConstrainedDml
 import graft.dml.ConstrainedDml._
+import graft.plans.PlanGates
 
 /** Replays the reference's constraint scenarios (FIXTURES.md §1:
   * Customer/Order/Address with Cascading, Restrictive and 1:1 FKs).
@@ -205,5 +216,83 @@ class ConstrainedDmlSpec extends AnyFunSuite {
     assert(ConstrainedDml.validateUpdate(
       spark, customerDef, clean, goodClean, Map.empty).isEmpty)
     assert(goodResult.count() == 2) // shape sanity for the bad-case twin
+  }
+
+  /** Executed plans of every query `f` runs, as the listener saw them. */
+  private def executedPlans(f: => Any): Seq[SparkPlan] = {
+    val seen = new ConcurrentLinkedQueue[SparkPlan]()
+    val l = new QueryExecutionListener {
+      def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit =
+        seen.add(qe.executedPlan)
+      def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    org.apache.spark.graft.ListenerDrain(spark.sparkContext)
+    spark.listenerManager.register(l)
+    try { f; org.apache.spark.graft.ListenerDrain(spark.sparkContext) }
+    finally spark.listenerManager.unregister(l)
+    seen.asScala.toSeq
+  }
+
+  private def withConf[A](k: String, v: String)(f: => A): A = {
+    val saved = spark.conf.getOption(k)
+    spark.conf.set(k, v)
+    try f
+    finally saved.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+  }
+
+  test("probe marker columns never collide with a checked column: PK " +
+    "`_k0` inserts twice, PK `_m0` reports its duplicate as pk_conflict") {
+    val k0 = TableDef("k0", "_k0")
+    assert(validateInsert(spark, k0, Seq((2, "b")).toDF("_k0", "v"),
+      Some(Seq((1, "a")).toDF("_k0", "v")), Map()).isEmpty)
+    val db = GraftDatabase(spark, "markers",
+      Files.createTempDirectory("graft-markers").toString)
+      .defineTable(k0)
+    db.insert("k0", Seq((1, "a")).toDF("_k0", "v"))
+    db.insert("k0", Seq((2, "b")).toDF("_k0", "v"))
+    assert(db.count("k0") == 2)
+
+    val m0 = TableDef("m0", "_m0")
+    val v = validateInsert(spark, m0, Seq((1, "dup")).toDF("_m0", "v"),
+      Some(Seq((1, "a")).toDF("_m0", "v")), Map())
+    assert(v.map(x => (x.kind, x.column)) == Seq(("pk_conflict", "_m0")), v)
+  }
+
+  test("the insert probe's join is the planner's choice: a small batch " +
+    "broadcasts, and below the broadcast threshold it does not") {
+    val existing = spark.range(2000).selectExpr("id AS probe_pk", "id AS w")
+    val batch = Seq((5000L, 1L), (5001L, 2L)).toDF("probe_pk", "w")
+    def probeJoins: Seq[BaseJoinExec] = executedPlans(validateInsert(
+        spark, TableDef("p", "probe_pk"), batch, Some(existing), Map()))
+      .flatMap(PlanGates.allNodes)
+      .collect { case j: BaseJoinExec if j.joinType == LeftOuter => j }
+    val small = probeJoins
+    assert(small.nonEmpty && small.forall(_.isInstanceOf[BroadcastHashJoinExec]),
+      small.map(_.nodeName))
+    val bulk = withConf("spark.sql.autoBroadcastJoinThreshold", "-1")(probeJoins)
+    assert(bulk.nonEmpty && !bulk.exists(_.isInstanceOf[BroadcastHashJoinExec]),
+      bulk.map(_.nodeName))
+  }
+
+  test("validateUpdate scans the existing table a fixed number of times, " +
+    "however many unique columns it checks") {
+    val dir = Files.createTempDirectory("graft-uscan").resolve("t").toString
+    Seq((1, "a", "x", "p"), (2, "b", "y", "q")).toDF("id", "u1", "u2", "u3")
+      .write.parquet(dir)
+    val existing = spark.read.parquet(dir)
+    val incoming = Seq((2, "c", "z", "r")).toDF("id", "u1", "u2", "u3")
+    val result = upsert(existing, incoming, "id")
+    def tableScans(uniques: Seq[String]): Int = {
+      val v = executedPlans(validateUpdate(spark,
+        TableDef("t", "id", uniqueCols = uniques), incoming, result, Map()))
+      v.flatMap(PlanGates.allNodes).count {
+        case s: FileSourceScanExec =>
+          s.relation.location.rootPaths.exists(_.toString.endsWith(dir))
+        case _ => false
+      }
+    }
+    val two = tableScans(Seq("u1", "u2"))
+    val three = tableScans(Seq("u1", "u2", "u3"))
+    assert(two > 0 && three == two, s"two uniques: $two scans, three: $three")
   }
 }

@@ -1,7 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.core.LocalSession
 
 /** Dev-only scale-up generator: replicate an existing testdata directory
   * `factor`× with consistent key remapping, for the SCALE.md run (the
@@ -37,14 +39,7 @@ object GenScale {
       if (args.length > 3) Some(args(3).split(",").map(_.trim).toSet)
       else None
     def wanted(name: String): Boolean = subset.forall(_.contains(name))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(LocalSession.Default)
 
     def load(name: String): DataFrame = graft.core.Tables.load(spark, src, name)
 

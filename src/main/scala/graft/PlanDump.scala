@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import graft.core.LocalSession
 
 /** Dumps the executed physical plan of every catalog query to PLANS.md —
   * reviewable evidence that the plans carry the 100 TB shapes (pushdown,
@@ -13,18 +13,9 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = if (args.length > 1) args(1) else "/root/repo/PLANS.md"
-    // mirror Bench's planning-relevant confs (AQE + 64MB broadcast
-    // threshold): without them the dumped plans differ from the ones the
-    // benchmarked queries actually run
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L << 20).toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // Bench's posture: without its broadcast threshold the dumped plans
+    // differ from the ones the benchmarked queries actually run
+    val spark = LocalSession(LocalSession.Timed)
 
     // stamp the generation commit so staleness is detectable (the file
     // is large evidence — a reader must know which tree produced it)

@@ -3,7 +3,8 @@ package graft
 import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
+
+import graft.core.LocalSession
 
 /** Measurement harness (optimization guide §1): run one or more catalog
   * queries under a SparkListener and attribute wall time to Spark jobs
@@ -25,18 +26,7 @@ object ProfileQuery {
     val sfDir = args(0)
     val names = args(1).split(",").toSeq
     val repeat = if (args.length > 2) args(2).toInt else 1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L << 20).toString)
-      // same local-FS posture as Bench (no CRC shadow files)
-      .config("spark.hadoop.fs.file.impl",
-        "org.apache.hadoop.fs.RawLocalFileSystem")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(LocalSession.Timed)
     graft.core.Tables.load(spark, sfDir, "region").count()
 
     // per-action Catalyst phase times (parsing/analysis/optimization/

@@ -2,10 +2,10 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
+import graft.core.LocalSession
 import graft.streaming.{ContinuousQueryService, IngestPipeline}
 
 /** Local smoke: mirrors the driver's t1 check (entry() rows > 0) and
@@ -13,13 +13,7 @@ import graft.streaming.{ContinuousQueryService, IngestPipeline}
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(LocalSession.Default)
 
     // 1. flagship entry
     val df = SparkEntry.entry(spark)

@@ -1,6 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import graft.core.LocalSession
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -9,17 +9,7 @@ object Verify {
     // optional third arg: comma-separated query names (dev-only fast path)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // same local-FS posture as Bench (no CRC shadow files)
-      .config("spark.hadoop.fs.file.impl",
-        "org.apache.hadoop.fs.RawLocalFileSystem")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(LocalSession.Default)
     new java.io.File(outDir).mkdirs()
     // prefix-match like Bench's SPARK_GRAFT_ONLY (an exact-only filter
     // silently verified ZERO queries on a bare "q23")

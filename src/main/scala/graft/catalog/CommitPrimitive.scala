@@ -41,9 +41,9 @@ trait CommitPrimitive {
   // version-file and checkpoint reads (a GET), log-directory listings
   // (a LIST), and size probes (a HEAD). On a local filesystem these
   // default to plain java.nio calls; on an object store each one is a
-  // wide-area round trip — LatencyCommitPrimitive charges them so the
-  // catch-up walk's per-trigger read floor is measured, not assumed
-  // (LogWalkBench), and HttpCommitPrimitive serves them as real HTTP
+  // wide-area round trip (SCALE.md "Round 13: the read-charged
+  // wide-area model" measures the catch-up walk's per-trigger read
+  // floor), and HttpCommitPrimitive serves them as real HTTP
   // verbs. Defaults keep every existing putIfAbsent-only implementation
   // (specs, user primitives) source-compatible.
 

@@ -697,8 +697,8 @@ final class GraftDatabase private (
       val hitQ = marked.join(touchedKeys, Seq(tdef.pk), "left_semi")
         .select(col("_graft_file").as("_k")).groupBy(col("_k"))
         .agg(cnt.as("_n"))
-      val dupQ = ins.groupBy(col(tdef.pk)).count()
-        .filter(col("count") > 1).agg(cnt.as("_n"))
+      val dupQ = ConstrainedDml.repeated(ins.groupBy(col(tdef.pk)))
+        .agg(cnt.as("_n"))
         .select(lit(dupSentinel).as("_k"), col("_n"))
       val collected = graft.core.JobLabel(spark, s"cdc hit probe $name") {
         hitQ.unionByName(dupQ).collect()
@@ -1757,9 +1757,8 @@ final class GraftDatabase private (
       // a defined-but-unmaterialized table trivially has no duplicates —
       // reading it would throw on the absent path
       val dupes = if (!tableExists(name)) 0L
-        else table(name).filter(col(column).isNotNull)
-          .groupBy(column).count()
-          .filter(col("count") > 1).count()
+        else ConstrainedDml.repeated(
+          table(name).filter(col(column).isNotNull).groupBy(column)).count()
       if (dupes > 0) throw new IllegalStateException(
         s"cannot build unique index: $dupes duplicate values in $name.$column")
       val tdef = tableDef(name)
@@ -2910,8 +2909,11 @@ final class GraftDatabase private (
                 val keys = touchedKeys.map(_.select(col(tdef.pk)))
                   .reduce(_ unionByName _).distinct()
                 // a statement that matched no row (0-hit UPDATE/DELETE)
-                // left the state unchanged — persist nothing
-                if (!keys.isEmpty) {
+                // left the state unchanged — persist nothing, and drop
+                // the engine: it still lists the table as modified, so
+                // the next statement would rewrite it in full
+                if (keys.isEmpty) invalidateSqlEngine()
+                else {
                   // hit files resolve at the ENGINE's snapshot — the
                   // data the statement actually read. If an interleaved
                   // commit replaced one of them, the mapping against
@@ -3075,7 +3077,8 @@ object GraftDatabase {
   // options directly. Register it under a key and pass
   // `.option("commitPrimitiveRef", key)` — the stream's internal
   // database handle then publishes AND reads its log through it
-  // (LogWalkBench's read-RTT mode; a real cloud consumer's store client).
+  // (a real cloud consumer's store client; the read-charged runs in
+  // SCALE.md "Round 13: the read-charged wide-area model").
   private val primitiveRefs =
     new java.util.concurrent.ConcurrentHashMap[String, CommitPrimitive]()
 

@@ -21,9 +21,10 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
   * the compare-and-set server-side and lands winners as whole files,
   * so readers keep their ordinary listed-object view — the same
   * read-after-write visibility the real stores give committed PUTs).
-  * [[LatencyCommitPrimitive]] injects the wide-area round-trip so
-  * CommitBench can measure commit throughput at realistic put
-  * latencies. Everything above the seam — optimistic conflicts,
+  * [[LatencyCommitPrimitive]] injects the wide-area round-trip into
+  * conditional puts (SCALE.md "Round 11: multi-writer commit throughput
+  * under contention" records throughput at realistic put latencies).
+  * Everything above the seam — optimistic conflicts,
   * snapshot isolation, checkpoints, vacuum — is untouched:
   * CommitRaceProcessSpec drives the same cross-process races through
   * this primitive as through the POSIX one.
@@ -288,28 +289,17 @@ final class HttpCasServer(root: Path) extends AutoCloseable {
 
 /** Wide-area round-trip injector: every conditional put pays `rttMs`
   * before reaching the store — losers included, exactly like a remote
-  * CAS whose rejection still costs the round trip. `readRttMs` charges
-  * the READ side the same way (version-file GETs, listings, size
-  * probes — the log's catch-up walk); 0 keeps reads free, matching the
-  * historical CommitBench "put_latency_ms" semantics, and LogWalkBench
-  * sets it to measure the read-dominated per-trigger floor.
+  * CAS whose rejection still costs the round trip. Reads pass straight
+  * through to `inner`.
   */
-final class LatencyCommitPrimitive(inner: CommitPrimitive, rttMs: Long,
-    readRttMs: Long = 0L) extends CommitPrimitive {
+final class LatencyCommitPrimitive(inner: CommitPrimitive, rttMs: Long)
+    extends CommitPrimitive {
   override def putIfAbsent(target: Path, content: Array[Byte]): Unit = {
     if (rttMs > 0) Thread.sleep(rttMs)
     inner.putIfAbsent(target, content)
   }
-  override def readAll(target: Path): Option[Array[Byte]] = {
-    if (readRttMs > 0) Thread.sleep(readRttMs)
+  override def readAll(target: Path): Option[Array[Byte]] =
     inner.readAll(target)
-  }
-  override def listNames(dir: Path): Seq[String] = {
-    if (readRttMs > 0) Thread.sleep(readRttMs)
-    inner.listNames(dir)
-  }
-  override def sizeOf(target: Path): Option[Long] = {
-    if (readRttMs > 0) Thread.sleep(readRttMs)
-    inner.sizeOf(target)
-  }
+  override def listNames(dir: Path): Seq[String] = inner.listNames(dir)
+  override def sizeOf(target: Path): Option[Long] = inner.sizeOf(target)
 }

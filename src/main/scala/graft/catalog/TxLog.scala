@@ -248,25 +248,10 @@ final class TxLog(spark: SparkSession, root: String,
   // in a bounded LRU. Callers KEEP their own existence / settledness
   // checks — vacuum truncation and in-flight slots fail exactly as
   // before; only the redundant re-read-and-parse goes. Size 0 disables
-  // (the LogWalkBench A/B knob).
+  // (the A/B measured in SCALE.md "One log read per version per
+  // catch-up").
   private val actionCacheSize: Int =
     spark.conf.get("spark.graft.txlog.actionCacheSize", "4096").trim.toInt
-
-  /** Commits between checkpoints — the replay-length / checkpoint-write
-    * trade. A snapshot resolve replays at most this many action files
-    * past the newest checkpoint (each one a charged GET on an object
-    * store, though the action cache + prefetch amortize them), while
-    * every Nth commit pays one extra checkpoint PUT whose size is the
-    * whole table-binding state. Per-log via
-    * `spark.graft.txlog.checkpointEvery`; default
-    * [[TxLog.checkpointEvery]]. LogWalkBench sweeps this against read
-    * RTT — see SCALE.md for the measured trade.
-    */
-  private val checkpointEveryV: Long = spark.conf
-    .get("spark.graft.txlog.checkpointEvery",
-      TxLog.checkpointEvery.toString).trim.toLong
-  require(checkpointEveryV > 0,
-    s"spark.graft.txlog.checkpointEvery must be positive, got $checkpointEveryV")
 
   private val actionCache = java.util.Collections.synchronizedMap(
     new java.util.LinkedHashMap[Long, Seq[Action]](64, 0.75f, true) {
@@ -1060,7 +1045,7 @@ final class TxLog(spark: SparkSession, root: String,
   }
 
   private def maybeCheckpoint(v: Long): Unit =
-    if (v % checkpointEveryV == 0) {
+    if (v % TxLog.checkpointEvery == 0) {
       val snap = snapshotAt(v)
       // full snapshot = table bindings + the txn idempotence ledger
       // (replay after truncation must still recognize applied batches)
@@ -1344,14 +1329,16 @@ object TxLog {
   /** Process-wide count of RAW version-file reads (cache misses) — the
     * bench/spec probe behind the action cache: a capped catch-up's
     * per-trigger log I/O is graded by how little this moves
-    * (LogWalkBench, TxLogSpec). Not a metric surface; monotonic,
+    * (TxLogSpec; SCALE.md "Round 13: the read-charged wide-area
+    * model"). Not a metric surface; monotonic,
     * never reset.
     */
   val versionFileReads = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** Log-directory listings (LIST calls on an object store) — with
     * [[versionFileReads]], [[ckptReads]] and [[sizeProbes]], the full
-    * read-side I/O ledger LogWalkBench grades per trigger. Monotonic,
+    * read-side I/O ledger graded per trigger (SCALE.md "Round 13: the
+    * read-charged wide-area model"). Monotonic,
     * never reset.
     */
   val logListings = new java.util.concurrent.atomic.AtomicLong(0L)
@@ -1422,10 +1409,13 @@ object TxLog {
   private val VersionRe = "v(\\d{8,})\\.txt".r
   private val CkptRe = "v(\\d{8,})\\.ckpt\\.txt".r
 
-  /** DEFAULT commits-between-checkpoints (per-log override:
-    * `spark.graft.txlog.checkpointEvery`); the upper bound on action
-    * files a snapshot resolution replays past a checkpoint. See the
-    * instance doc for the read-RTT trade LogWalkBench measures.
+  /** Commits between checkpoints — the replay-length / checkpoint-write
+    * trade. A snapshot resolve replays at most this many action files
+    * past the newest checkpoint (each one a charged GET on an object
+    * store, though the action cache + prefetch amortize them), while
+    * every Nth commit pays one extra checkpoint PUT whose size is the
+    * whole table-binding state. SCALE.md "Round 13: the read-charged
+    * wide-area model" records the measured trade.
     */
   val checkpointEvery: Long = 10L
 

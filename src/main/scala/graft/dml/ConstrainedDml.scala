@@ -1,6 +1,6 @@
 package graft.dml
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, RelationalGroupedDataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Constraint-enforcing DML (SURVEY §1.3 / `Iot.Database/Table/
@@ -100,9 +100,9 @@ object ConstrainedDml {
     // One batch pass emits the dupe count AND the batch-side null flag.
     locally {
       val dupeSlot = b.slot("pk_conflict", table.pk)
-      val g = incoming.groupBy(table.pk).count()
+      val g = incoming.groupBy(table.pk).agg(count(lit(1)).as(GroupCount))
       val aggs = Seq(
-        sum(when(col("count") > 1, 1L).otherwise(0L)).as("_dupes")) ++
+        sum(when(col(GroupCount) > 1, 1L).otherwise(0L)).as("_dupes")) ++
         b.batchNullSlot.map(_ =>
           max(when(col(table.pk).isNull, 1L).otherwise(0L)).as("_bnull"))
       val a = g.agg(aggs.head, aggs.drop(1): _*)
@@ -237,7 +237,17 @@ object ConstrainedDml {
 
   /** Distinct values of `c` appearing more than once (nulls excluded). */
   private def duplicatedKeys(df: DataFrame, c: String): DataFrame =
-    df.filter(col(c).isNotNull).groupBy(c).count().filter(col("count") > 1)
+    repeated(df.filter(col(c).isNotNull).groupBy(c))
+
+  /** Group row counts are named this, not Spark's `count`: a user column
+    * may be called `count`, and grouping by it would make the name
+    * ambiguous.
+    */
+  private val GroupCount = "_graft_n"
+
+  /** The groups of `g` holding more than one row. */
+  private[graft] def repeated(g: RelationalGroupedDataset): DataFrame =
+    g.agg(count(lit(1)).as(GroupCount)).filter(col(GroupCount) > 1)
 
   /** Insert with constraint enforcement: throws on any violation (the
     * reference's insert path), else returns the appended state.
@@ -317,8 +327,7 @@ object ConstrainedDml {
     // SET targets) — the duplicate scan is then a wasted Spark job per
     // statement, the dominant fixed cost of small DMLs
     if (!pkImmutable) {
-      b.single("pk_conflict", table.pk,
-        incoming.groupBy(table.pk).count().filter(col("count") > 1))
+      b.single("pk_conflict", table.pk, repeated(incoming.groupBy(table.pk)))
       // the result-shape precondition, ENFORCED (see the scaladoc): a
       // PK-mutating transform landing on a PK that also survives on an
       // untouched row leaves that row outside `unchanged` (the anti-join
@@ -329,9 +338,9 @@ object ConstrainedDml {
       b.single("pk_conflict", table.pk, {
         val keys = incoming.select(col(table.pk))
           .filter(col(table.pk).isNotNull).distinct()
-        result.filter(col(table.pk).isNotNull)
+        repeated(result.filter(col(table.pk).isNotNull)
           .join(broadcast(keys), Seq(table.pk), "left_semi")
-          .groupBy(table.pk).count().filter(col("count") > 1)
+          .groupBy(table.pk))
       })
       // the one-null-PK-row rule (see validateInsert) on the POST-update
       // state: catches a transform nulling a pk while a null-PK row
@@ -339,8 +348,7 @@ object ConstrainedDml {
       // restore, validateConstraints) reject exactly the states write
       // enforcement rejects. limit(2) bounds the scan.
       b.single("pk_conflict", table.pk,
-        result.filter(col(table.pk).isNull).limit(2)
-          .groupBy().count().filter(col("count") > 1))
+        repeated(result.filter(col(table.pk).isNull).limit(2).groupBy()))
     }
     table.uniqueCols.foreach { uc =>
       b.single("unique_conflict", uc,

@@ -9,7 +9,7 @@ import graft.functions.expressions.{CosineSimilarity, DotProduct, L2Distance, Ls
 
 /** Registry for graft's native Catalyst expressions. `register` makes them
   * callable from SQL and from `call_function` (idempotent per session;
-  * invoked by Tables.load and the mains, or via `GraftExtensions` at
+  * invoked by Tables.load and LocalSession, or via `GraftExtensions` at
   * session build time).
   */
 object GraftFunctions {
@@ -86,8 +86,9 @@ object GraftFunctions {
       org.apache.spark.sql.functions.lit(w))
 }
 
-/** `SparkSession.builder().withExtensions(new GraftExtensions)` — registers
-  * the native functions at session build time (SURVEY §4.2).
+/** A session extension (`spark.sql.extensions`, or `withExtensions` when
+  * a session is built) that registers the native functions at session
+  * build time (SURVEY §4.2).
   */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit =

@@ -51,6 +51,27 @@ class GraftDatabaseSpec extends AnyFunSuite {
     assert(db.validateConstraints("nope").isEmpty)
   }
 
+  test("a PK or unique column named count takes inserts, updates and a " +
+      "unique index, and its duplicates are still caught") {
+    Seq(TableDef("c", "count") -> "pk_conflict",
+      TableDef("c", "id", uniqueCols = Seq("count")) -> "unique_conflict")
+      .foreach { case (tdef, conflict) =>
+        val db = GraftDatabase(spark, "countcol",
+          Files.createTempDirectory("graft-countcol").toString)
+          .defineTable(tdef)
+        db.insert("c", Seq((1, 10), (2, 20)).toDF("id", "count"))
+        val e = intercept[IllegalStateException](
+          db.insert("c", Seq((3, 10)).toDF("id", "count")))
+        assert(e.getMessage.contains(conflict), e.getMessage)
+        // same key, new non-key value: id when the PK is count, count
+        // when the PK is id
+        val changed = if (tdef.pk == "count") (9, 10) else (1, 11)
+        assert(db.update("c", Seq(changed).toDF("id", "count")) == 1L)
+        db.ensureIndex("c", "count", unique = true)
+        assert(db.table("c").count() == 2)
+      }
+  }
+
   test("a legitimately-inserted null-PK row does not self-collide in " +
       "self-validation update paths (unique value counted once)") {
     val base = Files.createTempDirectory("graft-nullpk").toString

@@ -72,4 +72,14 @@ class KeyedRewriteSpec extends AnyFunSuite {
     db.sql("DELETE t WHERE $.v = 'z'")
     assert(rows == Seq(Row(1, "a"), Row(2, "b")))
   }
+
+  test("a LiteSql statement that matches no row commits nothing, and " +
+    "neither does the statement after it") {
+    val db = freshDb("zerohit")
+    val v = db.logVersion
+    db.sql("UPDATE t SET $.v = 'z' WHERE $.id = 99")
+    assert(db.logVersion == v)
+    db.sql("SELECT $ FROM t").collect()
+    assert(db.logVersion == v)
+  }
 }

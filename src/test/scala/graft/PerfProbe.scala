@@ -1,9 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{LocalSession, Tables}
 import graft.operators.Dedup
 
 /** Dev-only perf probe (test scope, never shipped): times variants of a
@@ -13,15 +13,7 @@ import graft.operators.Dedup
 object PerfProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L << 20).toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(LocalSession.Timed)
 
     def q84(cap: Int): DataFrame = {
       val docs = Tables.load(spark, dir, "documents")

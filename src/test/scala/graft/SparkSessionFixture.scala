@@ -2,19 +2,10 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.core.LocalSession
+
 /** One shared local session for all suites (JVM-wide, lazily built). */
 object SparkSessionFixture {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(s)
-    s
-  }
+  lazy val spark: SparkSession = LocalSession(LocalSession.Default)
   val Sf0001 = "/root/testdata/sf0.001"
 }

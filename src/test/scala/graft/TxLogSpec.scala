@@ -380,10 +380,16 @@ class TxLogSpec extends AnyFunSuite {
   test("LIMIT_SIZE accounts LIVE bytes, so version churn awaiting vacuum " +
       "cannot wedge the store read-only") {
     val db = freshDb()
+    // eight files per version whatever the session's core count (the
+    // raw-vs-live margin below depends on per-file overhead): eight
+    // insert partitions, and a rewrite's scan keeps one small file per
+    // split only when asked for at least eight splits
     db.insert("customer", (1 to 500).map(i => (i, s"n$i", i))
-      .toDF("id", "name", "age"))
+      .toDF("id", "name", "age").repartition(8))
+    spark.conf.set("spark.sql.files.minPartitionNum", "8")
     // churn: every update retires a full prior version (no vacuum ran)
-    (1 to 6).foreach(k => db.setAll("customer", "age", k))
+    try (1 to 6).foreach(k => db.setAll("customer", "age", k))
+    finally spark.conf.unset("spark.sql.files.minPartitionNum")
     val liveBytes = db.liveFiles("customer")
       .map(f => Files.size(Paths.get(f))).sum
     val rawBytes = graft.catalog.Pragmas.storeSize(db.root)

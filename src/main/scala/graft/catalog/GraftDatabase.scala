@@ -622,15 +622,7 @@ final class GraftDatabase private (
     val snap = txlog.snapshot()
     val files = snap.tables.getOrElse(n, throw new IllegalArgumentException(
       s"table '$n' does not exist (no committed data)"))
-    // stats are harvested under PHYSICAL names; translate a renamed
-    // column's probe (identity when no mapping exists)
-    val probeCol = snap.schemas.get(n)
-      .map(js => org.apache.spark.sql.types.DataType.fromJson(js)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
-      .flatMap(pin => TxLog.logicalFields(pin)
-        .find(_.name.equalsIgnoreCase(column)).map(TxLog.physicalName))
-      .getOrElse(column)
-    val probe = FileStatsUtil.probe(probeCol, lo, hi) // compiled ONCE
+    val probe = FileStatsUtil.probe(statsColumn(snap, n, column), lo, hi)
     val keep = files.filter(f => probe.admits(snap.stats.get((n, f))))
     val c = col(column)
     if (keep.isEmpty) // provably empty: keep the schema, scan nothing
@@ -639,6 +631,19 @@ final class GraftDatabase private (
     else txlog.readFilesMasked(snap, n, keep) // DV-masked logical rows
       .filter(c >= lit(lo) && c <= lit(hi))
   }
+
+  /** The name `column` of table `n` carries in `snap`'s file stats: they
+    * are harvested under PHYSICAL names, so a renamed column translates
+    * (identity when no mapping exists).
+    */
+  private def statsColumn(snap: TxLog.Snapshot, n: String,
+      column: String): String =
+    snap.schemas.get(n)
+      .map(js => org.apache.spark.sql.types.DataType.fromJson(js)
+        .asInstanceOf[org.apache.spark.sql.types.StructType])
+      .flatMap(pin => TxLog.logicalFields(pin)
+        .find(_.name.equalsIgnoreCase(column)).map(TxLog.physicalName))
+      .getOrElse(column)
 
   /** Apply a change feed (the output of [[changes]]/[[changesSince]] on
     * a same-shape source table) to THIS table — the replication
@@ -741,8 +746,8 @@ final class GraftDatabase private (
       // patches would both land the same key — the exact write-skew
       // fileGranularAction's gate documents; upsert stays absolute for
       // the same reason
-      commitGranularOrFull(name, tdef, base, hitRaw, touched,
-        table(name).schema, emptyHitsAppend = true,
+      commitGranularOrFull(name, tdef, base, txlog.snapshot(), hitRaw,
+        touched, table(name).schema, emptyHitsAppend = true,
         extra = Seq(TxLog.Txn(appId, batchId)))(result)
       true
     } finally f.unpersist() // best-effort; checkpoint blocks GC-release
@@ -1329,8 +1334,9 @@ final class GraftDatabase private (
   def insertBatch(name: String, rows: DataFrame, appId: String,
       batchId: Long): Boolean = {
     requireNoOpenTx()
-    if (txlog.snapshot().txns.get(appId).exists(_ >= batchId)) return false
-    appendChecked(name, rows, Seq(TxLog.Txn(appId, batchId)))
+    val snap = txlog.snapshot()
+    if (snap.txns.get(appId).exists(_ >= batchId)) return false
+    appendChecked(snap, name, rows, Seq(TxLog.Txn(appId, batchId)))
     true
   }
 
@@ -1441,10 +1447,13 @@ final class GraftDatabase private (
       // probed the table this batch (MaterializedView's state probe
       // reads exactly the affected keys' rows) hands the hit files in
       // via knownHitFiles and the probe pass is skipped outright — one
-      // table pass per merge instead of two. Staleness is safe: the
-      // rewrite read falls back on unmapped files (hitFilesScan) and
-      // fileGranularAction re-checks the binding before committing,
-      // degrading to the full-rewrite fallback under any interleaving.
+      // table pass per merge instead of two. That is sound only for a
+      // SINGLE writer whose hit files were probed at this merge's own
+      // snapshot: a commit landing between the caller's probe and this
+      // merge can add a file holding an affected PK, which the stale
+      // hit set misses while every file in it still maps, so the
+      // granular commit would keep a duplicate PK (the fallbacks only
+      // cover hit files that no longer map).
       keyedRewrite(name, tdef, base, txlog.snapshot(),
         txlog.readMarked(norm(name), "_graft_file").get,
         broadcast(repl.select(col(tdef.pk)).union(dels).distinct()),
@@ -1475,18 +1484,18 @@ final class GraftDatabase private (
     */
   def insert(name: String, rows: DataFrame): Unit = {
     requireNoOpenTx()
-    appendChecked(name, rows, Nil)
+    appendChecked(txlog.snapshot(), name, rows, Nil)
   }
 
-  /** The body of [[insert]] and [[insertBatch]]: validate `rows` and
-    * append them in one commit carrying the `ledger` marks.
+  /** The body of [[insert]] and [[insertBatch]]: validate `rows` against
+    * `snap`, the statement's one resolution of the head, and append them
+    * in one commit from its version carrying the `ledger` marks.
     */
-  private def appendChecked(name: String, rows: DataFrame,
-      ledger: Seq[TxLog.Action]): Unit = {
+  private def appendChecked(snap: TxLog.Snapshot, name: String,
+      rows: DataFrame, ledger: Seq[TxLog.Action]): Unit = {
     val tdef = tableDef(name)
-    val base = txlog.settledVersion
-    val existing = if (tableExists(name)) Some(table(name)) else None
-    val parents = parentsOf(tdef)
+    val existing = readPinned(snap, norm(name))
+    val parents = parentsOf(snap, tdef)
     enforceLimitSize()
     // validation and staging are INDEPENDENT Spark actions (both read
     // `rows`; nothing publishes until the commit below) — run them
@@ -1504,7 +1513,7 @@ final class GraftDatabase private (
     txlog.commit(
       (TxLog.Add(norm(name), staged) +: ledger) ++
         schemaSyncActions(norm(name), rows.schema),
-      readVersion = base,
+      readVersion = snap.version,
       readTables = tdef.fks.map(_.parentTable).toSet)
     invalidateSqlEngine()
   }
@@ -1544,31 +1553,37 @@ final class GraftDatabase private (
   def upsert(name: String, rows: DataFrame): Unit = {
     requireNoOpenTx()
     val tdef = tableDef(name)
-    val base = txlog.settledVersion
-    if (!tableExists(name)) {
+    val n = norm(name)
+    val snap = txlog.snapshot()
+    lazy val parents = parentsOf(snap, tdef)
+    if (!snap.tables.contains(n)) {
       requireClean(ConstrainedDml.validateUpdate(
-        spark, tdef, rows, rows, parentsOf(tdef)))
-      writeReplace(name, rows, base, tdef.fks.map(_.parentTable).toSet)
+        spark, tdef, rows, rows, parents))
+      writeReplace(name, rows, snap.version, tdef.fks.map(_.parentTable).toSet)
       return
     }
-    // cache the incoming batch: the hit-file collect and the staged
-    // write are separate jobs, and a nondeterministic source could
-    // otherwise replace a key in one and land a duplicate in the other
-    val batch = rows.cache()
-    try {
-      if (batch.isEmpty) return // empty batch: true no-op, no version
-      val existing = table(name)
-      val merged = ConstrainedDml.upsert(existing, batch, tdef.pk)
-      requireClean(ConstrainedDml.validateUpdate(
-        spark, tdef, batch, merged, parentsOf(tdef)))
-      // file-granular: only files holding a PK the batch REPLACES
-      // rewrite; a batch of all-new PKs is a pure append (files kept)
-      keyedRewrite(name, tdef, base, txlog.snapshot(),
-        txlog.readMarked(norm(name), "_graft_file").get,
-        batch.select(col(tdef.pk)), None, existing.schema,
-        emptyHitsAppend = true, patchSafe = false, extra = Nil)(
-        ConstrainedDml.upsert(_, batch, tdef.pk))(merged)
-    } finally batch.unpersist()
+    val existing = readPinned(snap, n).get
+    heldBatch(rows, tdef.pk, existing) match {
+      // a small batch is held on the driver: no cache, no emptiness job,
+      // and its hit probe is ONE job over the files that may hold a key
+      case Some(held) =>
+        val pkAt = held.fields(tdef.pk)
+        if (held.rows.nonEmpty)
+          replaceByPk(snap, tdef, parents, existing, rows,
+            Some(hitsOf(snap, n, existing, tdef.pk,
+              held.rows.toSeq.map(_.get(pkAt))).map(_._1).distinct),
+            emptyHitsAppend = true)
+      case None =>
+        // cache the incoming batch: the hit-file collect and the staged
+        // write are separate jobs, and a nondeterministic source could
+        // otherwise replace a key in one and land a duplicate in the other
+        val batch = rows.cache()
+        try {
+          if (!batch.isEmpty) // empty batch: true no-op, no version
+            replaceByPk(snap, tdef, parents, existing, batch, None,
+              emptyHitsAppend = true)
+        } finally batch.unpersist()
+    }
   }
 
   /** Update existing documents by PK (TableCollection.cs:1256-1298):
@@ -1579,30 +1594,117 @@ final class GraftDatabase private (
   def update(name: String, rows: DataFrame): Long = {
     requireNoOpenTx()
     val tdef = tableDef(name)
-    val base = txlog.settledVersion
-    if (!tableExists(name)) return 0L
-    val existing = table(name)
-    // cache: the frame is evaluated twice (count + the persisted merge) —
-    // without it a nondeterministic source could replace different rows
-    // than were counted
-    val matched = rows.join(existing.select(col(tdef.pk)), Seq(tdef.pk),
-      "left_semi").cache()
-    try {
-      val n = matched.count()
-      if (n > 0) {
-        val merged = ConstrainedDml.upsert(existing, matched, tdef.pk)
-        requireClean(ConstrainedDml.validateUpdate(
-          spark, tdef, matched, merged, parentsOf(tdef)))
-        // file-granular: rewrite only the files holding a replaced PK
-        keyedRewrite(name, tdef, base, txlog.snapshot(),
-          txlog.readMarked(norm(name), "_graft_file").get,
-          matched.select(col(tdef.pk)), None, existing.schema,
-          emptyHitsAppend = false, patchSafe = tdef.uniqueCols.isEmpty,
-          extra = Nil)(ConstrainedDml.upsert(_, matched, tdef.pk))(merged)
-      }
-      n
-    } finally matched.unpersist()
+    val n = norm(name)
+    val snap = txlog.snapshot()
+    if (!snap.tables.contains(n)) return 0L
+    val existing = readPinned(snap, n).get
+    def replace(matched: DataFrame, hits: Option[Array[String]]): Unit =
+      replaceByPk(snap, tdef, parentsOf(snap, tdef), existing, matched, hits,
+        emptyHitsAppend = false)
+    heldBatch(rows, tdef.pk, existing) match {
+      // a small batch: ONE hit-probe job finds both the files holding a
+      // batch PK and which PKs exist, so the match needs no job of its own
+      case Some(held) =>
+        val pkAt = held.fields(tdef.pk)
+        val hits = hitsOf(snap, n, existing, tdef.pk,
+          held.rows.toSeq.map(_.get(pkAt)).filter(_ != null))
+        val present = hits.map(h => ConstrainedDml.key(h._2)).toSet
+        val matched = held.rows.filter(r =>
+          !r.isNullAt(pkAt) && present(ConstrainedDml.key(r.get(pkAt))))
+        if (matched.nonEmpty)
+          replace(
+            if (matched.length == held.rows.length) rows
+            else spark.createDataFrame(matched.toSeq.asJava, rows.schema),
+            Some(hits.map(_._1).distinct))
+        matched.length.toLong
+      case None =>
+        // cache: the frame is evaluated twice (count + the persisted
+        // merge) — without it a nondeterministic source could replace
+        // different rows than were counted
+        val matched = rows.join(existing.select(col(tdef.pk)),
+          Seq(tdef.pk), "left_semi").cache()
+        try {
+          val c = matched.count()
+          if (c > 0) replace(matched, None)
+          c
+        } finally matched.unpersist()
+    }
   }
+
+  /** The body of [[upsert]] and [[update]]: `batch` replaces the rows of
+    * `snap`'s table with its PKs and lands beside them, validated as an
+    * update and committed from `snap`'s version. Only files holding a
+    * replaced PK rewrite (`hits` when the caller already probed them);
+    * for upsert a batch of all-new PKs is a pure append.
+    */
+  private def replaceByPk(snap: TxLog.Snapshot, tdef: TableDef,
+      parents: Map[String, DataFrame], existing: DataFrame, batch: DataFrame,
+      hits: Option[Array[String]], emptyHitsAppend: Boolean): Unit = {
+    val merged = ConstrainedDml.upsert(existing, batch, tdef.pk)
+    requireClean(ConstrainedDml.validateUpdate(
+      spark, tdef, batch, merged, parents))
+    keyedRewrite(tdef.name, tdef, snap.version, snap,
+      txlog.readFilesMarked(snap, tdef.name, snap.tables(tdef.name),
+        snap.schemas.get(tdef.name), "_graft_file"),
+      batch.select(col(tdef.pk)), hits, existing.schema, emptyHitsAppend,
+      patchSafe = !emptyHitsAppend && tdef.uniqueCols.isEmpty, extra = Nil)(
+      ConstrainedDml.upsert(_, batch, tdef.pk))(merged)
+  }
+
+  /** `rows` held on the driver when it is a small batch whose PK has
+    * the same type in `existing` (see [[ConstrainedDml.localBatch]]);
+    * None = the bulk path.
+    */
+  private def heldBatch(rows: DataFrame, pk: String, existing: DataFrame)
+      : Option[ConstrainedDml.LocalBatch] =
+    ConstrainedDml.localBatch(rows,
+      Seq(pk -> Seq(ConstrainedDml.typeOf(existing, pk))))
+
+  /** The (file, PK) pairs of `snap`'s table `n` (read as `existing`)
+    * whose PK is one of `keys` (null-safe: a null key finds the null-PK
+    * row). ONE labelled job that reads only the files whose log stats
+    * may hold a key — the keys' min/max (and null counts), the way
+    * [[seek]] prunes. A plain filter would not prune here: the file
+    * column is a nondeterministic projection no filter is pushed below,
+    * so the stats rule never sees a filter over the relation. The files
+    * read with `existing`'s schema, so a table without a stored schema
+    * infers none for the subset.
+    */
+  private def hitsOf(snap: TxLog.Snapshot, n: String, existing: DataFrame,
+      pk: String, keys: Seq[Any]): Array[(String, Any)] = {
+    val present = keys.filter(_ != null)
+    val withNull = keys.contains(null)
+    val statCol = statsColumn(snap, n, pk)
+    val range = keyRange(present).map { case (lo, hi) =>
+      FileStatsUtil.probe(statCol, lo, hi) }
+    val nulls = FileStatsUtil.nullProbe(statCol, wantNull = true)
+    val files = snap.tables.getOrElse(n, Vector.empty).filter { f =>
+      val st = snap.stats.get((n, f))
+      range.exists(_.admits(st)) || (withNull && nulls.admits(st))
+    }
+    val cond = (range.map(_ => col(pk).isin(present: _*)) ++
+      Option.when(withNull)(col(pk).isNull)).reduceOption(_ || _)
+    if (files.isEmpty) Array.empty
+    else graft.core.JobLabel(spark, s"keyed hit probe $n") {
+      txlog.readFilesMarked(snap, n, files,
+        snap.schemas.get(n).orElse(Some(existing.schema.json)), "_graft_file")
+        .filter(cond.get).select(col("_graft_file"), col(pk)).collect()
+    }.map(r => r.getString(0) -> r.get(1))
+  }
+
+  /** The least and greatest of `keys` (one column's non-null values),
+    * strings in the UTF-8 order the file stats use.
+    */
+  private def keyRange(keys: Seq[Any]): Option[(Any, Any)] =
+    keys.headOption.map { head =>
+      val lte: (Any, Any) => Boolean = head match {
+        case _: String => (a, b) =>
+          FileStatsUtil.utf8LteForPrune(a.toString, b.toString)
+        case _ => (a, b) => a.asInstanceOf[Comparable[Any]].compareTo(b) <= 0
+      }
+      (keys.reduce((a, b) => if (lte(a, b)) a else b),
+        keys.reduce((a, b) => if (lte(a, b)) b else a))
+    }
 
   /** UpdateMany with column transforms over rows matching `predicate`
     * (TableCollection.cs:1305-1328, `UPDATE ... SET col = expr WHERE ...`):
@@ -1685,8 +1787,8 @@ final class GraftDatabase private (
       spark, tdef, changed, result, parentsOf(tdef), pkImmutable = true))
     // no unique constraints and no new PKs -> the rewrite commutes
     // with concurrent disjoint-file statements (relative patch)
-    commitGranularOrFull(name, tdef, base, hitRaw, touchedRows,
-      table(name).schema,
+    commitGranularOrFull(name, tdef, base, txlog.snapshot(), hitRaw,
+      touchedRows, table(name).schema,
       emptyHitsAppend = false,
       patchSafe = tdef.uniqueCols.isEmpty)(result)
     n
@@ -2033,13 +2135,25 @@ final class GraftDatabase private (
         marked.join(k, marked(tdef.pk) <=> k("_graft_key"), "left_semi")
           .select("_graft_file").distinct().collect()
       }.map(_.getString(0))).filter(_.nonEmpty)
-    commitGranularOrFull(name, tdef, base, hitRaw,
+    commitGranularOrFull(name, tdef, base, snap, hitRaw,
       rewrite(hitFilesScan(snap, norm(name), hitRaw, marked)),
       expectedSchema, emptyHitsAppend, patchSafe, extra)(fallback)
   }
 
   private def parentsOf(tdef: TableDef): Map[String, DataFrame] =
-    tdef.fks.map(fk => fk.parentTable -> table(fk.parentTable)).toMap
+    parentsOf(txlog.snapshot(), tdef)
+
+  /** The FK parents of `tdef`, read at `snap`. */
+  private def parentsOf(snap: TxLog.Snapshot,
+      tdef: TableDef): Map[String, DataFrame] =
+    tdef.fks.map(fk => fk.parentTable -> readPinned(snap, fk.parentTable)
+      .getOrElse(throw new IllegalArgumentException(
+        s"table '${fk.parentTable}' does not exist (no committed data)")))
+      .toMap
+
+  /** Table `n` (normalized) as committed at `snap`. */
+  private def readPinned(snap: TxLog.Snapshot, n: String): Option[DataFrame] =
+    snap.tables.get(n).map(txlog.readFilesMasked(snap, n, _))
 
   private def requireClean(vs: Seq[ConstrainedDml.Violation]): Unit =
     if (vs.nonEmpty)
@@ -2127,7 +2241,8 @@ final class GraftDatabase private (
             // deletes cannot create uniqueness violations, but a
             // cascade SET-NULL can touch a unique column — gate the
             // commuting patch on the table being constraint-free
-            Some(fileGranularAction(n, hitRaw, plain.schema, plain.schema,
+            Some(fileGranularAction(txlog.snapshot(), n, hitRaw,
+              plain.schema, plain.schema,
               patchSafe = defs.get(n).forall(_.uniqueCols.isEmpty),
               staged = await(stagedF(n)))
               .getOrElse(full))
@@ -2267,15 +2382,18 @@ final class GraftDatabase private (
     * `staged` is by-name, so the mapping checks run before the write
     * when the caller is sequential, or concurrently with it when the
     * caller overlapped the staging — abandoned staged files are
-    * unpublished garbage either way, reclaimed by vacuum.
+    * unpublished garbage either way, reclaimed by vacuum. The hit files
+    * map into `snap`'s binding; `snap` must not be older than the
+    * commit's read version, whose conflict check then covers every
+    * commit after it.
     */
-  private def fileGranularAction(name: String, hitRaw: Array[String],
+  private def fileGranularAction(snap: TxLog.Snapshot, name: String,
+      hitRaw: Array[String],
       touchedSchema: org.apache.spark.sql.types.StructType,
       expectedSchema: org.apache.spark.sql.types.StructType,
       patchSafe: Boolean,
       staged: => Seq[String]): Option[TxLog.Action] = {
     val n = norm(name)
-    val snap = txlog.snapshot()
     val allRel = snap.tables.getOrElse(n, Vector.empty)
     // the staged rows must carry EVERY expected column at its exact
     // type (a missing one would silently null a column of the rewritten
@@ -2308,6 +2426,7 @@ final class GraftDatabase private (
     * mapping failure instead.
     */
   private def commitGranularOrFull(name: String, tdef: TableDef, base: Long,
+      snap: TxLog.Snapshot,
       hitRaw: Array[String], touched: DataFrame,
       expectedSchema: org.apache.spark.sql.types.StructType,
       emptyHitsAppend: Boolean, patchSafe: Boolean = false,
@@ -2316,7 +2435,7 @@ final class GraftDatabase private (
     enforceLimitSize()
     val granular =
       if (hitRaw.nonEmpty || emptyHitsAppend)
-        fileGranularAction(name, hitRaw, touched.schema, expectedSchema,
+        fileGranularAction(snap, name, hitRaw, touched.schema, expectedSchema,
           patchSafe, txlog.stage(norm(name), touched))
       else None
     granular match {
@@ -2915,13 +3034,12 @@ final class GraftDatabase private (
                 if (keys.isEmpty) invalidateSqlEngine()
                 else {
                   // hit files resolve at the ENGINE's snapshot — the
-                  // data the statement actually read. If an interleaved
-                  // commit replaced one of them, the mapping against
-                  // the head binding inside fileGranularAction fails →
-                  // absolute fallback → the commit's conflict check
-                  // fires. Resolving at head instead would let a
-                  // commuting patch silently revert a concurrent
-                  // writer's rows.
+                  // data the statement actually read — and so does the
+                  // granular commit's binding. If an interleaved commit
+                  // replaced one of them, the commit's conflict check
+                  // from engineBase fires. Resolving at head instead
+                  // would let a commuting patch silently revert a
+                  // concurrent writer's rows.
                   val marked = txlog
                     .readMarkedAt(engineBase, n, "_graft_file")
                     .getOrElse(txlog.readMarked(n, "_graft_file").get)

@@ -285,8 +285,8 @@ object StatsPruneRule {
 
   /** Fold the filter's conjuncts into the tightest per-column
     * [lo, hi] box the stats can check: `=`, `<`, `<=`, `>`, `>=` (both
-    * operand orders), BETWEEN (arrives as two conjuncts), IN (its
-    * literal min/max — conservative), and `startswith` (lower bound).
+    * operand orders), BETWEEN (arrives as two conjuncts), IN and InSet
+    * (their literal min/max — conservative), and `startswith` (lower bound).
     * Strict bounds relax to inclusive — stats pruning only needs
     * soundness, the real filter still runs. Conjuncts the box can't
     * express (OR trees, casts, expressions over the column) simply
@@ -310,6 +310,21 @@ object StatsPruneRule {
         case None => hi += c -> b
       }
     def name(a: AttributeReference): String = a.name.toLowerCase
+    // an IN list bounds its column by the literals' min/max; a null or
+    // unconvertible literal leaves the column unbounded
+    def addSet(a: AttributeReference, vs: Seq[Literal]): Unit = {
+      val bs = vs.map(litBound)
+      if (bs.forall(_.isDefined)) {
+        val all = bs.flatten
+        val mn = all.reduceLeft((x, y) => minB(x, y).getOrElse {
+          dead += name(a); x
+        })
+        val mx = all.reduceLeft((x, y) => maxB(x, y).getOrElse {
+          dead += name(a); x
+        })
+        if (!dead(name(a))) { addLo(name(a), mn); addHi(name(a), mx) }
+      }
+    }
     conjuncts.foreach {
       case EqualTo(a: AttributeReference, l: Literal) =>
         litBound(l).foreach { b => addLo(name(a), b); addHi(name(a), b) }
@@ -336,17 +351,12 @@ object StatsPruneRule {
         litBound(l).foreach(addLo(name(a), _))
       case In(a: AttributeReference, vs) if vs.nonEmpty &&
           vs.forall(_.isInstanceOf[Literal]) =>
-        val bs = vs.map(v => litBound(v.asInstanceOf[Literal]))
-        if (bs.forall(_.isDefined)) {
-          val all = bs.flatten
-          val mn = all.reduceLeft((x, y) => minB(x, y).getOrElse {
-            dead += name(a); x
-          })
-          val mx = all.reduceLeft((x, y) => maxB(x, y).getOrElse {
-            dead += name(a); x
-          })
-          if (!dead(name(a))) { addLo(name(a), mn); addHi(name(a), mx) }
-        }
+        addSet(a, vs.map(_.asInstanceOf[Literal]))
+      // OptimizeIn turns an IN of more than
+      // spark.sql.optimizer.inSetConversionThreshold literals into InSet
+      // before this rule runs; its set holds Catalyst-internal values
+      case InSet(a: AttributeReference, hset) if hset.nonEmpty =>
+        addSet(a, hset.toSeq.map(v => Literal(v, a.dataType)))
       case StartsWith(a: AttributeReference, l: Literal) =>
         litBound(l).foreach(addLo(name(a), _)) // prefix is a lower bound
       case _ => () // OR trees, casts, UDF wraps: contribute nothing

@@ -633,10 +633,14 @@ final class TxLog(spark: SparkSession, root: String,
   def readMarkedAt(v: Long, table: String, fileCol: String)
       : Option[DataFrame] = {
     val s = if (v < 0) snapshot() else snapshotAt(v)
-    s.tables.get(table).map { rel =>
-      maskedRead(s, table, rel, s.schemas.get(table), Some(fileCol))
-    }
+    s.tables.get(table).map(
+      readFilesMarked(s, table, _, s.schemas.get(table), fileCol))
   }
+
+  /** [[readFilesMasked]] with each row's source file as `fileCol`. */
+  def readFilesMarked(s: Snapshot, table: String, rel: Seq[String],
+      schemaJson: Option[String], fileCol: String): DataFrame =
+    maskedRead(s, table, rel, schemaJson, Some(fileCol))
 
   /** True when `snapshotAt(v)` can faithfully reconstruct version v:
     * either a checkpoint at or below v survives, or the log was never

@@ -1,7 +1,11 @@
 package graft.dml
 
-import org.apache.spark.sql.{DataFrame, RelationalGroupedDataset, SparkSession}
+import scala.collection.mutable
+
+import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.LocalRowsShim
+import org.apache.spark.sql.types._
 
 /** Constraint-enforcing DML (SURVEY §1.3 / `Iot.Database/Table/
   * TableCollection.cs`): FK existence + uniqueness checks on insert
@@ -10,9 +14,29 @@ import org.apache.spark.sql.functions._
   *
   * Storage-agnostic: every operation is DataFrame→DataFrame (the caller
   * owns the write — Delta MERGE where available, partition overwrite on
-  * plain parquet). Checks are formulated as joins so they distribute:
-  * FK existence = left_anti against the parent keys (broadcast when the
-  * parent is a dim), uniqueness = hash-agg on the key.
+  * plain parquet).
+  *
+  * Two check paths return the same violations, in the same order:
+  *  - SMALL batches are checked the way the reference checks a document,
+  *    by key lookups. A batch is small when its optimized plan is a
+  *    local relation (possibly under repartition or sort nodes), so its
+  *    rows are read on the driver with no job; the planner's size
+  *    estimate is within `spark.sql.autoBroadcastJoinThreshold` (the
+  *    size under which a join would broadcast it); it holds at most
+  *    [[SmallBatchMaxRows]] rows; and every checked column has a type
+  *    whose equality the driver shares with Spark (integers, decimals,
+  *    binary-collated strings, booleans, dates, timestamps). A frame
+  *    read from a table is never small. In-batch checks (duplicate and
+  *    null PKs, duplicate unique and 1:1 values) run on the driver with
+  *    no job. Every table-side question (PK, unique and 1:1 matches, FK
+  *    parents, the update result's PK multiplicity and null PKs) becomes
+  *    an `IN`-literal filter; all of them are unioned into ONE collect
+  *    with no exchange, and [[graft.catalog.StatsPruneRule]] skips the
+  *    files whose log-held min/max exclude the keys.
+  *  - BULK batches (anything else, e.g. every batch when the threshold
+  *    is -1) are checked by joins whose strategy the planner picks: FK
+  *    existence = left_anti against the parent keys, uniqueness =
+  *    hash-agg on the key, table-side matches = one fused probe pass.
   */
 object ConstrainedDml {
 
@@ -32,6 +56,79 @@ object ConstrainedDml {
   final case class Violation(kind: String, table: String, column: String,
       n: Long)
 
+  /** Rows above which a batch takes the bulk path, whatever its size
+    * estimate: the bound on the driver-held copy and on each `IN` list.
+    */
+  val SmallBatchMaxRows = 4096
+
+  /** A small batch held on the driver: its rows, and the field index of
+    * each column its checks compare.
+    */
+  private[graft] final case class LocalBatch(rows: Array[Row],
+      fields: Map[String, Int])
+
+  /** `df`'s rows on the driver when it is small (see the object doc),
+    * read with no Spark job; None = the bulk path. `compared` names each
+    * column a check compares by value, with the type of every column it
+    * is compared against: each must be a type that compares on the
+    * driver and match its counterparts exactly (a counterpart that is
+    * absent, None, sends the batch to the bulk path). Only a frame that
+    * the optimizer folds into one local relation is held; any other
+    * frame — a table read, however small — takes the bulk path.
+    */
+  private[graft] def localBatch(df: DataFrame,
+      compared: Seq[(String, Seq[Option[DataType]])]): Option[LocalBatch] = {
+    val fields = compared.map { case (c, _) => c -> fieldOf(df.schema, c) }
+    val comparable = compared.zip(fields).forall { case ((_, others), (_, at)) =>
+      at.exists { i =>
+        val t = df.schema(i).dataType
+        driverComparable(t) && others.forall(_.contains(t))
+      }
+    }
+    lazy val limit = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    if (!comparable) None
+    else LocalRowsShim.localRows(df, SmallBatchMaxRows)
+      .filter(_ => limit >= 0 &&
+        df.queryExecution.optimizedPlan.stats.sizeInBytes <= limit)
+      .map(LocalBatch(_, fields.map { case (c, at) => c -> at.get }.toMap))
+  }
+
+  /** The type of `df`'s column `c` (see [[fieldOf]]), None when absent. */
+  private[graft] def typeOf(df: DataFrame, c: String): Option[DataType] =
+    fieldOf(df.schema, c).map(df.schema(_).dataType)
+
+  /** The field `c` resolves to: an exact name match, else the one
+    * case-insensitive match (None when absent or ambiguous).
+    */
+  private def fieldOf(schema: StructType, c: String): Option[Int] = {
+    val exact = schema.fieldNames.indexOf(c)
+    if (exact >= 0) Some(exact)
+    else schema.fieldNames.zipWithIndex.filter(_._1.equalsIgnoreCase(c)) match {
+      case Array((_, i)) => Some(i)
+      case _ => None
+    }
+  }
+
+  /** Types whose driver-side equality (Row values) is Spark's equality:
+    * no floating point (NaN, -0.0), no non-binary collation, nothing
+    * nested.
+    */
+  private def driverComparable(t: DataType): Boolean = t match {
+    case ByteType | ShortType | IntegerType | LongType | BooleanType |
+        DateType | TimestampType | TimestampNTZType => true
+    case _: DecimalType => true
+    case s: StringType => s == StringType
+    case _ => false
+  }
+
+  /** A Row value as a driver-side grouping key (decimals compare by
+    * value whatever their scale).
+    */
+  private[graft] def key(v: Any): Any = v match {
+    case d: java.math.BigDecimal => BigDecimal(d)
+    case other => other
+  }
+
   /** Validate `incoming` rows against constraints. Returns the violation
     * summary (empty = clean):
     *  - fk_missing: child FK value with no parent row
@@ -47,6 +144,7 @@ object ConstrainedDml {
       existing: Option[DataFrame],
       parents: Map[String, DataFrame]): Seq[Violation] = {
     val b = new CheckBuilder(table.name)
+    val side = sideOf(b, table, incoming, existing.toSeq, parents)
 
     // Cross-checks against the EXISTING table put the table on the LEFT
     // and the batch's keys on the RIGHT: a probe join can only broadcast
@@ -63,24 +161,20 @@ object ConstrainedDml {
     // per-statement cost a 100 TB insert feels; the bounded batch builds
     // are the same either way). Violation.n counts conflicting TABLE
     // rows, exactly like per-column semi-joins would.
-    val probe = existing.map(b.probe)
+    val probe = existing.map(side.probe)
 
     table.fks.foreach { fk =>
-      val parent = parents.getOrElse(fk.parentTable,
-        throw new IllegalArgumentException(s"missing parent ${fk.parentTable}"))
-      b.single("fk_missing", fk.childCol,
-        incoming.filter(col(fk.childCol).isNotNull)
-          .join(broadcast(parent.select(col(fk.parentCol))),
-            incoming(fk.childCol) === parent(fk.parentCol), "left_anti"))
+      val parent = parentOf(parents, fk)
+      side.fkMissing(b.slot("fk_missing", fk.childCol), fk, parent)
       if (fk.oneToOne) {
-        b.single("one_to_one_conflict", fk.childCol,
-          duplicatedKeys(incoming.select(col(fk.childCol)), fk.childCol))
-        probe.foreach(p => p.matchCount(
-          b.slot("one_to_one_conflict", fk.childCol), incoming, fk.childCol))
+        side.duplicated(b.slot("one_to_one_conflict", fk.childCol),
+          fk.childCol)
+        probe.foreach(_.matchCount(
+          b.slot("one_to_one_conflict", fk.childCol), fk.childCol))
       }
     }
     probe.foreach { p =>
-      p.matchCount(b.slot("pk_conflict", table.pk), incoming, table.pk)
+      p.matchCount(b.slot("pk_conflict", table.pk), table.pk)
       // AT MOST ONE null-PK row per table: a second one could never be
       // addressed, replaced, or distinguished by id, and the in-batch
       // check already rejects two nulls arriving together — without
@@ -98,51 +192,55 @@ object ConstrainedDml {
     // NOTE: the in-batch PK dupe check deliberately has no notNull filter
     // (a batch of several null PKs is a conflict, matching the original).
     // One batch pass emits the dupe count AND the batch-side null flag.
-    locally {
-      val dupeSlot = b.slot("pk_conflict", table.pk)
-      val g = incoming.groupBy(table.pk).agg(count(lit(1)).as(GroupCount))
-      val aggs = Seq(
-        sum(when(col(GroupCount) > 1, 1L).otherwise(0L)).as("_dupes")) ++
-        b.batchNullSlot.map(_ =>
-          max(when(col(table.pk).isNull, 1L).otherwise(0L)).as("_bnull"))
-      val a = g.agg(aggs.head, aggs.drop(1): _*)
-      val pairs = struct(lit(dupeSlot).as("i"),
-        coalesce(col("_dupes"), lit(0L)).as("n")) +:
-        b.batchNullSlot.map(s => struct(lit(s).as("i"),
-          coalesce(col("_bnull"), lit(0L)).as("n"))).toSeq
-      b.emitter(a.select(explode(array(pairs: _*)).as("s"))
-        .select(col("s.i").as("i"), col("s.n").as("n")))
-    }
+    side.pkDupesAndNull(b.slot("pk_conflict", table.pk), table.pk,
+      b.batchNullSlot)
     // Unique checks split the old merged-groupBy (which shuffled the
     // WHOLE table's column per insert) into in-batch dupes + the fused
     // table probe; a value duplicated across the union is exactly one
     // of the two.
     table.uniqueCols.foreach { uc =>
-      b.single("unique_conflict", uc,
-        duplicatedKeys(incoming.select(col(uc)), uc))
-      probe.foreach(p => p.matchCount(
-        b.slot("unique_conflict", uc), incoming, uc))
+      side.duplicated(b.slot("unique_conflict", uc), uc)
+      probe.foreach(_.matchCount(b.slot("unique_conflict", uc), uc))
     }
     b.run()
   }
 
-  /** Accumulates check slots (ordered), count emitters, and derived
-    * combinations; `run` collects every emitter's (slot, count) rows in
-    * ONE Spark job and folds them back into ordered [[Violation]]s —
-    * same counts, same emission order as evaluating each check
-    * separately, but one action and (via [[TableProbe]]) one pass over
-    * the existing table per statement instead of one per checked
-    * column.
+  private def parentOf(parents: Map[String, DataFrame], fk: Fk): DataFrame =
+    parents.getOrElse(fk.parentTable,
+      throw new IllegalArgumentException(s"missing parent ${fk.parentTable}"))
+
+  /** The batch as a check source: held on the driver when it is small
+    * and every checked column compares on the driver — the same type in
+    * the batch, in `against` (the tables it is matched against) and, for
+    * an FK, in the parent — else planned by Spark.
+    */
+  private def sideOf(b: CheckBuilder, table: TableDef, incoming: DataFrame,
+      against: Seq[DataFrame], parents: Map[String, DataFrame]): Side =
+    localBatch(incoming,
+      (table.pk +: (table.uniqueCols ++ table.fks.map(_.childCol))).map(c =>
+        c -> against.map(typeOf(_, c))) ++
+      table.fks.map(fk => fk.childCol ->
+        Seq(parents.get(fk.parentTable).flatMap(typeOf(_, fk.parentCol)))))
+      .map(lb => new LocalSide(b, lb))
+      .getOrElse(new FrameSide(b, incoming))
+
+  /** Accumulates check slots (ordered), their answers, and derived
+    * combinations; `run` evaluates every pending question in ONE Spark
+    * job per path and folds the answers back into ordered
+    * [[Violation]]s — same counts, same emission order as evaluating
+    * each check separately. Bulk questions are count frames (and, via
+    * [[TableProbe]], one pass over the existing table per statement);
+    * small-path questions are counts the driver already knows and
+    * `IN`-filtered lookups.
     */
   private final class CheckBuilder(tableName: String) {
-    private val slots = scala.collection.mutable.ArrayBuffer
-      .empty[(String, String)] // (kind, column); "" kind = hidden counter
-    private val derivations = scala.collection.mutable.Map
-      .empty[Int, Map[Int, Long] => Long]
-    private val emitters = scala.collection.mutable.ArrayBuffer
-      .empty[DataFrame]
-    private val probes = scala.collection.mutable.ArrayBuffer
-      .empty[TableProbe]
+    private val slots = mutable.ArrayBuffer.empty[(String, String)]
+    // (kind, column); "" kind = hidden counter
+    private val derivations = mutable.Map.empty[Int, Map[Int, Long] => Long]
+    private val emitters = mutable.ArrayBuffer.empty[DataFrame]
+    private val probes = mutable.ArrayBuffer.empty[Probe]
+    private val known = mutable.Map.empty[Int, Long]
+    private val lookups = mutable.ArrayBuffer.empty[(DataFrame, Seq[Ask])]
     var batchNullSlot: Option[Int] = None
 
     def slot(kind: String, column: String): Int = {
@@ -153,32 +251,229 @@ object ConstrainedDml {
         f: Map[Int, Long] => Long): Int = {
       val i = slot(kind, column); derivations(i) = f; i
     }
-    def single(kind: String, column: String, df: DataFrame): Unit = {
-      val i = slot(kind, column)
+    /** Bulk: `slot` answers with the row count of `df`. */
+    def rowCount(slot: Int, df: DataFrame): Unit =
       emitters += df.agg(count(lit(1)).as("n"))
-        .select(lit(i).as("i"), col("n"))
-    }
+        .select(lit(slot).as("i"), col("n"))
+    /** Bulk: a frame of (slot, count) rows. */
     def emitter(df: DataFrame): Unit = emitters += df
-    /** A [[TableProbe]] over `table`, emitted by `run` when asked anything. */
-    def probe(table: DataFrame): TableProbe = {
-      val p = new TableProbe(table); probes += p; p
-    }
+    /** Small path: `slot`'s answer, computed on the driver. */
+    def answer(slot: Int, n: Long): Unit = known(slot) = n
+    /** Small path: the rows of `df` (already `IN`-filtered), from which
+      * each ask folds its answer.
+      */
+    def lookup(df: DataFrame, asks: Seq[Ask]): Unit = lookups += ((df, asks))
+    /** A probe, finished (its questions registered) by `run`. */
+    def register(p: Probe): Probe = { probes += p; p }
 
     def run(): Seq[Violation] = {
-      val all = emitters ++ probes.filter(_.nonEmpty).map(_.emit())
-      if (all.isEmpty) return Nil
-      val union = all.reduce(_.unionByName(_))
-      val ns = graft.core.JobLabel(union.sparkSession,
-        s"constraint check $tableName") { union.collect() }
-        .map(r => r.getInt(0) -> r.getLong(1)).toMap
+      probes.foreach(_.finish())
+      val ns = (known.toMap ++ counted() ++ looked()).withDefaultValue(0L)
       slots.zipWithIndex.collect {
         case ((kind, column), i) if kind.nonEmpty &&
-            derivations.get(i).map(_(ns))
-              .getOrElse(ns.getOrElse(i, 0L)) > 0 =>
+            derivations.get(i).map(_(ns)).getOrElse(ns(i)) > 0 =>
           Violation(kind, tableName, column,
             derivations.get(i).map(_(ns)).getOrElse(ns(i)))
       }.toSeq
     }
+
+    private def collect(df: DataFrame): Array[Row] =
+      graft.core.JobLabel(df.sparkSession,
+        s"constraint check $tableName") { df.collect() }
+
+    private def counted(): Map[Int, Long] =
+      if (emitters.isEmpty) Map.empty
+      else collect(emitters.reduce(_.unionByName(_)))
+        .map(r => r.getInt(0) -> r.getLong(1)).toMap
+
+    // every lookup projects only its asks' marker (and value) columns;
+    // the by-name union null-fills the others, so one collect with no
+    // exchange answers them all
+    private def looked(): Map[Int, Long] =
+      if (lookups.isEmpty) Map.empty
+      else {
+        val union = lookups.map { case (df, asks) =>
+          df.select(asks.flatMap(_.columns): _*)
+        }.reduce(_.unionByName(_, allowMissingColumns = true))
+        val rows = collect(union)
+        val names = union.columns
+        lookups.flatMap(_._2).map { a =>
+          val m = names.indexOf(a.marker)
+          val v = a.value.map(_ => names.indexOf(a.valueName))
+          val hit = rows.filterNot(_.isNullAt(m))
+          a.slot -> a.fold(hit.toSeq.map(r => v.map(r.get).orNull))
+        }.toMap
+      }
+  }
+
+  /** One small-path question over a lookup's rows: `fold` turns the
+    * `value`s of the rows where `cond` holds (nulls when no value is
+    * asked) into `slot`'s answer.
+    */
+  private final case class Ask(slot: Int, cond: Column,
+      value: Option[Column], fold: Seq[Any] => Long) {
+    def marker: String = s"_graft_probe_c$slot"
+    def valueName: String = s"_graft_probe_v$slot"
+    def columns: Seq[Column] = when(cond, lit(1)).as(marker) +:
+      value.map(v => when(cond, v).as(valueName)).toSeq
+  }
+
+  /** The batch as a check source; each method registers the answer to
+    * one question for `slot` with the builder. The bulk side plans
+    * frames, the small side answers on the driver or with lookups.
+    */
+  private sealed abstract class Side {
+    /** Batch rows with a non-null `fk.childCol` and no parent. */
+    def fkMissing(slot: Int, fk: Fk, parent: DataFrame): Unit
+    /** Distinct non-null values of `c` occurring more than once. */
+    def duplicated(slot: Int, c: String): Unit
+    /** PK groups holding more than one row, the null group included. */
+    def repeatedPks(slot: Int, pk: String): Unit
+    /** [[repeatedPks]] plus, in `nullSlot`, whether the batch holds a
+      * null PK (insert's fused batch pass).
+      */
+    def pkDupesAndNull(slot: Int, pk: String, nullSlot: Option[Int]): Unit
+    /** The batch's rows whose `c` is non-null. */
+    def nonNull(c: String): Side
+    /** The `result` rows this batch did not touch (see [[unchangedOf]]). */
+    def unchanged(pk: String, result: DataFrame): DataFrame
+    /** `result`'s PK groups over the batch's PKs holding > 1 row. */
+    def resultMultiplicity(slot: Int, pk: String, result: DataFrame): Unit
+    /** 1 when `result` holds two or more null-PK rows. */
+    def resultNulls(slot: Int, pk: String, result: DataFrame): Unit
+    /** A probe matching `table`'s rows against this batch. */
+    def probe(table: DataFrame): Probe
+  }
+
+  private final class FrameSide(b: CheckBuilder, df: DataFrame)
+      extends Side {
+    def fkMissing(slot: Int, fk: Fk, parent: DataFrame): Unit =
+      b.rowCount(slot, df.filter(col(fk.childCol).isNotNull)
+        .join(broadcast(parent.select(col(fk.parentCol))),
+          df(fk.childCol) === parent(fk.parentCol), "left_anti"))
+    def duplicated(slot: Int, c: String): Unit =
+      b.rowCount(slot, duplicatedKeys(df.select(col(c)), c))
+    def repeatedPks(slot: Int, pk: String): Unit =
+      b.rowCount(slot, repeated(df.groupBy(pk)))
+    def pkDupesAndNull(slot: Int, pk: String,
+        nullSlot: Option[Int]): Unit = {
+      val g = df.groupBy(pk).agg(count(lit(1)).as(GroupCount))
+      val aggs = Seq(
+        sum(when(col(GroupCount) > 1, 1L).otherwise(0L)).as("_dupes")) ++
+        nullSlot.map(_ =>
+          max(when(col(pk).isNull, 1L).otherwise(0L)).as("_bnull"))
+      val a = g.agg(aggs.head, aggs.drop(1): _*)
+      val pairs = struct(lit(slot).as("i"),
+        coalesce(col("_dupes"), lit(0L)).as("n")) +:
+        nullSlot.map(s => struct(lit(s).as("i"),
+          coalesce(col("_bnull"), lit(0L)).as("n"))).toSeq
+      b.emitter(a.select(explode(array(pairs: _*)).as("s"))
+        .select(col("s.i").as("i"), col("s.n").as("n")))
+    }
+    def nonNull(c: String): Side =
+      new FrameSide(b, df.filter(col(c).isNotNull))
+    def unchanged(pk: String, result: DataFrame): DataFrame =
+      unchangedOf(pk, df, result)
+    // Scalable direction: result probes map-side against the broadcast
+    // bounded batch keys; the groupBy aggregates only the semi-matched
+    // slice.
+    def resultMultiplicity(slot: Int, pk: String, result: DataFrame): Unit = {
+      val keys = df.select(col(pk)).filter(col(pk).isNotNull).distinct()
+      b.rowCount(slot, repeated(result.filter(col(pk).isNotNull)
+        .join(broadcast(keys), Seq(pk), "left_semi")
+        .groupBy(pk)))
+    }
+    // limit(2) bounds the scan
+    def resultNulls(slot: Int, pk: String, result: DataFrame): Unit =
+      b.rowCount(slot, repeated(result.filter(col(pk).isNull).limit(2).groupBy()))
+    def probe(table: DataFrame): Probe =
+      b.register(new TableProbe(b, table, df))
+  }
+
+  private final class LocalSide(b: CheckBuilder, batch: LocalBatch)
+      extends Side {
+    private def values(c: String): Seq[Any] = {
+      val i = batch.fields(c)
+      batch.rows.toSeq.map(_.get(i))
+    }
+    /** Distinct non-null values of `c`: an `IN` list. */
+    def keys(c: String): Seq[Any] =
+      values(c).filter(_ != null).distinctBy(key)
+    private def repeats(vs: Seq[Any]): Long =
+      vs.groupBy(v => Option(key(v))).count(_._2.size > 1).toLong
+
+    def fkMissing(slot: Int, fk: Fk, parent: DataFrame): Unit = {
+      val vs = values(fk.childCol).filter(_ != null)
+      if (vs.isEmpty) b.answer(slot, 0L)
+      else b.lookup(parent.filter(col(fk.parentCol).isin(keys(fk.childCol): _*)),
+        Seq(Ask(slot, lit(true), Some(col(fk.parentCol)), found => {
+          val have = found.map(key).toSet
+          vs.count(v => !have(key(v))).toLong
+        })))
+    }
+    def duplicated(slot: Int, c: String): Unit =
+      b.answer(slot, repeats(values(c).filter(_ != null)))
+    def repeatedPks(slot: Int, pk: String): Unit =
+      b.answer(slot, repeats(values(pk)))
+    def pkDupesAndNull(slot: Int, pk: String,
+        nullSlot: Option[Int]): Unit = {
+      repeatedPks(slot, pk)
+      nullSlot.foreach(s =>
+        b.answer(s, if (values(pk).contains(null)) 1L else 0L))
+    }
+    def nonNull(c: String): Side = {
+      val i = batch.fields(c)
+      new LocalSide(b, batch.copy(rows = batch.rows.filterNot(_.isNullAt(i))))
+    }
+    def unchanged(pk: String, result: DataFrame): DataFrame = {
+      val rest = result.filter(col(pk).isNotNull)
+      val ks = keys(pk)
+      if (ks.isEmpty) rest else rest.filter(!col(pk).isin(ks: _*))
+    }
+    def resultMultiplicity(slot: Int, pk: String, result: DataFrame): Unit = {
+      val ks = keys(pk)
+      if (ks.isEmpty) b.answer(slot, 0L)
+      else b.lookup(result.filter(col(pk).isin(ks: _*)),
+        Seq(Ask(slot, lit(true), Some(col(pk)), repeats)))
+    }
+    def resultNulls(slot: Int, pk: String, result: DataFrame): Unit =
+      b.lookup(result.filter(col(pk).isNull),
+        Seq(Ask(slot, lit(true), None, vs => if (vs.size >= 2) 1L else 0L)))
+    def probe(table: DataFrame): Probe =
+      b.register(new LocalProbe(b, table, this))
+  }
+
+  /** Table-side questions of one validation: how many `table` rows
+    * carry a value of the probe's batch in a column, and whether the
+    * table holds a null in a column.
+    */
+  private sealed abstract class Probe {
+    def matchCount(slot: Int, column: String): Unit
+    def nullCount(slot: Int, column: String): Unit
+    /** Register the accumulated questions with the builder. */
+    def finish(): Unit
+  }
+
+  /** Small path: each column's matches are an `IN` filter over `table`,
+    * all of them OR-ed into ONE lookup — one scan of `table` however
+    * many columns ask (a lone column's filter prunes files by its
+    * stats). A null flag is its own `IS NULL` lookup, which prunes
+    * every file whose stats prove no null.
+    */
+  private final class LocalProbe(b: CheckBuilder, table: DataFrame,
+      batch: LocalSide) extends Probe {
+    private val asks = mutable.ArrayBuffer.empty[Ask]
+    def matchCount(slot: Int, column: String): Unit = {
+      val ks = batch.keys(column)
+      if (ks.isEmpty) b.answer(slot, 0L)
+      else asks += Ask(slot, col(column).isin(ks: _*), None, _.size.toLong)
+    }
+    def nullCount(slot: Int, column: String): Unit =
+      b.lookup(table.filter(col(column).isNull),
+        Seq(Ask(slot, lit(true), None, vs => if (vs.isEmpty) 0L else 1L)))
+    def finish(): Unit =
+      if (asks.nonEmpty)
+        b.lookup(table.filter(asks.map(_.cond).reduce(_ || _)), asks.toSeq)
   }
 
   /** ONE pass over a table answering every table-side question a
@@ -194,19 +489,21 @@ object ConstrainedDml {
     * Self-validation (`validateUpdate` with incoming == result) passes
     * the whole table as the batch — the reason no broadcast is forced.
     */
-  private final class TableProbe(existing: DataFrame) {
-    private val reqs = scala.collection.mutable.ArrayBuffer
+  private final class TableProbe(b: CheckBuilder, existing: DataFrame,
+      batch: DataFrame) extends Probe {
+    private val reqs = mutable.ArrayBuffer
       .empty[(Int, DataFrame, String)] // (slot, batch, column)
-    private val nulls = scala.collection.mutable.ArrayBuffer
+    private val nulls = mutable.ArrayBuffer
       .empty[(Int, String)] // (slot, column)
 
-    def matchCount(slot: Int, batch: DataFrame, column: String): Unit =
+    def matchCount(slot: Int, column: String): Unit =
       reqs += ((slot, batch, column))
     def nullCount(slot: Int, column: String): Unit =
       nulls += ((slot, column))
-    def nonEmpty: Boolean = reqs.nonEmpty || nulls.nonEmpty
+    def finish(): Unit =
+      if (reqs.nonEmpty || nulls.nonEmpty) b.emitter(emit())
 
-    def emit(): DataFrame = {
+    private def emit(): DataFrame = {
       def m(kind: Char, j: Int) = s"_graft_probe_$kind$j"
       val cols = (reqs.map(_._3) ++ nulls.map(_._2)).distinct
       var t = existing.select(cols.map(col).toSeq: _*)
@@ -262,11 +559,23 @@ object ConstrainedDml {
 
   /** Upsert by PK (TableCollection.cs:1195-1240): incoming replaces
     * matching rows, inserts the rest. One shuffle on the PK (the Delta
-    * MERGE plan shape).
+    * MERGE plan shape) — or, when `incoming` is a small local relation
+    * (see the object doc), a filter dropping its PKs as an `IN` list,
+    * with no join and no job to build one.
     */
   def upsert(existing: DataFrame, incoming: DataFrame, pk: String): DataFrame =
-    existing.join(incoming.select(col(pk)), Seq(pk), "left_anti")
-      .unionByName(incoming)
+    localBatch(incoming, Seq(pk -> Seq(typeOf(existing, pk)))) match {
+      case Some(lb) =>
+        val at = lb.fields(pk)
+        val ks = lb.rows.toSeq.map(_.get(at)).filter(_ != null).distinctBy(key)
+        val kept =
+          if (ks.isEmpty) existing
+          else existing.filter(col(pk).isNull || !col(pk).isin(ks: _*))
+        kept.unionByName(incoming)
+      case None =>
+        existing.join(incoming.select(col(pk)), Seq(pk), "left_anti")
+          .unionByName(incoming)
+    }
 
   /** Validate an update's outcome (Update/UpdateMany): FK existence for
     * the incoming/changed rows, PK uniqueness within them, and unique-col
@@ -284,6 +593,10 @@ object ConstrainedDml {
     * the bounded result-vs-incoming PK-multiplicity check below counts
     * result rows per incoming PK and flags > 1. With `pkImmutable =
     * true` the caller PROVES PKs didn't move, which implies the shape.
+    *
+    * On the small path every result-side question is a filter over
+    * `result`, so a `result` built by [[upsert]] from a small local
+    * batch (a filter, not a join) keeps the whole check in one job.
     */
   def validateUpdate(
       spark: SparkSession,
@@ -293,6 +606,7 @@ object ConstrainedDml {
       parents: Map[String, DataFrame],
       pkImmutable: Boolean = false): Seq[Violation] = {
     val b = new CheckBuilder(table.name)
+    val side = sideOf(b, table, incoming, Seq(result), parents)
     // Null-PK rows cannot be identified as "self" by the PK anti-join
     // (null never equi-matches), so they are EXCLUDED from `unchanged`
     // and compared separately against the non-null-PK slice of the
@@ -301,24 +615,20 @@ object ConstrainedDml {
     // (RESTORE, rebuild, replica bootstrap pass incoming == result).
     // Each side is ONE fused probe pass, however many columns it checks
     // (built only when a unique or 1:1 column asks).
-    lazy val unchanged = b.probe(unchangedOf(table, incoming, result))
-    lazy val nullPkRows = b.probe(result.filter(col(table.pk).isNull))
-    lazy val nonNullPkIncoming = incoming.filter(col(table.pk).isNotNull)
+    lazy val unchanged = side.probe(side.unchanged(table.pk, result))
+    lazy val nullPkRows = side.nonNull(table.pk)
+      .probe(result.filter(col(table.pk).isNull))
     def crossChecks(kind: String, c: String): Unit = {
-      unchanged.matchCount(b.slot(kind, c), incoming, c)
-      nullPkRows.matchCount(b.slot(kind, c), nonNullPkIncoming, c)
+      unchanged.matchCount(b.slot(kind, c), c)
+      nullPkRows.matchCount(b.slot(kind, c), c)
     }
 
     table.fks.foreach { fk =>
-      val parent = parents.getOrElse(fk.parentTable,
-        throw new IllegalArgumentException(s"missing parent ${fk.parentTable}"))
-      b.single("fk_missing", fk.childCol,
-        incoming.filter(col(fk.childCol).isNotNull)
-          .join(broadcast(parent.select(col(fk.parentCol))),
-            incoming(fk.childCol) === parent(fk.parentCol), "left_anti"))
+      val parent = parentOf(parents, fk)
+      side.fkMissing(b.slot("fk_missing", fk.childCol), fk, parent)
       if (fk.oneToOne) {
-        b.single("one_to_one_conflict", fk.childCol,
-          duplicatedKeys(incoming.select(col(fk.childCol)), fk.childCol))
+        side.duplicated(b.slot("one_to_one_conflict", fk.childCol),
+          fk.childCol)
         crossChecks("one_to_one_conflict", fk.childCol)
       }
     }
@@ -327,32 +637,23 @@ object ConstrainedDml {
     // SET targets) — the duplicate scan is then a wasted Spark job per
     // statement, the dominant fixed cost of small DMLs
     if (!pkImmutable) {
-      b.single("pk_conflict", table.pk, repeated(incoming.groupBy(table.pk)))
+      side.repeatedPks(b.slot("pk_conflict", table.pk), table.pk)
       // the result-shape precondition, ENFORCED (see the scaladoc): a
       // PK-mutating transform landing on a PK that also survives on an
       // untouched row leaves that row outside `unchanged` (the anti-join
       // drops it), silently evading the unique checks — so count result
-      // rows per incoming PK and reject multiplicity > 1. Scalable
-      // direction: result probes map-side against the broadcast bounded
-      // batch keys; the groupBy aggregates only the semi-matched slice.
-      b.single("pk_conflict", table.pk, {
-        val keys = incoming.select(col(table.pk))
-          .filter(col(table.pk).isNotNull).distinct()
-        repeated(result.filter(col(table.pk).isNotNull)
-          .join(broadcast(keys), Seq(table.pk), "left_semi")
-          .groupBy(table.pk))
-      })
+      // rows per incoming PK and reject multiplicity > 1.
+      side.resultMultiplicity(b.slot("pk_conflict", table.pk), table.pk,
+        result)
       // the one-null-PK-row rule (see validateInsert) on the POST-update
       // state: catches a transform nulling a pk while a null-PK row
       // exists, and makes whole-set self-validation (incoming == result:
       // restore, validateConstraints) reject exactly the states write
-      // enforcement rejects. limit(2) bounds the scan.
-      b.single("pk_conflict", table.pk,
-        repeated(result.filter(col(table.pk).isNull).limit(2).groupBy()))
+      // enforcement rejects.
+      side.resultNulls(b.slot("pk_conflict", table.pk), table.pk, result)
     }
     table.uniqueCols.foreach { uc =>
-      b.single("unique_conflict", uc,
-        duplicatedKeys(incoming.select(col(uc)), uc))
+      side.duplicated(b.slot("unique_conflict", uc), uc)
       crossChecks("unique_conflict", uc)
     }
     b.run()
@@ -373,11 +674,11 @@ object ConstrainedDml {
     * null-PK rows cannot coexist under the one-null-PK-row rule both
     * validators enforce).
     */
-  private def unchangedOf(table: TableDef, incoming: DataFrame,
+  private def unchangedOf(pk: String, incoming: DataFrame,
       result: DataFrame): DataFrame =
-    result.filter(col(table.pk).isNotNull)
-      .join(incoming.select(col(table.pk)).filter(col(table.pk).isNotNull),
-        Seq(table.pk), "left_anti")
+    result.filter(col(pk).isNotNull)
+      .join(incoming.select(col(pk)).filter(col(pk).isNotNull),
+        Seq(pk), "left_anti")
 
   /** UpdateMany with a transform expression over matching rows
     * (TableCollection.cs:1305-1328; SQL `UPDATE c SET Name = UPPER($.Name)

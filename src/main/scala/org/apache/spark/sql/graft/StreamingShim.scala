@@ -63,3 +63,38 @@ object ExprShim {
       : org.apache.spark.sql.catalyst.expressions.Expression =
     org.apache.spark.sql.classic.ExpressionUtils.expression(c)
 }
+
+/** Driver-held batches (`Dataset.ofRows` is `private[sql]`). */
+object LocalRowsShim {
+  import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation,
+    LogicalPlan, RepartitionOperation, Sort}
+
+  /** The rows of `df` when its optimized plan is a local relation of at
+    * most `maxRows` rows, possibly under repartition or sort nodes (they
+    * move rows, they do not change the row set), read on the driver with
+    * no Spark job; None otherwise.
+    */
+  def localRows(df: DataFrame, maxRows: Int): Option[Array[Row]] = {
+    def strip(p: LogicalPlan): LogicalPlan = p match {
+      case r: RepartitionOperation => strip(r.child)
+      case s: Sort => strip(s.child)
+      case other => other
+    }
+    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]]
+    if (!isLocal(df)) None
+    else strip(ds.queryExecution.optimizedPlan) match {
+      case l: LocalRelation if !l.isStreaming && l.data.length <= maxRows =>
+        Some(org.apache.spark.sql.classic.Dataset
+          .ofRows(ds.sparkSession, l).collect())
+      case _ => None
+    }
+  }
+
+  /** True when every leaf of `df`'s analyzed plan is a local relation —
+    * a cheap test, with no optimizer run.
+    */
+  private def isLocal(df: DataFrame): Boolean =
+    df.asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]]
+      .queryExecution.analyzed.collectLeaves()
+      .forall(_.isInstanceOf[LocalRelation])
+}

@@ -6,8 +6,9 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, In, InSet}
 import org.apache.spark.sql.catalyst.plans.LeftOuter
-import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -259,17 +260,26 @@ class ConstrainedDmlSpec extends AnyFunSuite {
   }
 
   test("the insert probe's join is the planner's choice: a small batch " +
-    "broadcasts, and below the broadcast threshold it does not") {
+    "reads the table through an IN filter with no join, and below the " +
+    "broadcast threshold it plans no broadcast join") {
     val existing = spark.range(2000).selectExpr("id AS probe_pk", "id AS w")
     val batch = Seq((5000L, 1L), (5001L, 2L)).toDF("probe_pk", "w")
-    def probeJoins: Seq[BaseJoinExec] = executedPlans(validateInsert(
+    def nodes: Seq[SparkPlan] = executedPlans(validateInsert(
         spark, TableDef("p", "probe_pk"), batch, Some(existing), Map()))
       .flatMap(PlanGates.allNodes)
+    val small = nodes
+    assert(!small.exists(_.isInstanceOf[BaseJoinExec]), small.map(_.nodeName))
+    assert(small.exists {
+      // the probe column, pushed below the alias, is `id` in the scan
+      case f: FilterExec => f.condition.exists {
+        case In(a: AttributeReference, _) => a.name == "id"
+        case InSet(a: AttributeReference, _) => a.name == "id"
+        case _ => false
+      }
+      case _ => false
+    }, small.map(_.nodeName))
+    val bulk = withConf("spark.sql.autoBroadcastJoinThreshold", "-1")(nodes)
       .collect { case j: BaseJoinExec if j.joinType == LeftOuter => j }
-    val small = probeJoins
-    assert(small.nonEmpty && small.forall(_.isInstanceOf[BroadcastHashJoinExec]),
-      small.map(_.nodeName))
-    val bulk = withConf("spark.sql.autoBroadcastJoinThreshold", "-1")(probeJoins)
     assert(bulk.nonEmpty && !bulk.exists(_.isInstanceOf[BroadcastHashJoinExec]),
       bulk.map(_.nodeName))
   }

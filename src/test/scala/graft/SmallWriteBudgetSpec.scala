@@ -1,0 +1,126 @@
+package graft
+
+import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.catalog.GraftDatabase
+import graft.dml.ConstrainedDml._
+import graft.plans.PlanGates
+
+/** Job and file budgets of small writes on an IoT-ingest-shaped
+  * database (points; readings and point_state, each with an FK to
+  * points): a small batch is checked with a fixed handful of Spark jobs
+  * and opens no existing file its keys cannot be in.
+  */
+class SmallWriteBudgetSpec extends AnyFunSuite {
+  import SparkSessionFixture._
+  import spark.implicits._
+
+  private val Points = 2000
+
+  private def ingestDb(name: String): GraftDatabase = {
+    val db = GraftDatabase(spark, name,
+      Files.createTempDirectory(s"graft-$name").toString)
+      .defineTable(TableDef("points", "point_id"))
+      .defineTable(TableDef("readings", "reading_id",
+        fks = Seq(Fk("point_id", "points", "point_id"))))
+      .defineTable(TableDef("point_state", "point_id",
+        fks = Seq(Fk("point_id", "points", "point_id"))))
+    db.insert("points", (1 to Points).map(p => (p, s"p$p")).toDF("point_id", "name"))
+    db.insert("readings", (0 until Points).map(i => (i.toLong, i % Points + 1,
+      i.toDouble)).toDF("reading_id", "point_id", "value").repartition(4))
+    db.insert("point_state", (1 to Points).map(p => (p, 0.0))
+      .toDF("point_id", "value").repartition(4))
+    db
+  }
+
+  /** Job descriptions of every Spark job `f` submits, and the executed
+    * plans of every query it runs.
+    */
+  private def observed(f: => Any): (Seq[String], Seq[SparkPlan]) = {
+    val jobs = new ConcurrentLinkedQueue[String]()
+    val plans = new ConcurrentLinkedQueue[SparkPlan]()
+    val jl = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        jobs.add(Option(js.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+    }
+    val ql = new QueryExecutionListener {
+      def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    org.apache.spark.graft.ListenerDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(jl)
+    spark.listenerManager.register(ql)
+    try { f; org.apache.spark.graft.ListenerDrain(spark.sparkContext) }
+    finally {
+      spark.sparkContext.removeSparkListener(jl)
+      spark.listenerManager.unregister(ql)
+    }
+    (jobs.asScala.toSeq, plans.asScala.toSeq)
+  }
+
+  test("a 500-row insert of fresh keys runs at most 2 constraint-check " +
+    "jobs and opens no existing readings file") {
+    val db = ingestDb("budget-insert")
+    val dir = db.tablePath("readings")
+    val batch = (Points until Points + 500).map(i =>
+      (i.toLong, i % Points + 1, i.toDouble)).toDF("reading_id", "point_id", "value")
+    val (jobs, plans) = observed(db.insert("readings", batch))
+    val checks = jobs.count(_.contains("constraint check"))
+    assert(checks >= 1 && checks <= 2, jobs)
+    val opened = plans.flatMap(PlanGates.allNodes).collect {
+      case s: FileSourceScanExec
+          if s.relation.location.rootPaths.exists(_.toString.contains(dir)) =>
+        s.relation.location.inputFiles.length
+    }
+    assert(opened.nonEmpty && opened.forall(_ == 0),
+      s"readings files opened per scan: $opened")
+    assert(db.count("readings") == Points + 500)
+  }
+
+  test("a one-row update runs at most 6 jobs in all") {
+    val db = ingestDb("budget-update")
+    val (jobs, _) = observed(
+      assert(db.update("point_state", Seq((7, 1.5)).toDF("point_id", "value")) == 1))
+    assert(jobs.size <= 6, jobs)
+    assert(db.findById("point_state", 7).map(_.getDouble(1)).contains(1.5))
+  }
+
+  test("a frame read from a table takes the bulk path, however small its " +
+    "size estimate") {
+    val db = GraftDatabase(spark, "budget-validate",
+      Files.createTempDirectory("graft-budget-validate").toString)
+      .defineTable(TableDef("points", "point_id"))
+    val n = SmallBatchMaxRows + 904
+    db.insert("points", (1 to n).map(p => (p, s"p$p")).toDF("point_id", "name"))
+    val state = db.table("points")
+    assert(state.queryExecution.optimizedPlan.stats.sizeInBytes <=
+      spark.sessionState.conf.autoBroadcastJoinThreshold)
+    assert(localBatch(state, Seq("point_id" -> Nil)).isEmpty)
+    assert(db.count("points") == n) // the table's schema and stats, read once
+    val (jobs, _) = observed(assert(db.validateConstraints("points").isEmpty))
+    // the bulk plans' jobs only: nothing collects the table to the driver
+    assert(jobs.nonEmpty && jobs.forall(_.contains("constraint check")), jobs)
+  }
+
+  test("an upsert's hit probe is one job") {
+    val db = ingestDb("budget-upsert")
+    val states = (1 to Points by 5).map(p => (p, 2.0)).toDF("point_id", "value")
+    val (jobs, _) = observed(db.upsert("point_state", states))
+    assert(jobs.count(_.contains("hit probe")) == 1, jobs)
+    assert(jobs.count(_.contains("constraint check")) <= 1, jobs)
+    assert(db.count("point_state") == Points)
+    assert(db.table("point_state").filter($"value" === 2.0).count() ==
+      (1 to Points by 5).size)
+  }
+}

@@ -76,6 +76,24 @@ class StatsPruneRuleSpec extends AnyFunSuite {
       s"one-sided >= must prune the low files: ${oneSided.inputFiles.length}")
   }
 
+  test("an IN list longer than the InSet conversion threshold prunes " +
+    "like a short one") {
+    val db = freshDb("prune3s")
+    val n = seed(db)
+    val threshold = spark.conf.get(
+      "spark.sql.optimizer.inSetConversionThreshold").toInt
+    val keys = (100L until 100L + threshold + 10)
+    val in = db.table("m").filter(col("k").isin(keys: _*))
+    assert(in.count() == keys.size)
+    assert(in.inputFiles.length <= 2,
+      s"a clustered key run must hit at most two files, got " +
+        s"${in.inputFiles.length} of $n")
+    // a string InSet prunes by UTF-8 order, with the exact filter on top
+    val s = db.table("m").filter(col("s").isin(
+      (0 until threshold + 10).map(i => s"v$i"): _*))
+    assert(s.count() == threshold + 10)
+  }
+
   test("predicates stats cannot express keep the full list and stay exact") {
     val db = freshDb("prune4")
     val n = seed(db)

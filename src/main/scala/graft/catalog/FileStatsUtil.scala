@@ -6,9 +6,11 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+import org.apache.spark.sql.types.StructType
 
 /** Per-file column min/max, harvested once from a freshly staged file's
   * own parquet footer and carried in the commit log (the Delta-style
@@ -35,6 +37,12 @@ import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
   */
 object FileStatsUtil {
 
+  /** What a staged file's one footer read yields; each part is None
+    * when it cannot be read.
+    */
+  final case class Footer(stats: Option[String], rows: Option[Long],
+      schema: Option[StructType])
+
   /** Stats plus the footer row count (None = footer unreadable). The
     * row count lets stage() drop ZERO-ROW part files from a binding: a
     * multi-partition rewrite writes an empty part per partition that
@@ -43,6 +51,15 @@ object FileStatsUtil {
     */
   def fromFooterWithRows(absPath: String,
       ioOptions: Map[String, String]): (Option[String], Option[Long]) = {
+    val f = harvest(absPath, ioOptions, (_, _) => null)
+    (f.stats, f.rows)
+  }
+
+  /** [[fromFooterWithRows]] plus the file's Spark schema, converted by
+    * `schemaOf` from the same footer.
+    */
+  def harvest(absPath: String, ioOptions: Map[String, String],
+      schemaOf: (String, ParquetMetadata) => StructType): Footer = {
     try {
       val conf = new Configuration()
       ioOptions.foreach { case (k, v) => conf.set(k, v) }
@@ -51,9 +68,11 @@ object FileStatsUtil {
         HadoopInputFile.fromPath(path, conf),
         HadoopReadOptions.builder(conf, path).build())
       try {
+        val schema = scala.util.Try(schemaOf(absPath, reader.getFooter))
+          .toOption.flatMap(Option(_))
         val blocks = reader.getFooter.getBlocks.asScala.toSeq
         val rows = blocks.map(_.getRowCount).sum
-        if (blocks.isEmpty || rows == 0L) return (None, Some(rows))
+        if (blocks.isEmpty || rows == 0L) return Footer(None, Some(rows), schema)
         // fold row-group column chunks to per-column global bounds;
         // a column with ANY unusable chunk drops out entirely
         var acc = Map.empty[String, (String, BigDecimal, BigDecimal,
@@ -160,9 +179,9 @@ object FileStatsUtil {
         }.filter(_.nonEmpty)) ++ nulOnly
         val js = if (entries.isEmpty) None
         else Some(entries.mkString("{", ",", "}"))
-        (js, Some(rows))
+        Footer(js, Some(rows), schema)
       } finally reader.close()
-    } catch { case _: Throwable => (None, None) }
+    } catch { case _: Throwable => Footer(None, None, None) }
   }
 
   /** The stats kind + EXACT bound normalizer a physical-int/float

@@ -626,7 +626,7 @@ final class GraftDatabase private (
     val keep = files.filter(f => probe.admits(snap.stats.get((n, f))))
     val c = col(column)
     if (keep.isEmpty) // provably empty: keep the schema, scan nothing
-      txlog.readFiles(files.take(1), snap.schemas.get(n)).limit(0)
+      txlog.readFiles(n, files.take(1), snap.schemas.get(n)).limit(0)
         .filter(c >= lit(lo) && c <= lit(hi))
     else txlog.readFilesMasked(snap, n, keep) // DV-masked logical rows
       .filter(c >= lit(lo) && c <= lit(hi))
@@ -680,10 +680,8 @@ final class GraftDatabase private (
         // bootstrap: the first batch materializes the replica —
         // validation and staging run concurrently (see insert)
         enforceLimitSize()
-        val staged = stageConcurrently(n, ins) {
-          requireClean(ConstrainedDml.validateUpdate(
-            spark, tdef, ins, ins, parentsOf(tdef)))
-        }
+        val staged = overlapped(requireClean(ConstrainedDml.validateUpdate(
+          spark, tdef, ins, ins, parentsOf(tdef))))(txlog.stage(n, ins))
         txlog.commit(
           Seq(TxLog.Put(n, staged), TxLog.Txn(appId, batchId)),
           readVersion = base,
@@ -738,17 +736,18 @@ final class GraftDatabase private (
           .unionByName(ins, allowMissingColumns = true)
       def result = table(name).join(touchedKeys, Seq(tdef.pk), "left_anti")
         .unionByName(ins, allowMissingColumns = true)
-      // the PK-duplicate scan already rode the collect above
-      requireClean(ConstrainedDml.validateUpdate(
-        spark, tdef, ins, result, parentsOf(tdef), pkImmutable = true))
       // NEVER patch-safe: the batch inserts NEW PKs, and two concurrent
       // appliers (multi-source replication) committing commuting
       // patches would both land the same key — the exact write-skew
       // fileGranularAction's gate documents; upsert stays absolute for
-      // the same reason
-      commitGranularOrFull(name, tdef, base, txlog.snapshot(), hitRaw,
-        touched, table(name).schema, emptyHitsAppend = true,
-        extra = Seq(TxLog.Txn(appId, batchId)))(result)
+      // the same reason. The PK-duplicate scan already rode the collect
+      // above.
+      commitGranularOrFull(name, tdef, base, txlog.snapshot(),
+        table(name).schema, emptyHitsAppend = true,
+        extra = Seq(TxLog.Txn(appId, batchId)))(
+        requireClean(ConstrainedDml.validateUpdate(
+          spark, tdef, ins, result, parentsOf(tdef), pkImmutable = true)))(
+        (hitRaw, touched))(result)
       true
     } finally f.unpersist() // best-effort; checkpoint blocks GC-release
   }
@@ -1399,7 +1398,10 @@ final class GraftDatabase private (
     * per-batch validation pass is skipped outright — it was the
     * dominant fixed cost of a small maintained-view merge (measured
     * 4.3 s / 26 AQE stage-jobs of a 13.7 s q166 run at sf0.1). Tables
-    * WITH uniques/FKs still validate regardless of the flag.
+    * WITH uniques/FKs still validate regardless of the flag. A small
+    * local batch (see [[graft.dml.ConstrainedDml]]) has the claim
+    * checked on the driver, with no job: duplicate or null PKs throw
+    * IllegalArgumentException. A bulk batch's claim is trusted.
     */
   def mergeBatch(name: String, replacements: DataFrame,
       deleteKeys: DataFrame, appId: String, batchId: Long,
@@ -1407,40 +1409,52 @@ final class GraftDatabase private (
       replacementsDistinctByPk: Boolean = false,
       knownHitFiles: Option[Array[String]] = None): Boolean = {
     requireNoOpenTx()
-    if (txlog.snapshot().txns.get(appId).exists(_ >= batchId)) return false
+    val snap = txlog.snapshot()
+    if (snap.txns.get(appId).exists(_ >= batchId)) return false
     val tdef = tableDef(name)
+    val n = norm(name)
+    val existing = readPinned(snap, n)
+    val held = heldBatch(replacements, tdef.pk, existing)
+    if (replacementsDistinctByPk) held.foreach { lb =>
+      val pks = lb.rows.toSeq.map(_.get(lb.fields(tdef.pk)))
+      require(!pks.contains(null) &&
+        pks.distinctBy(ConstrainedDml.key).size == pks.size,
+        s"mergeBatch('$n'): replacementsDistinctByPk is set, but the " +
+          "replacements hold duplicate or null PKs")
+    }
     val needsValidation = !replacementsDistinctByPk ||
       tdef.uniqueCols.nonEmpty || tdef.fks.nonEmpty
-    val base = txlog.settledVersion
+    def validate(incoming: DataFrame, result: DataFrame): Unit =
+      if (needsValidation)
+        requireClean(ConstrainedDml.validateUpdate(tdef, incoming,
+          held.map(_.rows), result, parentsOf(snap, tdef), pkImmutable = false))
     // alsoRecord: additional (appId -> high-water) ledger marks riding
     // the SAME commit — durable monotonic counters atomic with the data
     // (the MV's last-folded-source-version mark)
     val ledger = TxLog.Txn(appId, batchId) +:
       alsoRecord.map { case (a, v) => TxLog.Txn(a, v) }
-    if (!tableExists(name)) {
+    if (existing.isEmpty) {
       // nothing to delete in an unmaterialized table; first batch is a
       // validated full write carrying the ledger marker
-      if (needsValidation)
-        requireClean(ConstrainedDml.validateUpdate(
-          spark, tdef, replacements, replacements, parentsOf(tdef)))
-      writeReplace(name, replacements, base,
+      validate(replacements, replacements)
+      writeReplace(name, replacements, snap.version,
         tdef.fks.map(_.parentTable).toSet, ledger)
       return true
     }
-    // cache both inputs: the hit-file collect, validation, and the
-    // staged write are separate jobs — a nondeterministic source could
-    // otherwise rewrite different rows than were validated
-    val repl = replacements.cache()
+    // the hit-file collect, validation, and the staged write are
+    // separate jobs — pin both inputs, so a nondeterministic source
+    // cannot rewrite different rows than were validated: a held batch
+    // is a local relation already, anything else is cached
+    val repl = if (held.isDefined) replacements else replacements.cache()
     val dels = deleteKeys.select(col(tdef.pk)).distinct().cache()
     try {
-      val existing = table(name)
       // plan construction only — executed by validation and/or the
       // full-rewrite fallback, neither of which may run
       val merged = ConstrainedDml.upsert(
-        existing.join(dels, Seq(tdef.pk), "left_anti"), repl, tdef.pk)
-      if (needsValidation)
-        requireClean(ConstrainedDml.validateUpdate(
-          spark, tdef, repl, merged, parentsOf(tdef)))
+        existing.get.join(dels, Seq(tdef.pk), "left_anti"), repl, tdef.pk,
+        held.map(_.rows))
+      val marked = txlog.readFilesMarked(snap, n, snap.tables(n),
+        snap.schemas.get(n), "_graft_file")
       // file-granular: files holding a replaced OR deleted PK. Scalable
       // direction — the table-scale marked frame probes map-side against
       // the broadcast batch-bounded key set. A caller that already
@@ -1454,14 +1468,18 @@ final class GraftDatabase private (
       // hit set misses while every file in it still maps, so the
       // granular commit would keep a duplicate PK (the fallbacks only
       // cover hit files that no longer map).
-      keyedRewrite(name, tdef, base, txlog.snapshot(),
-        txlog.readMarked(norm(name), "_graft_file").get,
-        broadcast(repl.select(col(tdef.pk)).union(dels).distinct()),
-        knownHitFiles, existing.schema, emptyHitsAppend = true,
-        patchSafe = false, extra = ledger)(scan => ConstrainedDml.upsert(
-          scan.join(dels, Seq(tdef.pk), "left_anti"), repl, tdef.pk))(merged)
+      keyedRewrite(name, tdef, snap.version, snap, marked,
+        knownHitFiles.getOrElse(probeHits(n, tdef.pk, marked,
+          broadcast(repl.select(col(tdef.pk)).union(dels).distinct()))),
+        existing.get.schema, emptyHitsAppend = true, patchSafe = false,
+        extra = ledger)(validate(repl, merged))(scan => ConstrainedDml.upsert(
+          scan.join(dels, Seq(tdef.pk), "left_anti"), repl, tdef.pk,
+          held.map(_.rows)))(merged)
       true
-    } finally { repl.unpersist(); dels.unpersist(); () }
+    } finally {
+      if (held.isEmpty) repl.unpersist()
+      dels.unpersist(); ()
+    }
   }
 
   /** All table names: declared via `defineTable` plus any committed in
@@ -1498,14 +1516,9 @@ final class GraftDatabase private (
     val parents = parentsOf(snap, tdef)
     enforceLimitSize()
     // validation and staging are INDEPENDENT Spark actions (both read
-    // `rows`; nothing publishes until the commit below) — run them
-    // concurrently so a statement's wall time is max, not sum. On a
-    // violation the staged-but-unpublished files are abandoned exactly
-    // like a lost commit race (vacuum reclaims them).
-    val staged = stageConcurrently(norm(name), rows) {
-      requireClean(ConstrainedDml.validateInsert(
-        spark, tdef, rows, existing, parents))
-    }
+    // `rows`; nothing publishes until the commit below) — see overlapped
+    val staged = overlapped(requireClean(ConstrainedDml.validateInsert(
+      spark, tdef, rows, existing, parents)))(txlog.stage(norm(name), rows))
     // an append is an ADD action — but it was VALIDATED against `base`
     // (unique/PK sets, FK PARENTS), so a concurrent commit touching
     // this table OR a validated parent must conflict (a parent delete
@@ -1518,25 +1531,28 @@ final class GraftDatabase private (
     invalidateSqlEngine()
   }
 
-  /** Run `validate` on the caller's thread WHILE `rows` stages on a
-    * helper thread, returning the staged files once BOTH succeed — the
-    * per-statement fixed Spark-action cost becomes max(validate, stage)
-    * instead of their sum. Only sound because staged files are
-    * invisible until a commit references them: if validation throws,
-    * the staged directory is abandoned (vacuum reclaims it), the same
-    * contract as a lost commit race. `rows` must be deterministic
-    * between the two evaluations — the same requirement the previous
-    * sequential validate-then-stage had.
+  /** Run `validate` on the caller's thread WHILE `work` (a hit probe
+    * and a staged write) runs on a helper thread, returning `work`'s
+    * result once BOTH succeed — the statement's fixed Spark-action cost
+    * becomes max(validate, work) instead of their sum. Only sound
+    * because staged files are invisible until a commit references
+    * them: if validation throws, `work` is waited out and its staged
+    * directory abandoned (vacuum reclaims it), the same contract as a
+    * lost commit race, and no job of the failed statement outlives it.
+    * A frame both sides evaluate must give the same rows each time (a
+    * local relation, or cached) — the same requirement a sequential
+    * validate-then-stage had.
     */
-  private def stageConcurrently(n: String, rows: DataFrame)(
-      validate: => Unit): Seq[String] = {
-    val stagedF = java.util.concurrent.CompletableFuture.supplyAsync(
-      () => txlog.stage(n, rows), stagingPool)
+  private def overlapped[T](validate: => Unit)(work: => T): T = {
+    val f = java.util.concurrent.CompletableFuture.supplyAsync(
+      () => work, stagingPool)
     try validate
     catch {
-      case t: Throwable => stagedF.cancel(false); throw t
+      case t: Throwable =>
+        try await(f) catch { case _: Throwable => () }
+        throw t
     }
-    await(stagedF)
+    await(f)
   }
 
   /** A staging-pool result, its failure rethrown unwrapped. */
@@ -1563,15 +1579,11 @@ final class GraftDatabase private (
       return
     }
     val existing = readPinned(snap, n).get
-    heldBatch(rows, tdef.pk, existing) match {
-      // a small batch is held on the driver: no cache, no emptiness job,
-      // and its hit probe is ONE job over the files that may hold a key
+    heldBatch(rows, tdef.pk, Some(existing)) match {
+      // a small batch is held on the driver: no cache, no emptiness job
       case Some(held) =>
-        val pkAt = held.fields(tdef.pk)
         if (held.rows.nonEmpty)
-          replaceByPk(snap, tdef, parents, existing, rows,
-            Some(hitsOf(snap, n, existing, tdef.pk,
-              held.rows.toSeq.map(_.get(pkAt))).map(_._1).distinct),
+          replaceByPk(snap, tdef, parents, existing, rows, Some(held), None,
             emptyHitsAppend = true)
       case None =>
         // cache the incoming batch: the hit-file collect and the staged
@@ -1580,7 +1592,7 @@ final class GraftDatabase private (
         val batch = rows.cache()
         try {
           if (!batch.isEmpty) // empty batch: true no-op, no version
-            replaceByPk(snap, tdef, parents, existing, batch, None,
+            replaceByPk(snap, tdef, parents, existing, batch, None, None,
               emptyHitsAppend = true)
         } finally batch.unpersist()
     }
@@ -1598,10 +1610,11 @@ final class GraftDatabase private (
     val snap = txlog.snapshot()
     if (!snap.tables.contains(n)) return 0L
     val existing = readPinned(snap, n).get
-    def replace(matched: DataFrame, hits: Option[Array[String]]): Unit =
-      replaceByPk(snap, tdef, parentsOf(snap, tdef), existing, matched, hits,
-        emptyHitsAppend = false)
-    heldBatch(rows, tdef.pk, existing) match {
+    def replace(matched: DataFrame, held: Option[ConstrainedDml.LocalBatch],
+        hits: Option[Array[String]]): Unit =
+      replaceByPk(snap, tdef, parentsOf(snap, tdef), existing, matched, held,
+        hits, emptyHitsAppend = false)
+    heldBatch(rows, tdef.pk, Some(existing)) match {
       // a small batch: ONE hit-probe job finds both the files holding a
       // batch PK and which PKs exist, so the match needs no job of its own
       case Some(held) =>
@@ -1611,11 +1624,13 @@ final class GraftDatabase private (
         val present = hits.map(h => ConstrainedDml.key(h._2)).toSet
         val matched = held.rows.filter(r =>
           !r.isNullAt(pkAt) && present(ConstrainedDml.key(r.get(pkAt))))
-        if (matched.nonEmpty)
-          replace(
-            if (matched.length == held.rows.length) rows
-            else spark.createDataFrame(matched.toSeq.asJava, rows.schema),
-            Some(hits.map(_._1).distinct))
+        if (matched.nonEmpty) {
+          val (batch, batchHeld) =
+            if (matched.length == held.rows.length) (rows, held)
+            else (spark.createDataFrame(matched.toSeq.asJava, rows.schema),
+              held.copy(rows = matched))
+          replace(batch, Some(batchHeld), Some(hits.map(_._1).distinct))
+        }
         matched.length.toLong
       case None =>
         // cache: the frame is evaluated twice (count + the persisted
@@ -1625,7 +1640,7 @@ final class GraftDatabase private (
           Seq(tdef.pk), "left_semi").cache()
         try {
           val c = matched.count()
-          if (c > 0) replace(matched, None)
+          if (c > 0) replace(matched, None, None)
           c
         } finally matched.unpersist()
     }
@@ -1634,31 +1649,40 @@ final class GraftDatabase private (
   /** The body of [[upsert]] and [[update]]: `batch` replaces the rows of
     * `snap`'s table with its PKs and lands beside them, validated as an
     * update and committed from `snap`'s version. Only files holding a
-    * replaced PK rewrite (`hits` when the caller already probed them);
-    * for upsert a batch of all-new PKs is a pure append.
+    * replaced PK rewrite (`hits` when the caller already probed them;
+    * else ONE job over the files whose stats may hold a key of a `held`
+    * batch, or a join); for upsert a batch of all-new PKs is a pure
+    * append. `held` is `batch` read on the driver, once per statement.
     */
   private def replaceByPk(snap: TxLog.Snapshot, tdef: TableDef,
       parents: Map[String, DataFrame], existing: DataFrame, batch: DataFrame,
-      hits: Option[Array[String]], emptyHitsAppend: Boolean): Unit = {
-    val merged = ConstrainedDml.upsert(existing, batch, tdef.pk)
-    requireClean(ConstrainedDml.validateUpdate(
-      spark, tdef, batch, merged, parents))
-    keyedRewrite(tdef.name, tdef, snap.version, snap,
-      txlog.readFilesMarked(snap, tdef.name, snap.tables(tdef.name),
-        snap.schemas.get(tdef.name), "_graft_file"),
-      batch.select(col(tdef.pk)), hits, existing.schema, emptyHitsAppend,
-      patchSafe = !emptyHitsAppend && tdef.uniqueCols.isEmpty, extra = Nil)(
-      ConstrainedDml.upsert(_, batch, tdef.pk))(merged)
+      held: Option[ConstrainedDml.LocalBatch], hits: Option[Array[String]],
+      emptyHitsAppend: Boolean): Unit = {
+    val n = tdef.name
+    val rows = held.map(_.rows)
+    val merged = ConstrainedDml.upsert(existing, batch, tdef.pk, rows)
+    val marked = txlog.readFilesMarked(snap, n, snap.tables(n),
+      snap.schemas.get(n), "_graft_file")
+    def probe = hits.getOrElse(held match {
+      case Some(lb) => hitsOf(snap, n, existing, tdef.pk,
+        lb.rows.toSeq.map(_.get(lb.fields(tdef.pk)))).map(_._1).distinct
+      case None => probeHits(n, tdef.pk, marked, batch.select(col(tdef.pk)))
+    })
+    keyedRewrite(n, tdef, snap.version, snap, marked, probe, existing.schema,
+      emptyHitsAppend, patchSafe = !emptyHitsAppend && tdef.uniqueCols.isEmpty,
+      extra = Nil)(requireClean(ConstrainedDml.validateUpdate(
+        tdef, batch, rows, merged, parents, pkImmutable = false)))(
+      ConstrainedDml.upsert(_, batch, tdef.pk, rows))(merged)
   }
 
   /** `rows` held on the driver when it is a small batch whose PK has
-    * the same type in `existing` (see [[ConstrainedDml.localBatch]]);
-    * None = the bulk path.
+    * the same type in `existing`, when there is one (see
+    * [[ConstrainedDml.localBatch]]); None = the bulk path.
     */
-  private def heldBatch(rows: DataFrame, pk: String, existing: DataFrame)
-      : Option[ConstrainedDml.LocalBatch] =
+  private def heldBatch(rows: DataFrame, pk: String,
+      existing: Option[DataFrame]): Option[ConstrainedDml.LocalBatch] =
     ConstrainedDml.localBatch(rows,
-      Seq(pk -> Seq(ConstrainedDml.typeOf(existing, pk))))
+      Seq(pk -> existing.toSeq.map(ConstrainedDml.typeOf(_, pk))))
 
   /** The (file, PK) pairs of `snap`'s table `n` (read as `existing`)
     * whose PK is one of `keys` (null-safe: a null key finds the null-PK
@@ -1782,15 +1806,15 @@ final class GraftDatabase private (
     def result = ConstrainedDml.updateWhere(
       remark(table(name)), col("_graft_hit"), set).drop("_graft_hit")
     // pkImmutable: the require() above guards the PK against SET
-    // targets and the changed rows derive from distinct existing PKs
-    requireClean(ConstrainedDml.validateUpdate(
-      spark, tdef, changed, result, parentsOf(tdef), pkImmutable = true))
-    // no unique constraints and no new PKs -> the rewrite commutes
+    // targets and the changed rows derive from distinct existing PKs.
+    // No unique constraints and no new PKs -> the rewrite commutes
     // with concurrent disjoint-file statements (relative patch)
-    commitGranularOrFull(name, tdef, base, txlog.snapshot(), hitRaw,
-      touchedRows, table(name).schema,
-      emptyHitsAppend = false,
-      patchSafe = tdef.uniqueCols.isEmpty)(result)
+    commitGranularOrFull(name, tdef, base, txlog.snapshot(),
+      table(name).schema, emptyHitsAppend = false,
+      patchSafe = tdef.uniqueCols.isEmpty)(
+      requireClean(ConstrainedDml.validateUpdate(
+        spark, tdef, changed, result, parentsOf(tdef), pkImmutable = true)))(
+      (hitRaw, touchedRows))(result)
     n
   }
 
@@ -2113,32 +2137,38 @@ final class GraftDatabase private (
     }
 
   /** The keyed rewrite shared by every PK-addressed write (upsert,
-    * update, mergeBatch, a persisted LiteSql statement): ONE labelled
-    * probe collects the files of `marked` (read at `snap`) holding a PK
-    * in `keys` (null-safe, so a null-PK row is addressable) — skipped
-    * when the caller already knows them — then `rewrite` turns exactly
-    * those files' rows ([[hitFilesScan]]) into their replacement, and
-    * [[commitGranularOrFull]] commits it or rewrites the table as
-    * `fallback`. The caller owns the probe's join strategy (a hint on
-    * `keys`, built only when the probe runs) and the snapshot.
+    * update, mergeBatch, a persisted LiteSql statement): `hits` (the
+    * files of `marked`, read at `snap`, holding an addressed PK) are
+    * probed, `rewrite` turns exactly those files' rows
+    * ([[hitFilesScan]]) into their replacement, and
+    * [[commitGranularOrFull]] stages it, or the table as `fallback`,
+    * while `validate` runs — so the statement's critical path is
+    * max(validate, probe + stage). The caller owns the probe (its
+    * join strategy, or hit files it already knows) and the snapshot.
     */
   private def keyedRewrite(name: String, tdef: TableDef, base: Long,
-      snap: TxLog.Snapshot, marked: DataFrame, keys: => DataFrame,
-      knownHits: Option[Array[String]],
+      snap: TxLog.Snapshot, marked: DataFrame, hits: => Array[String],
       expectedSchema: org.apache.spark.sql.types.StructType,
       emptyHitsAppend: Boolean, patchSafe: Boolean,
-      extra: Seq[TxLog.Action])(rewrite: DataFrame => DataFrame)(
-      fallback: => DataFrame): Unit = {
-    val hitRaw = knownHits.getOrElse(
-      graft.core.JobLabel(spark, s"keyed hit probe ${norm(name)}") {
-        val k = keys.select(col(tdef.pk).as("_graft_key"))
-        marked.join(k, marked(tdef.pk) <=> k("_graft_key"), "left_semi")
-          .select("_graft_file").distinct().collect()
-      }.map(_.getString(0))).filter(_.nonEmpty)
-    commitGranularOrFull(name, tdef, base, snap, hitRaw,
-      rewrite(hitFilesScan(snap, norm(name), hitRaw, marked)),
-      expectedSchema, emptyHitsAppend, patchSafe, extra)(fallback)
-  }
+      extra: Seq[TxLog.Action])(validate: => Unit)(
+      rewrite: DataFrame => DataFrame)(fallback: => DataFrame): Unit =
+    commitGranularOrFull(name, tdef, base, snap, expectedSchema,
+      emptyHitsAppend, patchSafe, extra)(validate) {
+      val hitRaw = hits.filter(_.nonEmpty)
+      (hitRaw, rewrite(hitFilesScan(snap, norm(name), hitRaw, marked)))
+    }(fallback)
+
+  /** ONE labelled job: the files of `marked` holding a PK in `keys`
+    * (null-safe, so a null-PK row is addressable). The caller picks the
+    * join strategy with a hint on `keys`.
+    */
+  private def probeHits(n: String, pk: String, marked: DataFrame,
+      keys: DataFrame): Array[String] =
+    graft.core.JobLabel(spark, s"keyed hit probe $n") {
+      val k = keys.select(col(pk).as("_graft_key"))
+      marked.join(k, marked(pk) <=> k("_graft_key"), "left_semi")
+        .select("_graft_file").distinct().collect()
+    }.map(_.getString(0))
 
   private def parentsOf(tdef: TableDef): Map[String, DataFrame] =
     parentsOf(txlog.snapshot(), tdef)
@@ -2357,7 +2387,7 @@ final class GraftDatabase private (
         // snapshot holds exactly one complete mask per file
         val fullMask = snap.dvs.get((n, rel)) match {
           case Some(old) =>
-            txlog.readFiles(Seq(old), None).select(col(pk))
+            txlog.readFiles(n, Seq(old), None).select(col(pk))
               .unionByName(newPks).distinct()
           case None => newPks.distinct()
         }
@@ -2419,37 +2449,38 @@ final class GraftDatabase private (
     }
   }
 
-  /** The shared tail of every single-table granular DML: commit the
-    * file-granular PUT when it holds, else fall back to the full
-    * rewrite. `emptyHitsAppend` is upsert's shape (no replaced key =
-    * pure append); update/updateMany treat an empty hit set as a
-    * mapping failure instead.
+  /** The shared tail of every single-table granular DML: `validate`
+    * runs on the caller's thread while `touched` — the hit files and
+    * their replacement rows — is worked out and staged beside it
+    * ([[overlapped]]); the commit waits for both. The file-granular PUT
+    * is staged when the driver-side mapping facts admit it
+    * ([[fileGranularAction]]), else `fallback` as a full rewrite — one
+    * staged write either way. `emptyHitsAppend` is upsert's shape (no
+    * replaced key = pure append); update/updateMany treat an empty hit
+    * set as a mapping failure instead.
     */
   private def commitGranularOrFull(name: String, tdef: TableDef, base: Long,
       snap: TxLog.Snapshot,
-      hitRaw: Array[String], touched: DataFrame,
       expectedSchema: org.apache.spark.sql.types.StructType,
       emptyHitsAppend: Boolean, patchSafe: Boolean = false,
-      extra: Seq[TxLog.Action] = Nil)(
+      extra: Seq[TxLog.Action] = Nil)(validate: => Unit)(
+      touched: => (Array[String], DataFrame))(
       fallback: => DataFrame): Unit = {
     enforceLimitSize()
-    val granular =
-      if (hitRaw.nonEmpty || emptyHitsAppend)
-        fileGranularAction(snap, name, hitRaw, touched.schema, expectedSchema,
-          patchSafe, txlog.stage(norm(name), touched))
-      else None
-    granular match {
-      case Some(action) =>
-        txlog.commit(
-          (action +: widenSyncActions(norm(name), touched.schema,
-            expectedSchema)) ++ extra,
-          readVersion = base,
-          readTables = tdef.fks.map(_.parentTable).toSet)
-        invalidateSqlEngine()
-      case None =>
-        writeReplace(name, fallback, base,
-          tdef.fks.map(_.parentTable).toSet, extra)
+    val n = norm(name)
+    val actions = overlapped(validate) {
+      val (hitRaw, rows) = touched
+      val granular =
+        if (hitRaw.nonEmpty || emptyHitsAppend)
+          fileGranularAction(snap, name, hitRaw, rows.schema, expectedSchema,
+            patchSafe, txlog.stage(n, rows))
+        else None
+      granular.map(_ +: widenSyncActions(n, rows.schema, expectedSchema))
+        .getOrElse(replaceActions(n, fallback)) ++ extra
     }
+    txlog.commit(actions, readVersion = base,
+      readTables = tdef.fks.map(_.parentTable).toSet)
+    invalidateSqlEngine()
   }
 
   /** The schema actions a GRANULAR commit staging `touched` must carry:
@@ -2476,16 +2507,19 @@ final class GraftDatabase private (
       base: Long = -1L, readTables: Set[String] = Set.empty,
       extra: Seq[TxLog.Action] = Nil): Unit = {
     enforceLimitSize()
-    // stage-then-commit: the plan reads the table's CURRENT immutable
-    // files while the staged write lands in a fresh directory — fully
-    // distributed, never a self-overwrite, atomic at the log publish
-    val n = norm(name)
-    txlog.commit(
-      (TxLog.Put(n, txlog.stage(n, df)) +:
-        schemaSyncActions(n, df.schema, fullReplace = true)) ++ extra,
+    txlog.commit(replaceActions(norm(name), df) ++ extra,
       readVersion = base, readTables = readTables)
     invalidateSqlEngine()
   }
+
+  /** Table `n`'s whole binding replaced by `df`, staged. Stage-then-
+    * commit: the plan reads the table's CURRENT immutable files while
+    * the staged write lands in a fresh directory — fully distributed,
+    * never a self-overwrite, atomic at the log publish.
+    */
+  private def replaceActions(n: String, df: DataFrame): Seq[TxLog.Action] =
+    TxLog.Put(n, txlog.stage(n, df)) +:
+      schemaSyncActions(n, df.schema, fullReplace = true)
 
   // ---- engine pragmas (EnginePragmas.cs) ----------------------------------
 
@@ -3010,7 +3044,6 @@ final class GraftDatabase private (
           ()
         case None =>
           engine.modified.foreach { case (n, state0) =>
-            check(n, state0)
             val state = decollate(state0)
             // File-granular persist, like the facade DML: the statement
             // knows which rows it touched (changedRows/deletedRows), so
@@ -3031,7 +3064,7 @@ final class GraftDatabase private (
                 // left the state unchanged — persist nothing, and drop
                 // the engine: it still lists the table as modified, so
                 // the next statement would rewrite it in full
-                if (keys.isEmpty) invalidateSqlEngine()
+                if (keys.isEmpty) { check(n, state0); invalidateSqlEngine() }
                 else {
                   // hit files resolve at the ENGINE's snapshot — the
                   // data the statement actually read — and so does the
@@ -3056,10 +3089,11 @@ final class GraftDatabase private (
                   // changed rows land beside them
                   val gone = keys.select(col(tdef.pk).as("_graft_key"))
                   keyedRewrite(n, tdef, engineBase,
-                    txlog.snapshotAt(engineBase), marked, keys, None,
+                    txlog.snapshotAt(engineBase), marked,
+                    probeHits(n, tdef.pk, marked, keys),
                     marked.drop("_graft_file").schema,
                     emptyHitsAppend = true, patchSafe = stmtPatchSafe,
-                    extra = Nil) { scan =>
+                    extra = Nil)(check(n, state0)) { scan =>
                     changed.foldLeft(scan.join(gone,
                       scan(tdef.pk) <=> gone("_graft_key"), "left_anti"))(
                       _.unionByName(_, allowMissingColumns = true))
@@ -3071,6 +3105,7 @@ final class GraftDatabase private (
                 // read), with FK parents in the read set — a concurrent
                 // writer since then must conflict, not be silently
                 // overwritten
+                check(n, state0)
                 writeReplace(n, state, base = engineBase, readTables =
                   defs.get(n).fold(Set.empty[String])(
                     _.fks.map(_.parentTable).toSet))

@@ -528,7 +528,7 @@ final class TxLog(spark: SparkSession, root: String,
     }.toMap
     def mark(d: DataFrame): DataFrame =
       fileCol.fold(d)(c => d.withColumn(c, input_file_name()))
-    if (dvOf.isEmpty) return mark(readFiles(rel, schemaJson))
+    if (dvOf.isEmpty) return mark(readFiles(table, rel, schemaJson))
     // DV sidecars carry the pk under its PHYSICAL name (they stage like
     // data); the data read surfaces LOGICAL names — rename mask columns
     // through the pin's mapping so the anti-join keys line up after a
@@ -544,7 +544,8 @@ final class TxLog(spark: SparkSession, root: String,
     val maskedRel = rel.filter(dvOf.contains)
     val plainRel = rel.filterNot(dvOf.contains)
     val plain =
-      if (plainRel.isEmpty) None else Some(mark(readFiles(plainRel, schemaJson)))
+      if (plainRel.isEmpty) None
+      else Some(mark(readFiles(table, plainRel, schemaJson)))
     // staged data files are always root-relative Tables/<t>/<dir>/<part>
     // (4 components) — the suffix identity the single-scan path keys
     // on. The scan side derives its key from input_file_name()'s URI,
@@ -558,22 +559,23 @@ final class TxLog(spark: SparkSession, root: String,
     val masked: DataFrame =
       if (maskedRel.size <= TxLog.DvPerFileJoinMax || !suffixSafe)
         maskedRel.map { f =>
-          val mask = logicalMask(readFiles(Seq(dvOf(f)), None))
+          val mask = logicalMask(readFiles(table, Seq(dvOf(f)), None))
           val pk = mask.columns.head
           val side = mask.select(pk).distinct()
           val hinted =
             if (dvSizeBytes(dvOf(f)) <= TxLog.DvBroadcastMaxBytes)
               broadcast(side)
             else side
-          mark(readFiles(Seq(f), schemaJson)).join(hinted, Seq(pk), "left_anti")
+          mark(readFiles(table, Seq(f), schemaJson))
+            .join(hinted, Seq(pk), "left_anti")
         }.reduce(_ unionByName _)
       else {
         val masks = maskedRel.map { f =>
-          val m = logicalMask(readFiles(Seq(dvOf(f)), None))
+          val m = logicalMask(readFiles(table, Seq(dvOf(f)), None))
           m.select(col(m.columns.head), lit(f).as("_graft_dv_file"))
         }.reduce(_ unionByName _)
         val pk = masks.columns.head
-        val scanned = mark(readFiles(maskedRel, schemaJson)).withColumn(
+        val scanned = mark(readFiles(table, maskedRel, schemaJson)).withColumn(
           "_graft_dv_scan_file", substring_index(input_file_name(), "/", -4))
         scanned.join(masks,
           scanned(pk) === masks(pk) &&
@@ -744,7 +746,7 @@ final class TxLog(spark: SparkSession, root: String,
     * one read implementation for explicit file lists (the change feed
     * and OPTIMIZE read exchanged/backlog subsets through it).
     */
-  def readFiles(rel: Seq[String],
+  def readFiles(table: String, rel: Seq[String],
       schemaJson: Option[String] = None): DataFrame = {
     val reader = spark.read.options(ioOptions)
     schemaJson match {
@@ -767,25 +769,65 @@ final class TxLog(spark: SparkSession, root: String,
             .toDF(logical.map(_.name): _*)
         }
       case None =>
-        // schema-INFERRED reads open a footer on the driver at every
-        // plan build; files are immutable, so the inferred schema of a
-        // binding never changes — cache it per file list and every
-        // later read of the same binding plans footer-free
+        // schema-INFERRED reads run a Spark job that opens a footer at
+        // every plan build; files are immutable, so the inferred schema
+        // of a binding never changes — cache it per file list and every
+        // later read of the same binding plans footer-free. A list of
+        // files this log staged, all with one schema, needs no job at
+        // all: that schema is what inference would read from any of
+        // them. Any other list (heterogeneous, foreign or unrecorded
+        // files) infers as before, under a job label.
         val key = rel.toVector
-        val cached = inferredSchemas.get(key)
-        if (cached != null)
-          reader.schema(cached).parquet(rel.map(r => s"$root/$r"): _*)
-        else {
-          val df = reader.parquet(rel.map(r => s"$root/$r"): _*)
-          if (inferredSchemas.size > 4096) inferredSchemas.clear()
-          inferredSchemas.put(key, df.schema)
-          df
+        val paths = rel.map(r => s"$root/$r")
+        Option(inferredSchemas.get(key))
+          .orElse(sharedStagedSchema(rel)) match {
+          case Some(known) => reader.schema(known).parquet(paths: _*)
+          case None =>
+            val df = graft.core.JobLabel(spark, s"infer schema $table") {
+              reader.parquet(paths: _*)
+            }
+            if (inferredSchemas.size > 4096) inferredSchemas.clear()
+            inferredSchemas.put(key, df.schema)
+            df
         }
     }
   }
 
   private val inferredSchemas = new java.util.concurrent.ConcurrentHashMap[
     Vector[String], org.apache.spark.sql.types.StructType]()
+
+  // rel path → the Spark schema read from its footer at stage time, for
+  // every file this log staged (immutable files: an entry never goes
+  // stale). Equal schemas share one instance, so an entry costs a map
+  // slot, not a schema; bounded defensively like the other caches.
+  private val stagedSchemas = new java.util.concurrent.ConcurrentHashMap[
+    String, org.apache.spark.sql.types.StructType]()
+  private val schemaInstances = new java.util.concurrent.ConcurrentHashMap[
+    org.apache.spark.sql.types.StructType,
+    org.apache.spark.sql.types.StructType]()
+
+  private def recordSchema(rel: String,
+      schema: org.apache.spark.sql.types.StructType): Unit = {
+    if (schemaInstances.size > 1024) schemaInstances.clear()
+    if (stagedSchemas.size > 262144) stagedSchemas.clear()
+    val shared = schemaInstances.putIfAbsent(schema, schema)
+    stagedSchemas.put(rel, if (shared == null) schema else shared)
+  }
+
+  /** The schema recorded when `rel` was staged (None = not staged by
+    * this log, or its footer was unreadable).
+    */
+  private[graft] def stagedSchema(rel: String)
+      : Option[org.apache.spark.sql.types.StructType] =
+    Option(stagedSchemas.get(rel))
+
+  /** The one schema every file of `rel` was staged with; None when a
+    * file has none recorded or two differ.
+    */
+  private def sharedStagedSchema(rel: Seq[String])
+      : Option[org.apache.spark.sql.types.StructType] =
+    rel.headOption.flatMap(stagedSchema).filter(s =>
+      rel.forall(r => stagedSchema(r).contains(s)))
 
   /** Absolute paths of a table's live data files (diagnostics/manifest). */
   def liveFiles(table: String): Seq[String] =
@@ -822,26 +864,29 @@ final class TxLog(spark: SparkSession, root: String,
       // without usable stats) simply never prunes.
       // footers are independent local reads — harvest them in parallel
       // so a wide staged write doesn't serialize O(parts) opens on the
-      // driver before its commit can publish
+      // driver before its commit can publish. The same footer yields
+      // the file's Spark schema, which readFiles uses instead of
+      // inferring one with a job.
+      val schemaOf = org.apache.spark.sql.graft.ParquetSchemaShim.schemaOf(spark)
+      def harvest(r: String) =
+        r -> FileStatsUtil.harvest(s"$root/$r", ioOptions, schemaOf)
       val harvested =
-        if (all.size <= 1)
-          all.map(r => r -> FileStatsUtil.fromFooterWithRows(
-            s"$root/$r", ioOptions))
+        if (all.size <= 1) all.map(harvest)
         else {
           val pool = java.util.concurrent.Executors
             .newFixedThreadPool(math.min(8, all.size))
           try {
             implicit val ec: scala.concurrent.ExecutionContext =
               scala.concurrent.ExecutionContext.fromExecutorService(pool)
-            val fs = all.map(r => scala.concurrent.Future(
-              r -> FileStatsUtil.fromFooterWithRows(s"$root/$r", ioOptions)))
+            val fs = all.map(r => scala.concurrent.Future(harvest(r)))
             scala.concurrent.Await.result(
               scala.concurrent.Future.sequence(fs),
               scala.concurrent.duration.Duration(120, "s"))
           } finally pool.shutdown()
         }
-      harvested.foreach { case (r, (js, _)) =>
-        js.foreach(stagedStats.put(r, _))
+      harvested.foreach { case (r, f) =>
+        f.stats.foreach(stagedStats.put(r, _))
+        f.schema.foreach(recordSchema(r, _))
       }
       // a multi-partition plan writes one part PER PARTITION, including
       // empty ones (a granular rewrite's untouched partitions, a
@@ -851,7 +896,7 @@ final class TxLog(spark: SparkSession, root: String,
       // If EVERY part is empty (an empty table state), keep one so the
       // binding still yields a readable zero-row frame with a schema.
       val nonEmpty = harvested
-        .filterNot { case (_, (_, rows)) => rows.contains(0L) }.map(_._1)
+        .filterNot { case (_, f) => f.rows.contains(0L) }.map(_._1)
       if (nonEmpty.nonEmpty) nonEmpty else all.take(1)
     } finally s.close()
   }

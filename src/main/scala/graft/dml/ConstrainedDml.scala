@@ -75,9 +75,14 @@ object ConstrainedDml {
     * absent, None, sends the batch to the bulk path). Only a frame that
     * the optimizer folds into one local relation is held; any other
     * frame — a table read, however small — takes the bulk path.
+    *
+    * `held` is `df`'s rows when the statement already read them with
+    * [[heldRows]] (reading them costs a plan and a conversion per call);
+    * None reads them here.
     */
   private[graft] def localBatch(df: DataFrame,
-      compared: Seq[(String, Seq[Option[DataType]])]): Option[LocalBatch] = {
+      compared: Seq[(String, Seq[Option[DataType]])],
+      held: Option[Array[Row]] = None): Option[LocalBatch] = {
     val fields = compared.map { case (c, _) => c -> fieldOf(df.schema, c) }
     val comparable = compared.zip(fields).forall { case ((_, others), (_, at)) =>
       at.exists { i =>
@@ -85,12 +90,19 @@ object ConstrainedDml {
         driverComparable(t) && others.forall(_.contains(t))
       }
     }
-    lazy val limit = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
     if (!comparable) None
-    else LocalRowsShim.localRows(df, SmallBatchMaxRows)
+    else held.orElse(heldRows(df))
+      .map(LocalBatch(_, fields.map { case (c, at) => c -> at.get }.toMap))
+  }
+
+  /** `df`'s rows when it is a small local relation by the object doc's
+    * row and size criteria (column types aside), read with no job.
+    */
+  private[graft] def heldRows(df: DataFrame): Option[Array[Row]] = {
+    lazy val limit = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    LocalRowsShim.localRows(df, SmallBatchMaxRows)
       .filter(_ => limit >= 0 &&
         df.queryExecution.optimizedPlan.stats.sizeInBytes <= limit)
-      .map(LocalBatch(_, fields.map { case (c, at) => c -> at.get }.toMap))
   }
 
   /** The type of `df`'s column `c` (see [[fieldOf]]), None when absent. */
@@ -215,12 +227,14 @@ object ConstrainedDml {
     * an FK, in the parent — else planned by Spark.
     */
   private def sideOf(b: CheckBuilder, table: TableDef, incoming: DataFrame,
-      against: Seq[DataFrame], parents: Map[String, DataFrame]): Side =
+      against: Seq[DataFrame], parents: Map[String, DataFrame],
+      held: Option[Array[Row]] = None): Side =
     localBatch(incoming,
       (table.pk +: (table.uniqueCols ++ table.fks.map(_.childCol))).map(c =>
         c -> against.map(typeOf(_, c))) ++
       table.fks.map(fk => fk.childCol ->
-        Seq(parents.get(fk.parentTable).flatMap(typeOf(_, fk.parentCol)))))
+        Seq(parents.get(fk.parentTable).flatMap(typeOf(_, fk.parentCol)))),
+      held)
       .map(lb => new LocalSide(b, lb))
       .getOrElse(new FrameSide(b, incoming))
 
@@ -564,7 +578,14 @@ object ConstrainedDml {
     * with no join and no job to build one.
     */
   def upsert(existing: DataFrame, incoming: DataFrame, pk: String): DataFrame =
-    localBatch(incoming, Seq(pk -> Seq(typeOf(existing, pk)))) match {
+    upsert(existing, incoming, pk, None)
+
+  /** [[upsert]] with `incoming`'s rows when the statement holds them
+    * (see [[localBatch]]).
+    */
+  private[graft] def upsert(existing: DataFrame, incoming: DataFrame,
+      pk: String, held: Option[Array[Row]]): DataFrame =
+    localBatch(incoming, Seq(pk -> Seq(typeOf(existing, pk))), held) match {
       case Some(lb) =>
         val at = lb.fields(pk)
         val ks = lb.rows.toSeq.map(_.get(at)).filter(_ != null).distinctBy(key)
@@ -604,9 +625,17 @@ object ConstrainedDml {
       incoming: DataFrame,
       result: DataFrame,
       parents: Map[String, DataFrame],
-      pkImmutable: Boolean = false): Seq[Violation] = {
+      pkImmutable: Boolean = false): Seq[Violation] =
+    validateUpdate(table, incoming, None, result, parents, pkImmutable)
+
+  /** [[validateUpdate]] with `incoming`'s rows when the statement holds
+    * them (see [[localBatch]]).
+    */
+  private[graft] def validateUpdate(table: TableDef, incoming: DataFrame,
+      held: Option[Array[Row]], result: DataFrame,
+      parents: Map[String, DataFrame], pkImmutable: Boolean): Seq[Violation] = {
     val b = new CheckBuilder(table.name)
-    val side = sideOf(b, table, incoming, Seq(result), parents)
+    val side = sideOf(b, table, incoming, Seq(result), parents, held)
     // Null-PK rows cannot be identified as "self" by the PK anti-join
     // (null never equi-matches), so they are EXCLUDED from `unchanged`
     // and compared separately against the non-null-PK slice of the

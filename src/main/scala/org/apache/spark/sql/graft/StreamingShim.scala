@@ -98,3 +98,29 @@ object LocalRowsShim {
       .queryExecution.analyzed.collectLeaves()
       .forall(_.isInstanceOf[LocalRelation])
 }
+
+/** Parquet footer → Spark schema through Spark's own conversion (the
+  * converter and `StructType.asNullable` are internal API).
+  */
+object ParquetSchemaShim {
+  import org.apache.parquet.hadoop.Footer
+  import org.apache.parquet.hadoop.metadata.ParquetMetadata
+  import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+    ParquetToSparkSchemaConverter}
+  import org.apache.spark.sql.types.StructType
+
+  /** The schema `spark.read.parquet(file).schema` gives a file with this
+    * footer: the Spark schema its writer recorded (or the footer's
+    * parquet schema converted under this session's parquet read confs),
+    * every field nullable as a file-source relation reports it.
+    */
+  def schemaOf(spark: org.apache.spark.sql.SparkSession)
+      : (String, ParquetMetadata) => StructType = {
+    val converter = new ParquetToSparkSchemaConverter(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+        .sessionState.conf)
+    (path, footer) => ParquetFileFormat.readSchemaFromFooter(
+      new Footer(new org.apache.hadoop.fs.Path(path), footer), converter)
+      .asNullable
+  }
+}

@@ -10,14 +10,16 @@ import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, Spark
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.catalog.GraftDatabase
+import graft.catalog.{GraftDatabase, TxLog}
 import graft.dml.ConstrainedDml._
 import graft.plans.PlanGates
 
 /** Job and file budgets of small writes on an IoT-ingest-shaped
   * database (points; readings and point_state, each with an FK to
   * points): a small batch is checked with a fixed handful of Spark jobs
-  * and opens no existing file its keys cannot be in.
+  * and opens no existing file its keys cannot be in; a read after a
+  * write infers no schema; and a keyed write whose check fails while
+  * its stage runs commits nothing.
   */
 class SmallWriteBudgetSpec extends AnyFunSuite {
   import SparkSessionFixture._
@@ -122,5 +124,98 @@ class SmallWriteBudgetSpec extends AnyFunSuite {
     assert(db.count("point_state") == Points)
     assert(db.table("point_state").filter($"value" === 2.0).count() ==
       (1 to Points by 5).size)
+  }
+
+  private def readingRows(from: Int, n: Int) = (from until from + n).map(i =>
+    (i.toLong, i % Points + 1, i.toDouble)).toDF("reading_id", "point_id", "value")
+
+  test("an insert after an insert and an upsert after a full rewrite run " +
+    "only labelled jobs, none of them a schema inference") {
+    val db = ingestDb("budget-infer")
+    db.insert("readings", readingRows(Points, 500))
+    val (inserts, _) = observed(db.insert("readings", readingRows(Points + 500, 500)))
+    // every point is hit: every file of point_state rewrites in full
+    db.upsert("point_state", (1 to Points).map(p => (p, 1.0)).toDF("point_id", "value"))
+    val (upserts, _) = observed(db.upsert("point_state",
+      (1 to Points by 7).map(p => (p, 2.0)).toDF("point_id", "value")))
+    val jobs = inserts ++ upserts
+    assert(jobs.nonEmpty && jobs.forall(_.startsWith("graft: ")), jobs)
+    assert(!jobs.exists(_.contains("infer schema")), jobs)
+    assert(db.count("readings") == Points + 1000)
+    assert(db.table("point_state").filter($"value" === 2.0).count() ==
+      (1 to Points by 7).size)
+  }
+
+  test("an unpinned table of files with different columns reads with " +
+    "Spark's inferred schema in either file order, before and after a write") {
+    val root = Files.createTempDirectory("graft-budget-hetero").toString
+    val log = new TxLog(spark, root)
+    val a = log.stage("t", Seq((1, "x")).toDF("id", "a"))
+    val b = log.stage("t", Seq((2, 2.5)).toDF("id", "b"))
+    log.commit(Seq(TxLog.Put("t", a ++ b)))
+    // each list's schema as Spark infers it, then as the log reads it,
+    // with the jobs of the log's read
+    def read(rel: Seq[String]): Seq[String] = {
+      val want = spark.read.parquet(rel.map(r => s"$root/$r"): _*).schema
+      val (jobs, _) = observed(assert(log.readFiles("t", rel).schema == want, rel))
+      jobs
+    }
+    assert(read(a ++ b) == Seq("graft: infer schema t"))
+    assert(read(b ++ a) == Seq("graft: infer schema t"))
+    val c = log.stage("t", Seq((3, "y")).toDF("id", "a"))
+    log.commit(Seq(TxLog.Add("t", c)))
+    read(a ++ b ++ c)
+    read(c ++ b ++ a)
+    assert(read(a ++ c).isEmpty) // one recorded schema: no job
+    (a ++ b ++ c).foreach(r => assert(
+      log.stagedSchema(r).contains(spark.read.parquet(s"$root/$r").schema), r))
+  }
+
+  test("an upsert, update or mergeBatch whose FK check fails while its " +
+    "stage runs commits nothing and reports the violation") {
+    val db = ingestDb("budget-fk-fail")
+    val version = db.logVersion
+    val rows = db.table("readings").collect().map(_.toString).sorted.toSeq
+    // reading 7 exists; its new point does not
+    val bad = Seq((7L, Points + 1, 1.0)).toDF("reading_id", "point_id", "value")
+    val writes: Seq[(String, () => Any)] = Seq(
+      "upsert" -> (() => db.upsert("readings", bad)),
+      "update" -> (() => db.update("readings", bad)),
+      "mergeBatch" -> (() => db.mergeBatch("readings", bad,
+        Seq.empty[Long].toDF("reading_id"), "app", 1L)))
+    writes.foreach { case (what, write) =>
+      val (jobs, _) = observed {
+        val e = intercept[IllegalStateException](write())
+        assert(e.getMessage == "constraint violations: " +
+          "List(Violation(fk_missing,readings,point_id,1))", what)
+      }
+      assert(jobs.contains("graft: stage readings"), s"$what: $jobs")
+      assert(db.logVersion == version, what)
+      assert(db.table("readings").collect().map(_.toString).sorted.toSeq ==
+        rows, what)
+    }
+  }
+
+  test("mergeBatch checks a small batch's distinct-PK claim on the driver") {
+    val db = GraftDatabase(spark, "budget-merge-claim",
+      Files.createTempDirectory("graft-budget-merge-claim").toString)
+      .defineTable(TableDef("t", "id"))
+    db.insert("t", Seq((1, "a"), (2, "b")).toDF("id", "v"))
+    val version = db.logVersion
+    val noDeletes = Seq.empty[Int].toDF("id")
+    val lies = Seq(
+      Seq((Option(1), "x"), (Option(1), "y")).toDF("id", "v"),
+      Seq((Option(3), "x"), (Option.empty[Int], "y")).toDF("id", "v"))
+    lies.foreach { lie =>
+      val (jobs, _) = observed(intercept[IllegalArgumentException](
+        db.mergeBatch("t", lie, noDeletes, "app", 1L,
+          replacementsDistinctByPk = true)))
+      assert(jobs.isEmpty, jobs)
+      assert(db.logVersion == version)
+    }
+    assert(db.mergeBatch("t", Seq((1, "x"), (3, "c")).toDF("id", "v"),
+      noDeletes, "app", 1L, replacementsDistinctByPk = true))
+    assert(db.table("t").orderBy("id").collect().map(r =>
+      (r.getInt(0), r.getString(1))).toSeq == Seq((1, "x"), (2, "b"), (3, "c")))
   }
 }

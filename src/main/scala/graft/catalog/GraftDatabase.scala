@@ -130,15 +130,15 @@ final class GraftDatabase private (
     */
   def validateConstraints(name: String): Seq[ConstrainedDml.Violation] = {
     val tdef = tableDef(name)
-    if (!tableExists(name)) return Nil
-    val state = table(name)
+    val snap = txlog.snapshot()
+    val state = readPinned(snap, tdef.name).getOrElse(return Nil)
     // a late-declared FK's parent may hold no committed data yet: that
     // is an EMPTY parent (every non-null child value is fk_missing; an
     // all-null child column is vacuously clean), not a crash — the
     // schema-compatible empty frame comes from the child itself
     val parents = tdef.fks.map { fk =>
-      fk.parentTable -> (if (tableExists(fk.parentTable)) table(fk.parentTable)
-      else state.select(col(fk.childCol).as(fk.parentCol)).limit(0))
+      fk.parentTable -> readPinned(snap, fk.parentTable).getOrElse(
+        state.select(col(fk.childCol).as(fk.parentCol)).limit(0))
     }.toMap
     ConstrainedDml.validateUpdate(spark, tdef, state, state, parents)
   }
@@ -159,27 +159,30 @@ final class GraftDatabase private (
     * keeps answering with its snapshot's data) across later commits —
     * reader/writer isolation without blocking.
     */
-  def table(name: String): DataFrame =
-    txlog.read(norm(name)).getOrElse(throw new IllegalArgumentException(
-      s"table '${norm(name)}' does not exist (no committed data)"))
+  def table(name: String): DataFrame = tableIn(txlog.snapshot(), norm(name))
 
   /** [[table]] with each row's backing data file materialized as
-    * `fileCol` — the seam for bounded-probe writers
-    * ([[graft.streaming.MaterializedView]]) that already read exactly
-    * a batch's affected rows: carrying the file identity through that
-    * probe lets them hand [[mergeBatch]] its hit files
-    * (`knownHitFiles`) instead of paying a second whole-table probe
-    * per batch.
+    * `fileCol`, and the log version the frame reads — the seam for
+    * bounded-probe writers ([[graft.streaming.MaterializedView]]) that
+    * already read exactly a batch's affected rows: carrying the file
+    * identity through that probe lets them hand [[mergeBatch]] its hit
+    * files (`knownHitFiles`, with this version) instead of paying a
+    * second whole-table probe per batch.
     */
-  def tableMarked(name: String, fileCol: String): DataFrame =
-    txlog.readMarked(norm(name), fileCol)
-      .getOrElse(throw new IllegalArgumentException(
-        s"table '${norm(name)}' does not exist (no committed data)"))
+  def tableMarked(name: String, fileCol: String): (DataFrame, Long) = {
+    val snap = txlog.snapshot()
+    val n = norm(name)
+    val rel = snap.tables.getOrElse(n, throw noTable(n))
+    (txlog.readFilesMarked(snap, n, rel, snap.schemas.get(n), fileCol),
+      snap.version)
+  }
 
   /** The table's live data files at the current snapshot (diagnostics,
     * manifest queries, layout inspection).
     */
-  def liveFiles(name: String): Seq[String] = txlog.liveFiles(norm(name))
+  def liveFiles(name: String): Seq[String] =
+    txlog.snapshot().tables.getOrElse(norm(name), Vector.empty)
+      .map(r => s"$root/$r")
 
   /** Current committed snapshot (diagnostics/tests: deletion-vector and
     * stats bindings are otherwise invisible from the facade).
@@ -203,7 +206,7 @@ final class GraftDatabase private (
     * readable (excludes a zero-byte in-flight publish slot). The
     * change-feed source's offset.
     */
-  def settledLogVersion: Long = txlog.settledVersion
+  def settledLogVersion: Long = txlog.snapshot().version
 
   /** A session scoped for STREAMING queries over this database's feed:
     * `spark.newSession()` (separate conf, shared catalog/executors)
@@ -350,12 +353,15 @@ final class GraftDatabase private (
             // advance the shared log, so a stream over a table created
             // mid-log sees earlier versions as empty batches. Shape the
             // empty feed from the stored schema (or the head binding)
-            txlog.storedSchema(n)
-              .map(sch => spark.createDataFrame(
-                spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sch))
-              .orElse(txlog.read(n))
-              .getOrElse(throw new IllegalArgumentException(
-                s"table '$n' has no data in either version"))
+            locally {
+              val head = txlog.snapshot()
+              head.schemas.get(n).map(js => spark.createDataFrame(
+                spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+                TxLog.parseSchema(js)))
+                .orElse(readPinned(head, n))
+                .getOrElse(throw new IllegalArgumentException(
+                  s"table '$n' has no data in either version"))
+            }
         schemaSource.limit(0).withColumn("_change_type", lit(""))
       case _ =>
         val remDf =
@@ -463,7 +469,7 @@ final class GraftDatabase private (
     * retention like any snapshot read.
     */
   def changesSince(name: String, fromVersion: Long): (DataFrame, Long) = {
-    val head = txlog.settledVersion
+    val head = txlog.snapshot().version
     (changes(name, fromVersion, head), head)
   }
 
@@ -491,9 +497,10 @@ final class GraftDatabase private (
   def restore(name: String, version: Long): Long = {
     requireNotRetired(); requireNoOpenTx()
     val n = norm(name)
-    require(version <= txlog.settledVersion,
+    val head = txlog.snapshot()
+    require(version <= head.version,
       s"restore($name, $version): version is beyond the committed head " +
-        s"(${txlog.settledVersion}) — nothing to roll back to")
+        s"(${head.version}) — nothing to roll back to")
     require(txlog.resolvableAt(version),
       s"restore($name, $version): version truncated by vacuum")
     val snapThen = txlog.snapshotAt(version)
@@ -516,7 +523,6 @@ final class GraftDatabase private (
         java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis()))
       catch { case _: java.io.IOException => () }
     }
-    val base = txlog.settledVersion
     val restored = txlog.readFilesMasked(snapThen, n, files,
       snapThen.schemas.get(n))
     // constraint re-validation: restore must not bypass what DML
@@ -525,12 +531,13 @@ final class GraftDatabase private (
     // references a key the rollback removes (the restrict walk)
     val tdef = tableDef(n)
     requireClean(ConstrainedDml.validateUpdate(
-      spark, tdef, restored, restored, parentsOf(tdef)))
+      spark, tdef, restored, restored, parentsOf(head, tdef)))
     defs.values.foreach { child =>
-      child.fks.filter(fk => norm(fk.parentTable) == n)
+      child.fks.filter(fk => norm(fk.parentTable) == n &&
+          norm(child.name) != n)
         .foreach { fk =>
-          if (tableExists(child.name) && norm(child.name) != n) {
-            val orphans = table(child.name)
+          readPinned(head, child.name).foreach { c =>
+            val orphans = c
               .join(restored.select(col(fk.parentCol)),
                 col(fk.childCol) === col(fk.parentCol), "left_anti")
               .limit(1).count()
@@ -548,13 +555,12 @@ final class GraftDatabase private (
     // but the table is pinned NOW — leaving the current pin would
     // misrepresent the restored state (columns added after v would
     // ghost in as nulls), so re-pin to v's actual file schema.
-    val headSnap = txlog.snapshot()
     val repin: Seq[TxLog.Action] =
-      if (snapThen.schemas.contains(n) || !headSnap.schemas.contains(n)) Nil
+      if (snapThen.schemas.contains(n) || !head.schemas.contains(n)) Nil
       else Seq(TxLog.Sch(n, restored.schema.json))
     val v = txlog.commit(
-      rebindActions(n, snapThen, headSnap) ++ repin,
-      readVersion = base,
+      rebindActions(n, snapThen, head) ++ repin,
+      readVersion = head.version,
       readTables = defs.values.filter(_.fks.exists(fk =>
         norm(fk.parentTable) == n)).map(d => norm(d.name)).toSet)
     invalidateSqlEngine()
@@ -569,18 +575,16 @@ final class GraftDatabase private (
       val msg = s"restore($name, $version): a concurrent vacuum " +
         s"reclaimed ${gone.size} restored file(s) — re-restore a " +
         "retained version"
-      if (txlog.resolvableAt(base)) {
-        try {
-          // validated at the FAILED restore's own version: an
-          // interleaved commit on this table since then must conflict
-          // (the rollback would silently discard it otherwise)
-          txlog.commit(rebindActions(n, txlog.snapshotAt(base),
-            txlog.snapshot()), readVersion = v)
-          invalidateSqlEngine()
-        } catch { case e: Exception => throw new IllegalStateException(
-          s"$msg (rollback to pre-restore v$base ALSO failed: " +
-            s"${e.getMessage})", e) }
-      }
+      try {
+        // validated at the FAILED restore's own version: an
+        // interleaved commit on this table since then must conflict
+        // (the rollback would silently discard it otherwise)
+        txlog.commit(rebindActions(n, head, txlog.snapshotAt(v)),
+          readVersion = v)
+        invalidateSqlEngine()
+      } catch { case e: Exception => throw new IllegalStateException(
+        s"$msg (rollback to pre-restore v${head.version} ALSO failed: " +
+          s"${e.getMessage})", e) }
       throw new IllegalStateException(msg)
     }
     v
@@ -620,8 +624,7 @@ final class GraftDatabase private (
   def seek(name: String, column: String, lo: Any, hi: Any): DataFrame = {
     val n = norm(name)
     val snap = txlog.snapshot()
-    val files = snap.tables.getOrElse(n, throw new IllegalArgumentException(
-      s"table '$n' does not exist (no committed data)"))
+    val files = snap.tables.getOrElse(n, throw noTable(n))
     val probe = FileStatsUtil.probe(statsColumn(snap, n, column), lo, hi)
     val keep = files.filter(f => probe.admits(snap.stats.get((n, f))))
     val c = col(column)
@@ -638,10 +641,7 @@ final class GraftDatabase private (
     */
   private def statsColumn(snap: TxLog.Snapshot, n: String,
       column: String): String =
-    snap.schemas.get(n)
-      .map(js => org.apache.spark.sql.types.DataType.fromJson(js)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
-      .flatMap(pin => TxLog.logicalFields(pin)
+    pinOf(snap, n).flatMap(pin => TxLog.logicalFields(pin)
         .find(_.name.equalsIgnoreCase(column)).map(TxLog.physicalName))
       .getOrElse(column)
 
@@ -660,9 +660,9 @@ final class GraftDatabase private (
   def applyChanges(name: String, feed: DataFrame, appId: String,
       batchId: Long): Boolean = {
     requireNoOpenTx()
-    if (txlog.snapshot().txns.get(appId).exists(_ >= batchId)) return false
+    val snap = txlog.snapshot()
+    if (snap.txns.get(appId).exists(_ >= batchId)) return false
     val tdef = tableDef(name)
-    val base = txlog.settledVersion
     val n = norm(name)
     // ONE eager materialization of the feed diff, lineage truncated:
     // the staged write and the hit-file collect run concurrently below,
@@ -676,21 +676,21 @@ final class GraftDatabase private (
       val ins = f.filter(col("_change_type") === "insert")
         .drop("_change_type")
       val touchedKeys = f.select(col(tdef.pk)).distinct()
-      if (!tableExists(name)) {
+      if (!snap.tables.contains(n)) {
         // bootstrap: the first batch materializes the replica —
         // validation and staging run concurrently (see insert)
-        enforceLimitSize()
+        enforceLimitSize(snap)
         val staged = overlapped(requireClean(ConstrainedDml.validateUpdate(
-          spark, tdef, ins, ins, parentsOf(tdef))))(txlog.stage(n, ins))
+          spark, tdef, ins, ins, parentsOf(snap, tdef))))(
+          txlog.stage(snap, n, ins))
         txlog.commit(
           Seq(TxLog.Put(n, staged), TxLog.Txn(appId, batchId)),
-          readVersion = base,
+          readVersion = snap.version,
           readTables = tdef.fks.map(_.parentTable).toSet)
         invalidateSqlEngine()
         return true
       }
-      val snapNow = txlog.snapshot()
-      val marked = txlog.readMarked(n, "_graft_file").get
+      val marked = markedIn(snap, n)
       // ONE collect answers both the hit files AND the batch's
       // internal PK-duplicate check (per-query fixed cost dominates
       // small batches): a sentinel row carries the dup count — a real
@@ -717,24 +717,19 @@ final class GraftDatabase private (
         // nothing to do (deletes missed, empty batch) — but the batch
         // IS consumed: the marker alone commits, so a replay stays a
         // no-op and the cursor can advance
-        txlog.commit(Seq(TxLog.Txn(appId, batchId)), readVersion = base)
+        txlog.commit(Seq(TxLog.Txn(appId, batchId)),
+          readVersion = snap.version)
         invalidateSqlEngine()
         return true
       }
       // survivors of the hit files = rows whose PK the batch never
-      // touched; the batch's inserts land beside them. The collect
-      // above resolved the hit FILES, so the staged write reads
-      // EXACTLY those files as an explicit list — the batch's write
+      // touched; the batch's inserts land beside them (no hit file =
+      // a pure append). The collect above resolved the hit FILES, so
+      // the staged write reads EXACTLY those files — the batch's write
       // I/O is churn-file bytes, never a whole-replica semi-join scan
       // (at 100 TB the difference between "read the touched 128 MB"
       // and "rescan the table per batch")
-      val hitRel = hitRelOf(snapNow, n, hitRaw, s"applyChanges('$n')")
-      val touched =
-        if (hitRel.isEmpty) ins // pure append
-        else txlog.readFilesMasked(snapNow, n, hitRel)
-          .join(touchedKeys, Seq(tdef.pk), "left_anti")
-          .unionByName(ins, allowMissingColumns = true)
-      def result = table(name).join(touchedKeys, Seq(tdef.pk), "left_anti")
+      def result = tableIn(snap, n).join(touchedKeys, Seq(tdef.pk), "left_anti")
         .unionByName(ins, allowMissingColumns = true)
       // NEVER patch-safe: the batch inserts NEW PKs, and two concurrent
       // appliers (multi-source replication) committing commuting
@@ -742,12 +737,12 @@ final class GraftDatabase private (
       // fileGranularAction's gate documents; upsert stays absolute for
       // the same reason. The PK-duplicate scan already rode the collect
       // above.
-      commitGranularOrFull(name, tdef, base, txlog.snapshot(),
-        table(name).schema, emptyHitsAppend = true,
-        extra = Seq(TxLog.Txn(appId, batchId)))(
-        requireClean(ConstrainedDml.validateUpdate(
-          spark, tdef, ins, result, parentsOf(tdef), pkImmutable = true)))(
-        (hitRaw, touched))(result)
+      keyedRewrite(snap, tdef, marked, hitRaw, emptyHitsAppend = true,
+        patchSafe = false, extra = Seq(TxLog.Txn(appId, batchId)))(
+        requireClean(ConstrainedDml.validateUpdate(spark, tdef, ins, result,
+          parentsOf(snap, tdef), pkImmutable = true)))(
+        _.join(touchedKeys, Seq(tdef.pk), "left_anti")
+          .unionByName(ins, allowMissingColumns = true))(result)
       true
     } finally f.unpersist() // best-effort; checkpoint blocks GC-release
   }
@@ -767,8 +762,7 @@ final class GraftDatabase private (
     requireNotRetired(); requireNoOpenTx()
     val n = norm(name)
     val snap = txlog.snapshot()
-    val files = snap.tables.getOrElse(n, throw new IllegalArgumentException(
-      s"table '$n' does not exist (no committed data)"))
+    val files = snap.tables.getOrElse(n, throw noTable(n))
     // a REGISTERED clustering layout (ensureIndex / optimizeZorder)
     // takes precedence over bin-packing: DML churn since the last
     // clustering pass (new/rewritten files, DV masks) re-clusters the
@@ -788,9 +782,9 @@ final class GraftDatabase private (
       val reclustered = txlog.readFilesMasked(snap, n, files)
         .repartitionByRange(parts0, col(cols.head))
         .sortWithinPartitions(cols.head)
-      val staged = txlog.stage(n, reclustered)
+      val staged = txlog.stage(snap, n, reclustered)
       txlog.commit(
-        TxLog.Put(n, staged) +: schemaSyncActions(n, reclustered.schema),
+        TxLog.Put(n, staged) +: schemaSyncActions(snap, n, reclustered.schema),
         readVersion = snap.version)
       invalidateSqlEngine()
       writeClusterMeta(n, "range", cols, staged)
@@ -816,7 +810,7 @@ final class GraftDatabase private (
     // report what actually STAGED, not the planned partition count —
     // the scan may pack small inputs into fewer partitions than
     // ceil(bytes/target), and coalesce cannot split them back up
-    val staged = txlog.stage(n, packed)
+    val staged = txlog.stage(snap, n, packed)
     txlog.commit(Seq(TxLog.Patch(n, smallRel, staged)),
       readVersion = snap.version)
     invalidateSqlEngine()
@@ -845,8 +839,7 @@ final class GraftDatabase private (
         s"got ${zorderBy.mkString(", ")}")
     val n = norm(name)
     val snap = txlog.snapshot()
-    val files = snap.tables.getOrElse(n, throw new IllegalArgumentException(
-      s"table '$n' does not exist (no committed data)"))
+    val files = snap.tables.getOrElse(n, throw noTable(n))
     val df = txlog.readFilesMasked(snap, n, files)
     val cs = zorderBy.map(c => col(c).cast("double"))
     val gridBits = math.min(16, 62 / cs.size)
@@ -880,9 +873,9 @@ final class GraftDatabase private (
       .repartitionByRange(parts, col("_graft_z"))
       .sortWithinPartitions(col("_graft_z"))
       .drop("_graft_z")
-    val staged = txlog.stage(n, clustered)
+    val staged = txlog.stage(snap, n, clustered)
     txlog.commit(
-      TxLog.Put(n, staged) +: schemaSyncActions(n, clustered.schema),
+      TxLog.Put(n, staged) +: schemaSyncActions(snap, n, clustered.schema),
       readVersion = snap.version)
     invalidateSqlEngine()
     // register the layout so later OPTIMIZE calls re-assert it after
@@ -905,14 +898,9 @@ final class GraftDatabase private (
     requireNotRetired(); requireNoOpenTx()
     val n = norm(name)
     val snap = txlog.snapshot()
-    require(snap.tables.contains(n),
-      s"table '$n' does not exist (no committed data)")
+    if (!snap.tables.contains(n)) throw noTable(n)
     requireLegalColumnName(column)
-    // pin adoption must see the UNION of the live files' columns
-    // (heterogeneous un-pinned tables exist — a widening append on an
-    // un-pinned table leaves mixed files); a one-footer inference here
-    // would permanently hide the columns that footer happens to lack
-    val cur = txlog.storedSchema(n).getOrElse(txlog.mergedFileSchema(n))
+    val cur = currentSchema(snap, n)
     require(!TxLog.logicalFields(cur)
         .exists(_.name.equalsIgnoreCase(column)),
       s"column '$column' already exists on '$n'")
@@ -922,6 +910,24 @@ final class GraftDatabase private (
     txlog.commit(Seq(TxLog.Sch(n, next.json)), readVersion = snap.version)
     invalidateSqlEngine()
   }
+
+  /** Table `n`'s schema at `snap`: its pin, else the union of its
+    * files' columns. DDL pin adoption must see that union
+    * (heterogeneous un-pinned tables exist — a widening append on an
+    * un-pinned table leaves mixed files); a one-footer inference would
+    * permanently hide the columns that footer happens to lack.
+    */
+  private def currentSchema(snap: TxLog.Snapshot,
+      n: String): org.apache.spark.sql.types.StructType =
+    pinOf(snap, n).getOrElse(txlog.mergedFileSchema(snap.tables(n)))
+
+  /** Table `n`'s log-held schema at `snap`, when one was committed
+    * (addColumn / a write that widened it). Tables without one read
+    * with parquet footer inference.
+    */
+  private def pinOf(snap: TxLog.Snapshot,
+      n: String): Option[org.apache.spark.sql.types.StructType] =
+    snap.schemas.get(n).map(TxLog.parseSchema)
 
   /** `f` mapped to a FRESH physical name when its logical name's
     * physical identity is still CLAIMED in `cur` (a dropped column's
@@ -966,10 +972,9 @@ final class GraftDatabase private (
     requireNotRetired(); requireNoOpenTx()
     val n = norm(name)
     val snap = txlog.snapshot()
-    require(snap.tables.contains(n),
-      s"table '$n' does not exist (no committed data)")
+    if (!snap.tables.contains(n)) throw noTable(n)
     requireLegalColumnName(to)
-    val cur = txlog.storedSchema(n).getOrElse(txlog.mergedFileSchema(n))
+    val cur = currentSchema(snap, n)
     val f = TxLog.logicalFields(cur)
       .find(_.name.equalsIgnoreCase(from))
       .getOrElse(throw new IllegalArgumentException(
@@ -1000,9 +1005,8 @@ final class GraftDatabase private (
     requireNotRetired(); requireNoOpenTx()
     val n = norm(name)
     val snap = txlog.snapshot()
-    require(snap.tables.contains(n),
-      s"table '$n' does not exist (no committed data)")
-    val cur = txlog.storedSchema(n).getOrElse(txlog.mergedFileSchema(n))
+    if (!snap.tables.contains(n)) throw noTable(n)
+    val cur = currentSchema(snap, n)
     val f = TxLog.logicalFields(cur)
       .find(_.name.equalsIgnoreCase(column))
       .getOrElse(throw new IllegalArgumentException(
@@ -1054,9 +1058,8 @@ final class GraftDatabase private (
     requireNotRetired(); requireNoOpenTx()
     val n = norm(name)
     val snap = txlog.snapshot()
-    require(snap.tables.contains(n),
-      s"table '$n' does not exist (no committed data)")
-    val cur = txlog.storedSchema(n).getOrElse(txlog.mergedFileSchema(n))
+    if (!snap.tables.contains(n)) throw noTable(n)
+    val cur = currentSchema(snap, n)
     val f = TxLog.logicalFields(cur)
       .find(_.name.equalsIgnoreCase(column))
       .getOrElse(throw new IllegalArgumentException(
@@ -1124,7 +1127,9 @@ final class GraftDatabase private (
   }
 
   /** Keep a log-held schema in sync with a write: when the table HAS a
-    * stored schema and the staged rows carry columns it lacks, the same
+    * stored schema at `snap` (the statement's snapshot, whose version
+    * the commit is checked from) and the staged rows carry columns it
+    * lacks, the same
     * commit extends it (otherwise the pinned read would hide the new
     * columns). A PARTIAL write (append / granular patch — old files
     * stay live) staging a KNOWN column at a DIFFERENT type is rejected
@@ -1137,10 +1142,10 @@ final class GraftDatabase private (
     * type-changing transform update lands consistently. Tables without
     * a stored schema keep footer-inferred reads — addColumn opts in.
     */
-  private def schemaSyncActions(n: String,
+  private def schemaSyncActions(snap: TxLog.Snapshot, n: String,
       staged: org.apache.spark.sql.types.StructType,
       fullReplace: Boolean = false): Seq[TxLog.Action] =
-    txlog.storedSchema(n) match {
+    pinOf(snap, n) match {
       case Some(cur) if fullReplace =>
         // a full replace retires EVERY old file, so dropped-column
         // tombstones clear here — but RENAME mappings must carry over:
@@ -1248,9 +1253,9 @@ final class GraftDatabase private (
     val snapSrc =
       if (version < 0) head
       else {
-        require(version <= txlog.settledVersion,
+        require(version <= head.version,
           s"clone($src, $dst, $version): version is beyond the " +
-            s"committed head (${txlog.settledVersion})")
+            s"committed head (${head.version})")
         require(txlog.resolvableAt(version),
           s"clone($src, $dst, $version): version truncated by vacuum")
         txlog.snapshotAt(version)
@@ -1402,14 +1407,25 @@ final class GraftDatabase private (
     * local batch (see [[graft.dml.ConstrainedDml]]) has the claim
     * checked on the driver, with no job: duplicate or null PKs throw
     * IllegalArgumentException. A bulk batch's claim is trusted.
+    *
+    * `knownHitFiles`: the files of this table holding a replaced or
+    * deleted PK, probed through [[tableMarked]] by a caller that
+    * already read exactly the affected keys' rows
+    * ([[graft.streaming.MaterializedView]]'s state probe), with the
+    * version that probe read. The merge skips its own whole-table
+    * probe and runs AT that version: it reads the table there and
+    * commits from there, so a commit that landed after the probe
+    * fails this merge with [[TxLog.ConflictException]] (the caller
+    * re-probes and retries) instead of missing a file it added.
     */
   def mergeBatch(name: String, replacements: DataFrame,
       deleteKeys: DataFrame, appId: String, batchId: Long,
       alsoRecord: Seq[(String, Long)] = Nil,
       replacementsDistinctByPk: Boolean = false,
-      knownHitFiles: Option[Array[String]] = None): Boolean = {
+      knownHitFiles: Option[GraftDatabase.KnownHits] = None): Boolean = {
     requireNoOpenTx()
-    val snap = txlog.snapshot()
+    val snap = knownHitFiles.fold(txlog.snapshot())(k =>
+      txlog.snapshotAt(k.version))
     if (snap.txns.get(appId).exists(_ >= batchId)) return false
     val tdef = tableDef(name)
     val n = norm(name)
@@ -1437,8 +1453,8 @@ final class GraftDatabase private (
       // nothing to delete in an unmaterialized table; first batch is a
       // validated full write carrying the ledger marker
       validate(replacements, replacements)
-      writeReplace(name, replacements, snap.version,
-        tdef.fks.map(_.parentTable).toSet, ledger)
+      writeReplace(snap, n, replacements, tdef.fks.map(_.parentTable).toSet,
+        ledger)
       return true
     }
     // the hit-file collect, validation, and the staged write are
@@ -1453,25 +1469,19 @@ final class GraftDatabase private (
       val merged = ConstrainedDml.upsert(
         existing.get.join(dels, Seq(tdef.pk), "left_anti"), repl, tdef.pk,
         held.map(_.rows))
-      val marked = txlog.readFilesMarked(snap, n, snap.tables(n),
-        snap.schemas.get(n), "_graft_file")
+      val marked = markedIn(snap, n)
       // file-granular: files holding a replaced OR deleted PK. Scalable
       // direction — the table-scale marked frame probes map-side against
-      // the broadcast batch-bounded key set. A caller that already
-      // probed the table this batch (MaterializedView's state probe
-      // reads exactly the affected keys' rows) hands the hit files in
-      // via knownHitFiles and the probe pass is skipped outright — one
-      // table pass per merge instead of two. That is sound only for a
-      // SINGLE writer whose hit files were probed at this merge's own
-      // snapshot: a commit landing between the caller's probe and this
-      // merge can add a file holding an affected PK, which the stale
-      // hit set misses while every file in it still maps, so the
-      // granular commit would keep a duplicate PK (the fallbacks only
-      // cover hit files that no longer map).
-      keyedRewrite(name, tdef, snap.version, snap, marked,
-        knownHitFiles.getOrElse(probeHits(n, tdef.pk, marked,
-          broadcast(repl.select(col(tdef.pk)).union(dels).distinct()))),
-        existing.get.schema, emptyHitsAppend = true, patchSafe = false,
+      // the broadcast batch-bounded key set. Hit files a caller probed
+      // (knownHitFiles) skip the probe pass outright — one table pass
+      // per merge instead of two. They were probed at `snap`'s own
+      // version, so they are complete for it, and the commit from that
+      // version conflicts with anything that landed since.
+      keyedRewrite(snap, tdef, marked,
+        knownHitFiles.fold(probeHits(n, tdef.pk, marked,
+          broadcast(repl.select(col(tdef.pk)).union(dels).distinct())))(
+          _.files.toArray),
+        emptyHitsAppend = true, patchSafe = false,
         extra = ledger)(validate(repl, merged))(scan => ConstrainedDml.upsert(
           scan.join(dels, Seq(tdef.pk), "left_anti"), repl, tdef.pk,
           held.map(_.rows)))(merged)
@@ -1514,18 +1524,19 @@ final class GraftDatabase private (
     val tdef = tableDef(name)
     val existing = readPinned(snap, norm(name))
     val parents = parentsOf(snap, tdef)
-    enforceLimitSize()
+    enforceLimitSize(snap)
     // validation and staging are INDEPENDENT Spark actions (both read
     // `rows`; nothing publishes until the commit below) — see overlapped
     val staged = overlapped(requireClean(ConstrainedDml.validateInsert(
-      spark, tdef, rows, existing, parents)))(txlog.stage(norm(name), rows))
+      spark, tdef, rows, existing, parents)))(
+      txlog.stage(snap, norm(name), rows))
     // an append is an ADD action — but it was VALIDATED against `base`
     // (unique/PK sets, FK PARENTS), so a concurrent commit touching
     // this table OR a validated parent must conflict (a parent delete
     // interleaving with this insert is the classic write-skew orphan)
     txlog.commit(
       (TxLog.Add(norm(name), staged) +: ledger) ++
-        schemaSyncActions(norm(name), rows.schema),
+        schemaSyncActions(snap, norm(name), rows.schema),
       readVersion = snap.version,
       readTables = tdef.fks.map(_.parentTable).toSet)
     invalidateSqlEngine()
@@ -1575,7 +1586,7 @@ final class GraftDatabase private (
     if (!snap.tables.contains(n)) {
       requireClean(ConstrainedDml.validateUpdate(
         spark, tdef, rows, rows, parents))
-      writeReplace(name, rows, snap.version, tdef.fks.map(_.parentTable).toSet)
+      writeReplace(snap, n, rows, tdef.fks.map(_.parentTable).toSet)
       return
     }
     val existing = readPinned(snap, n).get
@@ -1661,14 +1672,13 @@ final class GraftDatabase private (
     val n = tdef.name
     val rows = held.map(_.rows)
     val merged = ConstrainedDml.upsert(existing, batch, tdef.pk, rows)
-    val marked = txlog.readFilesMarked(snap, n, snap.tables(n),
-      snap.schemas.get(n), "_graft_file")
+    val marked = markedIn(snap, n)
     def probe = hits.getOrElse(held match {
       case Some(lb) => hitsOf(snap, n, existing, tdef.pk,
         lb.rows.toSeq.map(_.get(lb.fields(tdef.pk)))).map(_._1).distinct
       case None => probeHits(n, tdef.pk, marked, batch.select(col(tdef.pk)))
     })
-    keyedRewrite(n, tdef, snap.version, snap, marked, probe, existing.schema,
+    keyedRewrite(snap, tdef, marked, probe,
       emptyHitsAppend, patchSafe = !emptyHitsAppend && tdef.uniqueCols.isEmpty,
       extra = Nil)(requireClean(ConstrainedDml.validateUpdate(
         tdef, batch, rows, merged, parents, pkImmutable = false)))(
@@ -1744,8 +1754,9 @@ final class GraftDatabase private (
     require(!set.contains(tdef.pk),
       s"cannot modify the PK '${tdef.pk}' via updateMany (reference: " +
         "LiteDB forbids _id transforms)")
-    val base = txlog.settledVersion
-    if (!tableExists(name)) return 0L
+    val snap = txlog.snapshot()
+    val n0 = tdef.name
+    if (!snap.tables.contains(n0)) return 0L
     // mark matches BEFORE transforming: a predicate over a SET target
     // must select by the original values (filtering the transformed
     // frame would validate — and count — the wrong rows). The hit
@@ -1753,11 +1764,9 @@ final class GraftDatabase private (
     // nondeterministic predicate selects exactly ONE row set for
     // count, validation, and rewrite — and every later step reads the
     // churn-sized materialized hits, never a re-evaluated table scan.
-    val snapNow = txlog.snapshot()
-    val n0 = norm(name)
-    val marked = txlog.readMarked(n0, "_graft_file").get
-      .withColumn("_graft_hit", coalesce(predicate, lit(false)))
-    val hits = marked.filter(col("_graft_hit"))
+    val marked = markedIn(snap, n0)
+    val hits = marked.withColumn("_graft_hit", coalesce(predicate, lit(false)))
+      .filter(col("_graft_hit"))
       .select(col(tdef.pk).as("_graft_hit_pk"), col("_graft_file"))
       .localCheckpoint(eager = true)
     val perFile = hits.groupBy("_graft_file").count().collect()
@@ -1771,7 +1780,6 @@ final class GraftDatabase private (
     // table's files reads and rewrites 1%, never a whole-table
     // semi-join scan.
     val hitRaw = perFile.map(_.getString(0)).filter(_.nonEmpty)
-    val hitRel = hitRelOf(snapNow, n0, hitRaw, s"updateMany('$n0')")
     val hitPk = hits.select(col("_graft_hit_pk"))
     // DETERMINISTIC predicates re-evaluate on the hit-file scan — a
     // narrow per-file map that PRESERVES each rewritten file's row
@@ -1797,24 +1805,21 @@ final class GraftDatabase private (
           df(tdef.pk) === hitPk("_graft_hit_pk"), "left")
         .withColumn("_graft_hit", coalesce(col("_graft_hit"), lit(false)))
         .drop("_graft_hit_pk")
-    val hitScan = remark(txlog.readFilesMasked(snapNow, n0, hitRel))
-    val touchedRows = ConstrainedDml.updateWhere(
-      hitScan, col("_graft_hit"), set).drop("_graft_hit")
+    def updated(df: DataFrame): DataFrame = ConstrainedDml.updateWhere(
+      remark(df), col("_graft_hit"), set).drop("_graft_hit")
     val changed = ConstrainedDml.updateWhere(
-      hitScan.filter(col("_graft_hit")), col("_graft_hit"), set)
-      .drop("_graft_hit")
-    def result = ConstrainedDml.updateWhere(
-      remark(table(name)), col("_graft_hit"), set).drop("_graft_hit")
+      remark(hitFilesScan(snap, n0, hitRaw, marked)).filter(col("_graft_hit")),
+      col("_graft_hit"), set).drop("_graft_hit")
+    def result = updated(tableIn(snap, n0))
     // pkImmutable: the require() above guards the PK against SET
     // targets and the changed rows derive from distinct existing PKs.
     // No unique constraints and no new PKs -> the rewrite commutes
     // with concurrent disjoint-file statements (relative patch)
-    commitGranularOrFull(name, tdef, base, txlog.snapshot(),
-      table(name).schema, emptyHitsAppend = false,
-      patchSafe = tdef.uniqueCols.isEmpty)(
+    keyedRewrite(snap, tdef, marked, hitRaw, emptyHitsAppend = false,
+      patchSafe = tdef.uniqueCols.isEmpty, extra = Nil)(
       requireClean(ConstrainedDml.validateUpdate(
-        spark, tdef, changed, result, parentsOf(tdef), pkImmutable = true)))(
-      (hitRaw, touchedRows))(result)
+        spark, tdef, changed, result, parentsOf(snap, tdef),
+        pkImmutable = true)))(updated)(result)
     n
   }
 
@@ -1828,18 +1833,17 @@ final class GraftDatabase private (
     * table has no data yet, like the reference's empty collection.
     */
   def findById(name: String, id: Any): Option[org.apache.spark.sql.Row] =
-    if (!tableExists(name)) None
-    else table(name).filter(col(tableDef(name).pk) === lit(id)).take(1).headOption
+    headTable(name).flatMap(
+      _.filter(col(tableDef(name).pk) === lit(id)).take(1).headOption)
 
   /** Direct aggregate accessors (TableCollection.cs:196-257 Count/Exists,
     * :1077-1116 Min/Max) — thin views over the fluent chain.
     */
-  def count(name: String): Long =
-    if (tableExists(name)) table(name).count() else 0L
+  def count(name: String): Long = headTable(name).fold(0L)(_.count())
   def count(name: String, predicate: org.apache.spark.sql.Column): Long =
-    if (tableExists(name)) table(name).filter(predicate).count() else 0L
+    headTable(name).fold(0L)(_.filter(predicate).count())
   def exists(name: String, predicate: org.apache.spark.sql.Column): Boolean =
-    tableExists(name) && !table(name).filter(predicate).isEmpty
+    headTable(name).exists(!_.filter(predicate).isEmpty)
   def min(name: String, column: String): Any =
     table(name).agg(org.apache.spark.sql.functions.min(col(column))).head().get(0)
   def max(name: String, column: String): Any =
@@ -1871,7 +1875,8 @@ final class GraftDatabase private (
   def ensureIndex(name: String, indexName: String, column: String,
       unique: Boolean): Boolean = {
     requireNoOpenTx()
-    val base = txlog.settledVersion // the rebuild reads this snapshot's rows
+    val snap = txlog.snapshot() // the rebuild reads this snapshot's rows
+    val state = readPinned(snap, norm(name))
     val cur = indexDefs(name)
     if (cur.contains((indexName, column, unique))) return false
     cur.find(_._1 == indexName).foreach { case (_, c, _) =>
@@ -1882,9 +1887,8 @@ final class GraftDatabase private (
     if (unique) {
       // a defined-but-unmaterialized table trivially has no duplicates —
       // reading it would throw on the absent path
-      val dupes = if (!tableExists(name)) 0L
-        else ConstrainedDml.repeated(
-          table(name).filter(col(column).isNotNull).groupBy(column)).count()
+      val dupes = state.fold(0L)(t => ConstrainedDml.repeated(
+        t.filter(col(column).isNotNull).groupBy(column)).count())
       if (dupes > 0) throw new IllegalStateException(
         s"cannot build unique index: $dupes duplicate values in $name.$column")
       val tdef = tableDef(name)
@@ -1902,12 +1906,11 @@ final class GraftDatabase private (
         defs += tdef.name ->
           tdef.copy(uniqueCols = tdef.uniqueCols.filterNot(_ == column))
     }
-    if (tableExists(name)) {
-      writeReplace(name, table(name)
-        .repartitionByRange(col(column)).sortWithinPartitions(column), base)
+    state.foreach { t =>
+      val staged = writeReplace(snap, norm(name),
+        t.repartitionByRange(col(column)).sortWithinPartitions(column))
       // register the range-clustered layout for OPTIMIZE re-assertion
-      writeClusterMeta(norm(name), "range", Seq(column),
-        txlog.snapshot().tables.getOrElse(norm(name), Vector.empty))
+      writeClusterMeta(norm(name), "range", Seq(column), staged)
     }
     writeIndexMeta(name,
       cur.filterNot(d => d._1 == indexName || d._2 == column) :+
@@ -1960,8 +1963,9 @@ final class GraftDatabase private (
     requireNoOpenTx()
     requireNotRetired()
     val n = norm(name)
-    val existed = tableExists(n) || defs.contains(n)
-    if (tableExists(n)) txlog.commit(Seq(TxLog.Del(n)))
+    val bound = txlog.snapshot().tables.contains(n)
+    val existed = bound || defs.contains(n)
+    if (bound) txlog.commit(Seq(TxLog.Del(n)))
     Files.deleteIfExists(Paths.get(s"$tablesDir/.${n}_indexes"))
     clearClusterMeta(n)
     defs -= n
@@ -1981,11 +1985,12 @@ final class GraftDatabase private (
     requireNoOpenTx()
     requireNotRetired()
     val (o, n) = (norm(name), norm(newName))
-    if (o == n) return tableExists(o) || defs.contains(o)
-    require(!tableExists(n) && !defs.contains(n),
+    val bound = txlog.snapshot().tables
+    if (o == n) return bound.contains(o) || defs.contains(o)
+    require(!bound.contains(n) && !defs.contains(n),
       s"cannot rename $name: target collection $newName exists")
-    val existed = tableExists(o) || defs.contains(o)
-    if (tableExists(o)) txlog.commit(Seq(TxLog.Ren(o, n)))
+    val existed = bound.contains(o) || defs.contains(o)
+    if (bound.contains(o)) txlog.commit(Seq(TxLog.Ren(o, n)))
     // the registry sidecar is tiny metadata: clear any stale target file
     // (a crashed earlier rename), then re-key
     val oldIx = Paths.get(s"$tablesDir/.${o}_indexes")
@@ -2087,76 +2092,73 @@ final class GraftDatabase private (
     Files.deleteIfExists(Paths.get(s"$tablesDir/.${norm(name)}_cluster"))
 
   /** The one map from a scan's ABSOLUTE hit-file URIs (input_file_name
-    * form) back to the snapshot's root-relative binding entries: (URI,
-    * entry) pairs in binding order, or None when any scanned file no
-    * longer maps (an interleaved rewrite replaced it since the scan).
-    * Every hit-file path resolves through here.
+    * form) back to `snap`'s root-relative binding entries: (URI, entry)
+    * pairs in binding order. Every hit-file path resolves through here.
+    * The hits come from a frame read at `snap` itself, so each maps; one
+    * that does not is an engine bug, refused before anything stages.
     */
   private def hitEntries(snap: TxLog.Snapshot, table: String,
-      hitRaw: Seq[String]): Option[Vector[(String, String)]] = {
+      hitRaw: Seq[String]): Vector[(String, String)] = {
     val rawOf = hitRaw.map(r => new java.net.URI(r).getPath -> r).toMap
     val hits = snap.tables.getOrElse(table, Vector.empty).flatMap(rel =>
       rawOf.get(Paths.get(s"$root/$rel").toAbsolutePath.toString)
         .map(_ -> rel))
-    if (hits.size == rawOf.size) Some(hits) else None
-  }
-
-  /** [[hitEntries]]' binding entries, refusing loudly when any scanned
-    * file no longer maps — an interleaved rewrite would also fail the
-    * commit's conflict check, but a silent partial staging must be
-    * impossible.
-    */
-  private def hitRelOf(snap: TxLog.Snapshot, table: String,
-      hitRaw: Array[String], what: String): Seq[String] = {
-    val hits = hitEntries(snap, table, hitRaw.toSeq)
-    require(hits.isDefined,
-      s"$what: scanned hit files no longer in the committed binding " +
-        "(interleaved rewrite?) — retry")
-    hits.get.map(_._2)
+    if (hits.size != rawOf.size) throw new IllegalStateException(
+      s"'$table': ${rawOf.size - hits.size} scanned hit file(s) are not " +
+        s"bound at version ${snap.version}, the version they were read at")
+    hits
   }
 
   /** The DV-masked rows of exactly the hit files — the rewrite-side
-    * read of upsert/update/mergeBatch, scanning ONLY the hit list (a
-    * statement touching 1% of a table's files reads 1%; the former
-    * `marked.filter(file isin hits)` shape scanned every file and
-    * dropped rows post-scan, a whole-table read per statement at
-    * scale). When a hit file no longer maps into the snapshot binding
-    * (an interleaved rewrite racing this statement), falls back to the
-    * old filter-over-full-scan shape — always correct, and
-    * fileGranularAction independently re-checks the binding and
-    * degrades to a full-rewrite commit in exactly that case, so
-    * correctness never rests on this mapping.
+    * read of every keyed write, scanning ONLY the hit list (a statement
+    * touching 1% of a table's files reads 1%). No hit = `marked`'s
+    * schema with no rows.
     */
   private def hitFilesScan(snap: TxLog.Snapshot, table: String,
       hitRaw: Array[String], marked: DataFrame): DataFrame =
     if (hitRaw.isEmpty) marked.limit(0).drop("_graft_file")
-    else hitEntries(snap, table, hitRaw.toSeq) match {
-      case Some(hits) => txlog.readFilesMasked(snap, table, hits.map(_._2))
-      case None => marked.filter(col("_graft_file").isin(hitRaw.toSeq: _*))
-        .drop("_graft_file")
-    }
+    else txlog.readFilesMasked(snap, table,
+      hitEntries(snap, table, hitRaw.toSeq).map(_._2))
 
-  /** The keyed rewrite shared by every PK-addressed write (upsert,
-    * update, mergeBatch, a persisted LiteSql statement): `hits` (the
-    * files of `marked`, read at `snap`, holding an addressed PK) are
-    * probed, `rewrite` turns exactly those files' rows
-    * ([[hitFilesScan]]) into their replacement, and
-    * [[commitGranularOrFull]] stages it, or the table as `fallback`,
-    * while `validate` runs — so the statement's critical path is
-    * max(validate, probe + stage). The caller owns the probe (its
-    * join strategy, or hit files it already knows) and the snapshot.
+  /** The one tail of every single-table keyed write (upsert, update,
+    * updateMany, mergeBatch, applyChanges, a persisted LiteSql
+    * statement), all of it at `snap`, the statement's one resolution of
+    * the head: `hits` (the files of `marked`, `snap`'s table with each
+    * row's `_graft_file`, holding an addressed row) are probed, `rewrite`
+    * turns exactly those files' rows ([[hitFilesScan]]) into their
+    * replacement, and ONE write stages — the file-granular one when the
+    * driver-side facts admit it ([[fileGranularAction]]), else
+    * `fallback` as a full rewrite — while `validate` runs on the
+    * calling thread ([[overlapped]]): the statement's critical path is
+    * max(validate, probe + stage). The commit waits for both and is
+    * checked from `snap`'s version, with the FK parents in its read
+    * set. `emptyHitsAppend` is upsert's shape (no replaced key = pure
+    * append); update/updateMany treat an empty hit set as a mapping
+    * failure instead. The caller owns the probe (its join strategy, or
+    * hit files it already knows).
     */
-  private def keyedRewrite(name: String, tdef: TableDef, base: Long,
-      snap: TxLog.Snapshot, marked: DataFrame, hits: => Array[String],
-      expectedSchema: org.apache.spark.sql.types.StructType,
-      emptyHitsAppend: Boolean, patchSafe: Boolean,
-      extra: Seq[TxLog.Action])(validate: => Unit)(
-      rewrite: DataFrame => DataFrame)(fallback: => DataFrame): Unit =
-    commitGranularOrFull(name, tdef, base, snap, expectedSchema,
-      emptyHitsAppend, patchSafe, extra)(validate) {
+  private def keyedRewrite(snap: TxLog.Snapshot, tdef: TableDef,
+      marked: DataFrame, hits: => Array[String], emptyHitsAppend: Boolean,
+      patchSafe: Boolean, extra: Seq[TxLog.Action])(validate: => Unit)(
+      rewrite: DataFrame => DataFrame)(fallback: => DataFrame): Unit = {
+    val n = tdef.name
+    val expected = marked.drop("_graft_file").schema
+    enforceLimitSize(snap)
+    val actions = overlapped(validate) {
       val hitRaw = hits.filter(_.nonEmpty)
-      (hitRaw, rewrite(hitFilesScan(snap, norm(name), hitRaw, marked)))
-    }(fallback)
+      val rows = rewrite(hitFilesScan(snap, n, hitRaw, marked))
+      val granular =
+        if (hitRaw.nonEmpty || emptyHitsAppend)
+          fileGranularAction(snap, n, hitRaw, rows.schema, expected,
+            patchSafe, txlog.stage(snap, n, rows))
+        else None
+      granular.map(_ +: widenSyncActions(snap, n, rows.schema, expected))
+        .getOrElse(replaceActions(snap, n, fallback)) ++ extra
+    }
+    txlog.commit(actions, readVersion = snap.version,
+      readTables = tdef.fks.map(_.parentTable).toSet)
+    invalidateSqlEngine()
+  }
 
   /** ONE labelled job: the files of `marked` holding a PK in `keys`
     * (null-safe, so a null-PK row is addressable). The caller picks the
@@ -2170,20 +2172,30 @@ final class GraftDatabase private (
         .select("_graft_file").distinct().collect()
     }.map(_.getString(0))
 
-  private def parentsOf(tdef: TableDef): Map[String, DataFrame] =
-    parentsOf(txlog.snapshot(), tdef)
-
   /** The FK parents of `tdef`, read at `snap`. */
   private def parentsOf(snap: TxLog.Snapshot,
       tdef: TableDef): Map[String, DataFrame] =
-    tdef.fks.map(fk => fk.parentTable -> readPinned(snap, fk.parentTable)
-      .getOrElse(throw new IllegalArgumentException(
-        s"table '${fk.parentTable}' does not exist (no committed data)")))
-      .toMap
+    tdef.fks.map(fk => fk.parentTable -> tableIn(snap, fk.parentTable)).toMap
 
   /** Table `n` (normalized) as committed at `snap`. */
   private def readPinned(snap: TxLog.Snapshot, n: String): Option[DataFrame] =
     snap.tables.get(n).map(txlog.readFilesMasked(snap, n, _))
+
+  /** [[readPinned]], refusing a table `snap` does not bind. */
+  private def tableIn(snap: TxLog.Snapshot, n: String): DataFrame =
+    readPinned(snap, n).getOrElse(throw noTable(n))
+
+  private def noTable(n: String) = new IllegalArgumentException(
+    s"table '$n' does not exist (no committed data)")
+
+  /** Table `name` at the head, one resolution (None = no committed data). */
+  private def headTable(name: String): Option[DataFrame] =
+    readPinned(txlog.snapshot(), norm(name))
+
+  /** `snap`'s table `n` with each row's data file as `_graft_file`. */
+  private def markedIn(snap: TxLog.Snapshot, n: String): DataFrame =
+    txlog.readFilesMarked(snap, n, snap.tables(n), snap.schemas.get(n),
+      "_graft_file")
 
   private def requireClean(vs: Seq[ConstrainedDml.Violation]): Unit =
     if (vs.nonEmpty)
@@ -2202,17 +2214,15 @@ final class GraftDatabase private (
     // deleting from an unmaterialized table is a no-op (update() parity),
     // and a dynamic insertDocuments-created table has no entry in `defs` —
     // both previously crashed deleteCascade's states(table) lookup
-    val base = txlog.settledVersion
-    if (!tableExists(name)) return
+    val snap = txlog.snapshot()
+    if (!snap.tables.contains(norm(name))) return
     // defined-but-never-written tables have no rows, so they can neither
     // restrict nor cascade — and reading their absent files would throw.
     // Frames carry the scan-time file id so the walk's hit frames can
     // name the files each table was touched in (file-granular rewrite).
     val states = (defs + (norm(name) -> tableDef(name)))
-      .filter { case (n, _) => tableExists(n) }
-      .map { case (n, d) =>
-        n -> ((txlog.readMarked(n, "_graft_file").get, d))
-      }
+      .filter { case (n, _) => snap.tables.contains(n) }
+      .map { case (n, d) => n -> ((markedIn(snap, n), d)) }
     val (updated, hits0) = ConstrainedDml.deleteCascadeWithHits(
       spark, states, norm(name), predicate)
     // each hit frame is the walk's doomed-row set for one table —
@@ -2242,7 +2252,7 @@ final class GraftDatabase private (
             broadcast(hit.select(col("_graft_file")).distinct()),
             Seq("_graft_file"), "left_semi").drop("_graft_file")
           n -> java.util.concurrent.CompletableFuture.supplyAsync(
-            () => txlog.stage(n, touched), stagingPool)
+            () => txlog.stage(snap, n, touched), stagingPool)
         }
       }.toMap
     val rootPerFile =
@@ -2261,7 +2271,7 @@ final class GraftDatabase private (
     // paths — a cascade pruning 1% of each table's files stages 1%.
     val actions = updated.toSeq.flatMap { case (n, df) =>
       val plain = df.drop("_graft_file")
-      def full = TxLog.Put(n, txlog.stage(n, plain)): TxLog.Action
+      def full = TxLog.Put(n, txlog.stage(snap, n, plain)): TxLog.Action
       hits.get(n) match {
         case Some(hit) =>
           val pf =
@@ -2271,7 +2281,7 @@ final class GraftDatabase private (
             // deletes cannot create uniqueness violations, but a
             // cascade SET-NULL can touch a unique column — gate the
             // commuting patch on the table being constraint-free
-            Some(fileGranularAction(txlog.snapshot(), n, hitRaw,
+            Some(fileGranularAction(snap, n, hitRaw,
               plain.schema, plain.schema,
               patchSafe = defs.get(n).forall(_.uniqueCols.isEmpty),
               staged = await(stagedF(n)))
@@ -2289,7 +2299,7 @@ final class GraftDatabase private (
     // read set = every table the cascade walk CONSULTED (restrict
     // checks read children it may not rewrite) — an interleaved commit
     // on any of them invalidates the walk and must conflict
-    if (actions.nonEmpty) txlog.commit(actions, readVersion = base,
+    if (actions.nonEmpty) txlog.commit(actions, readVersion = snap.version,
       readTables = states.keySet.toSet)
     invalidateSqlEngine()
   }
@@ -2321,8 +2331,9 @@ final class GraftDatabase private (
   def deleteVectorized(name: String,
       predicate: org.apache.spark.sql.Column): Long = {
     requireNotRetired(); requireNoOpenTx()
-    if (!tableExists(name)) return 0L
+    val snap = txlog.snapshot()
     val n = norm(name)
+    if (!snap.tables.contains(n)) return 0L
     val tdef = tableDef(n)
     val children = defs.values
       .filter(d => norm(d.name) != n &&
@@ -2338,10 +2349,8 @@ final class GraftDatabase private (
               "mutate child tables; use delete() for cascading semantics")
       }
     }
-    val base = txlog.settledVersion
-    val snap = txlog.snapshot()
     val pk = tdef.pk
-    val marked = txlog.readMarked(n, "_graft_file").get
+    val marked = markedIn(snap, n)
     require(marked.columns.contains(pk),
       s"deleteVectorized('$n'): PK column '$pk' not present")
     val hits = marked.filter(predicate)
@@ -2358,13 +2367,12 @@ final class GraftDatabase private (
       children.foreach { child =>
         child.fks.filter(fk => norm(fk.parentTable) == n &&
             fk.onDelete == ConstrainedDml.Restrict).foreach { fk =>
-          if (tableExists(child.name)) {
+          readPinned(snap, norm(child.name)).foreach { childDf =>
             // DataFrame-qualified refs with a collision-proof alias —
             // bare col(fk.parentCol) is AMBIGUOUS when the child also
             // carries a column of that name (its own 'id', or
             // childCol == parentCol)
             val doomed = hits.select(col(pk).as("_graft_doomed"))
-            val childDf = table(child.name)
             val refs = childDf
               .join(broadcast(doomed),
                 childDf(fk.childCol) === doomed("_graft_doomed"), "left_semi")
@@ -2376,10 +2384,7 @@ final class GraftDatabase private (
           }
         }
       }
-      val relOf = hitEntries(snap, n, perFile.map(_._1).toSeq)
-        .getOrElse(throw new IllegalStateException(
-          s"deleteVectorized('$n'): a scanned file is not in the " +
-            "committed binding (interleaved rewrite?) — retry")).toMap
+      val relOf = hitEntries(snap, n, perFile.map(_._1).toSeq).toMap
       val actions = perFile.map { case (abs, _) =>
         val rel = relOf(abs)
         val newPks = hits.filter(col("_graft_file") === abs).select(col(pk))
@@ -2391,12 +2396,12 @@ final class GraftDatabase private (
               .unionByName(newPks).distinct()
           case None => newPks.distinct()
         }
-        val staged = txlog.stage(n, fullMask.coalesce(1))
+        val staged = txlog.stage(snap, n, fullMask.coalesce(1))
         require(staged.size == 1,
           s"DV stage produced ${staged.size} parts (expected 1)")
         TxLog.Dvec(n, rel, staged.head): TxLog.Action
       }.toSeq
-      txlog.commit(actions, readVersion = base,
+      txlog.commit(actions, readVersion = snap.version,
         readTables = children.map(d => norm(d.name)).toSet)
       invalidateSqlEngine()
       perFile.map(_._2).sum // the per-file counts already hold the total
@@ -2404,18 +2409,14 @@ final class GraftDatabase private (
   }
 
   /** File-granular PUT action (the Delta/Iceberg copy-on-write shape):
-    * bind the files NOT in `hitRaw` unchanged and `staged` (the
+    * bind `snap`'s files NOT in `hitRaw` unchanged and `staged` (the
     * replacement rows, schema `touchedSchema`) beside them. None when
-    * the raw↔log path mapping does not account for every hit file or
-    * the replacement drifts the schema — the caller then falls back to
-    * a full rewrite. An EMPTY hit set is a pure append (all files kept).
-    * `staged` is by-name, so the mapping checks run before the write
-    * when the caller is sequential, or concurrently with it when the
-    * caller overlapped the staging — abandoned staged files are
-    * unpublished garbage either way, reclaimed by vacuum. The hit files
-    * map into `snap`'s binding; `snap` must not be older than the
-    * commit's read version, whose conflict check then covers every
-    * commit after it.
+    * the replacement drifts the schema or every file is hit — the
+    * caller then stages a full rewrite instead. An EMPTY hit set is a
+    * pure append (all files kept). The hit files were read at `snap`,
+    * the commit's read version, so they map ([[hitEntries]]) and the
+    * commit's conflict check covers every commit after it. `staged` is
+    * by-name and runs only when the action is granular.
     */
   private def fileGranularAction(snap: TxLog.Snapshot, name: String,
       hitRaw: Array[String],
@@ -2434,53 +2435,18 @@ final class GraftDatabase private (
       .map(f => f.name.toLowerCase -> f.dataType).toMap
     val schemaOk = expectedSchema.forall(f =>
       touchedMap.get(f.name.toLowerCase).contains(f.dataType))
-    hitEntries(snap, n, hitRaw.toSeq).map(_.map(_._2)).flatMap { hitRel =>
-      val keepRel = allRel.diff(hitRel)
-      // every file hit → granular staging degenerates to a full rewrite
-      // but through an extra per-row file filter; the caller's plain
-      // full-rewrite fallback is the same bytes for less work
-      if ((keepRel.isEmpty && allRel.nonEmpty) || !schemaOk) None
-      // patchSafe (no unique constraints a concurrent writer's unseen
-      // rows could break, no new PKs): commit as a RELATIVE remove/add
-      // patch, so concurrent statements on DISJOINT files of this table
-      // both land — the Delta-style concurrency unit
-      else if (patchSafe) Some(TxLog.Patch(n, hitRel, staged))
-      else Some(TxLog.Put(n, keepRel ++ staged))
-    }
-  }
-
-  /** The shared tail of every single-table granular DML: `validate`
-    * runs on the caller's thread while `touched` — the hit files and
-    * their replacement rows — is worked out and staged beside it
-    * ([[overlapped]]); the commit waits for both. The file-granular PUT
-    * is staged when the driver-side mapping facts admit it
-    * ([[fileGranularAction]]), else `fallback` as a full rewrite — one
-    * staged write either way. `emptyHitsAppend` is upsert's shape (no
-    * replaced key = pure append); update/updateMany treat an empty hit
-    * set as a mapping failure instead.
-    */
-  private def commitGranularOrFull(name: String, tdef: TableDef, base: Long,
-      snap: TxLog.Snapshot,
-      expectedSchema: org.apache.spark.sql.types.StructType,
-      emptyHitsAppend: Boolean, patchSafe: Boolean = false,
-      extra: Seq[TxLog.Action] = Nil)(validate: => Unit)(
-      touched: => (Array[String], DataFrame))(
-      fallback: => DataFrame): Unit = {
-    enforceLimitSize()
-    val n = norm(name)
-    val actions = overlapped(validate) {
-      val (hitRaw, rows) = touched
-      val granular =
-        if (hitRaw.nonEmpty || emptyHitsAppend)
-          fileGranularAction(snap, name, hitRaw, rows.schema, expectedSchema,
-            patchSafe, txlog.stage(n, rows))
-        else None
-      granular.map(_ +: widenSyncActions(n, rows.schema, expectedSchema))
-        .getOrElse(replaceActions(n, fallback)) ++ extra
-    }
-    txlog.commit(actions, readVersion = base,
-      readTables = tdef.fks.map(_.parentTable).toSet)
-    invalidateSqlEngine()
+    val hitRel = hitEntries(snap, n, hitRaw.toSeq).map(_._2)
+    val keepRel = allRel.diff(hitRel)
+    // every file hit → granular staging degenerates to a full rewrite
+    // but through an extra per-row file filter; the caller's plain
+    // full-rewrite fallback is the same bytes for less work
+    if ((keepRel.isEmpty && allRel.nonEmpty) || !schemaOk) None
+    // patchSafe (no unique constraints a concurrent writer's unseen
+    // rows could break, no new PKs): commit as a RELATIVE remove/add
+    // patch, so concurrent statements on DISJOINT files of this table
+    // both land — the Delta-style concurrency unit
+    else if (patchSafe) Some(TxLog.Patch(n, hitRel, staged))
+    else Some(TxLog.Put(n, keepRel ++ staged))
   }
 
   /** The schema actions a GRANULAR commit staging `touched` must carry:
@@ -2490,36 +2456,42 @@ final class GraftDatabase private (
     * heterogeneous files behind footer-INFERRED reads, whose one-footer
     * schema pick is nondeterministic about the new column.
     */
-  private def widenSyncActions(n: String,
+  private def widenSyncActions(snap: TxLog.Snapshot, n: String,
       touchedSchema: org.apache.spark.sql.types.StructType,
       expectedSchema: org.apache.spark.sql.types.StructType)
       : Seq[TxLog.Action] = {
     val extrasNew = touchedSchema.filterNot(f =>
       expectedSchema.exists(_.name.equalsIgnoreCase(f.name)))
-    if (extrasNew.nonEmpty && txlog.storedSchema(n).isEmpty)
+    if (extrasNew.nonEmpty && !snap.schemas.contains(n))
       Seq(TxLog.Sch(n, org.apache.spark.sql.types.StructType(
         (expectedSchema ++ extrasNew.map(_.copy(nullable = true)))
           .toArray).json))
-    else schemaSyncActions(n, touchedSchema)
+    else schemaSyncActions(snap, n, touchedSchema)
   }
 
-  private def writeReplace(name: String, df: DataFrame,
-      base: Long = -1L, readTables: Set[String] = Set.empty,
-      extra: Seq[TxLog.Action] = Nil): Unit = {
-    enforceLimitSize()
-    txlog.commit(replaceActions(norm(name), df) ++ extra,
-      readVersion = base, readTables = readTables)
+  /** Table `n` replaced by `df` in one commit from `snap`'s version
+    * carrying `extra`; returns the staged files (the new binding).
+    */
+  private def writeReplace(snap: TxLog.Snapshot, n: String, df: DataFrame,
+      readTables: Set[String] = Set.empty,
+      extra: Seq[TxLog.Action] = Nil): Seq[String] = {
+    enforceLimitSize(snap)
+    val actions = replaceActions(snap, n, df)
+    txlog.commit(actions ++ extra, readVersion = snap.version,
+      readTables = readTables)
     invalidateSqlEngine()
+    actions.collectFirst { case TxLog.Put(_, files) => files }.get
   }
 
   /** Table `n`'s whole binding replaced by `df`, staged. Stage-then-
-    * commit: the plan reads the table's CURRENT immutable files while
+    * commit: the plan reads the table's immutable files at `snap` while
     * the staged write lands in a fresh directory — fully distributed,
     * never a self-overwrite, atomic at the log publish.
     */
-  private def replaceActions(n: String, df: DataFrame): Seq[TxLog.Action] =
-    TxLog.Put(n, txlog.stage(n, df)) +:
-      schemaSyncActions(n, df.schema, fullReplace = true)
+  private def replaceActions(snap: TxLog.Snapshot, n: String,
+      df: DataFrame): Seq[TxLog.Action] =
+    TxLog.Put(n, txlog.stage(snap, n, df)) +:
+      schemaSyncActions(snap, n, df.schema, fullReplace = true)
 
   // ---- engine pragmas (EnginePragmas.cs) ----------------------------------
 
@@ -2528,7 +2500,8 @@ final class GraftDatabase private (
     * directory walk.
     */
   lazy val pragmas: Pragmas =
-    new Pragmas(root, () => collation.toString, () => liveStoreSize())
+    new Pragmas(root, () => collation.toString,
+      () => liveStoreSize(txlog.snapshot()))
 
   def pragma(name: String): Any = pragmas.get(name)
   def setPragma(name: String, value: Any): Unit = pragmas.set(name, value)
@@ -2540,8 +2513,8 @@ final class GraftDatabase private (
     * could wedge permanently (every write refused, including the
     * checkpoint compaction that would reclaim the space).
     */
-  private def liveStoreSize(): Long = {
-    val live = txlog.snapshot().tables.values.flatten.map { r =>
+  private def liveStoreSize(snap: TxLog.Snapshot): Long = {
+    val live = snap.tables.values.flatten.map { r =>
       val p = Paths.get(s"$root/$r")
       if (Files.exists(p)) Files.size(p) else 0L
     }.sum
@@ -2551,7 +2524,9 @@ final class GraftDatabase private (
 
   /** LIMIT_SIZE is enforced at the write choke point: once the store has
     * grown past the pragma, further writes fail — the facade analog of
-    * the reference refusing to allocate pages past the limit.
+    * the reference refusing to allocate pages past the limit. Table
+    * bytes are `snap`'s (the writing statement's snapshot; resolved only
+    * when a limit is set).
     */
   // rebuild() retires this facade for WRITES (its crypto options and
   // compaction baseline are stale; a retired facade writing would land
@@ -2563,11 +2538,11 @@ final class GraftDatabase private (
     if (retired) throw new IllegalStateException(
       "facade retired by rebuild(): write through the facade rebuild returned")
 
-  private def enforceLimitSize(): Unit = {
+  private def enforceLimitSize(snap: => TxLog.Snapshot): Unit = {
     requireNotRetired()
     val limit = pragmas.get(Pragmas.LimitSize).asInstanceOf[Long]
     if (limit != Long.MaxValue) {
-      val current = liveStoreSize()
+      val current = liveStoreSize(snap)
       if (current > limit) throw new IllegalStateException(
         s"database size limit reached (LIMIT_SIZE=$limit, store=$current)")
     }
@@ -2595,7 +2570,7 @@ final class GraftDatabase private (
         .filter { case (t, files) =>
           files.size > threshold && clusterSpec(t).isEmpty
         }
-        .map { case (t, files) => compactTable(t, files, targetBytes, snap.version) }
+        .map { case (t, files) => compactTable(snap, t, files, targetBytes) }
       val drift = snap.tables.toSeq.sortBy(_._1).flatMap { case (t, files) =>
         clusterSpec(t).collect {
           case (kind, cols, atFiles)
@@ -2620,11 +2595,12 @@ final class GraftDatabase private (
     * so the write lands under the new password's crypto options, while
     * the read still resolves through THIS facade's).
     */
-  private def compactTable(t: String, files: Seq[String],
-      targetBytes: Long, base: Long, via: GraftDatabase = this): String = {
+  private def compactTable(snap: TxLog.Snapshot, t: String,
+      files: Seq[String], targetBytes: Long,
+      via: GraftDatabase = this): String = {
     val bytes = files.map(r => Files.size(Paths.get(s"$root/$r"))).sum
     val parts = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-    via.writeReplace(t, table(t).repartition(parts), base = base)
+    via.writeReplace(snap, t, tableIn(snap, t).repartition(parts))
     t
   }
 
@@ -2680,19 +2656,19 @@ final class GraftDatabase private (
       // they had committed
       try {
         if (buf.nonEmpty) {
-          enforceLimitSize()
-          val actions = buf.toSeq.flatMap { case (n, df) =>
-            (TxLog.Put(n, txlog.stage(n, df)): TxLog.Action) +:
-              schemaSyncActions(n, df.schema, fullReplace = true)
-          }
           // the transaction's statements read the engine's views (loaded
-          // at the memoized base version) and validated against FK
-          // parents — conflict-check the whole read set so an interleaved
-          // external commit fails this COMMIT instead of being lost
+          // at its snapshot) and validated against FK parents — stage
+          // under that snapshot and conflict-check the whole read set
+          // from it, so an interleaved external commit fails this COMMIT
+          // instead of being lost
+          val snap = sqlEngine.fold(txlog.snapshot())(_._2)
+          enforceLimitSize(snap)
+          val actions = buf.toSeq.flatMap { case (n, df) =>
+            replaceActions(snap, n, df)
+          }
           val parents = buf.keysIterator.flatMap(n =>
             defs.get(n).map(_.fks.map(_.parentTable)).getOrElse(Nil)).toSet
-          txlog.commit(actions,
-            readVersion = sqlEngine.map(_._2).getOrElse(-1L),
+          txlog.commit(actions, readVersion = snap.version,
             readTables = parents)
         }
         true
@@ -2741,7 +2717,7 @@ final class GraftDatabase private (
     out.defs = defs // declarations survive the rebuild, like the reference
     val snap = txlog.snapshot()
     snap.tables.toSeq.sortBy(_._1).foreach { case (t, files) =>
-      compactTable(t, files, targetBytes, snap.version, via = out)
+      compactTable(snap, t, files, targetBytes, via = out)
     }
     // the TimeSeries/ and Files/ stores flip password state too — the
     // reference rebuilds the WHOLE datafile, not one collection class
@@ -2809,7 +2785,7 @@ final class GraftDatabase private (
     */
   def blocks(iotValueGuid: String): BlockStore =
     new BlockStore(spark, blocksDir, iotValueGuid, ioOptions,
-      () => enforceLimitSize())
+      () => enforceLimitSize(txlog.snapshot()))
 
   /** Users/permissions layer (the reference's `Users/UserManager.cs`
     * surface): backed by `sys_users`/`sys_permissions` facade tables with
@@ -2836,12 +2812,11 @@ final class GraftDatabase private (
   def insertDocuments(name: String, docs: Seq[String],
       pinned: org.apache.spark.sql.types.StructType): Unit = {
     requireNoOpenTx()
-    val base = txlog.settledVersion
+    val snap = txlog.snapshot()
     val incoming = DynamicDocs.fromJson(spark, docs, pinned)
-    val merged = if (tableExists(name))
-      table(name).unionByName(incoming, allowMissingColumns = true)
-    else incoming
-    writeReplace(name, merged, base)
+    val merged = readPinned(snap, norm(name)).fold(incoming)(
+      _.unionByName(incoming, allowMissingColumns = true))
+    writeReplace(snap, norm(name), merged)
   }
 
   /** Find over a dynamic table: pinned columns filter natively, overflow
@@ -2860,7 +2835,7 @@ final class GraftDatabase private (
     * date-partitioned.
     */
   def tsAppend(points: DataFrame): Unit = {
-    enforceLimitSize()
+    enforceLimitSize(txlog.snapshot())
     points.withColumn("date", to_date(col("ts")))
       .write.options(ioOptions).mode("append").partitionBy("date").parquet(tsDir)
   }
@@ -2898,12 +2873,12 @@ final class GraftDatabase private (
       (fk.parentTable, td.name) -> (fk.parentCol, fk.childCol))).toMap
 
   // Memoized SQL engine over ALL tables (declared + materialized dynamic
-  // ones), paired with the LOG VERSION its views were loaded at — the
-  // read version every DML it produces must be conflict-checked against.
+  // ones), paired with the SNAPSHOT its views were loaded at — every DML
+  // it produces persists at it and is conflict-checked from its version.
   // Dropped on every facade write: its DataFrames hold file-listing
   // snapshots, and re-registering per call would cost a whole-catalog
   // footer read per statement.
-  private var sqlEngine: Option[(graft.query.LiteSql, Long)] = None
+  private var sqlEngine: Option[(graft.query.LiteSql, TxLog.Snapshot)] = None
   private def invalidateSqlEngine(): Unit = sqlEngine = None
 
   /** The SQL layer's storage hook: DDL/admin statements parsed by LiteSql
@@ -2990,13 +2965,13 @@ final class GraftDatabase private (
   }
 
   def sql(liteSql: String): DataFrame = {
-    val (engine, engineBase) = sqlEngine.getOrElse {
-      val base = txlog.settledVersion
-      val loaded = tables.filter(tableExists).map(n => n -> table(n)).toMap
+    val (engine, snap) = sqlEngine.getOrElse {
+      val snap = txlog.snapshot()
+      val loaded = snap.tables.keys.map(n => n -> tableIn(snap, n)).toMap
       val e = new graft.query.LiteSql(spark, loaded, fkRegistry, collation,
         admin = Some(facadeAdmin))
-      sqlEngine = Some((e, base))
-      (e, base)
+      sqlEngine = Some((e, snap))
+      (e, snap)
     }
     try {
       val wasInTx = txBuffer.isDefined
@@ -3011,7 +2986,7 @@ final class GraftDatabase private (
       def parentStates(tdef: TableDef): Map[String, DataFrame] =
         tdef.fks.map { fk =>
           fk.parentTable -> engine.modified.get(fk.parentTable)
-            .map(decollate).getOrElse(table(fk.parentTable))
+            .map(decollate).getOrElse(tableIn(snap, fk.parentTable))
         }.toMap
       def check(n: String, state: DataFrame): Unit =
         defs.get(n).foreach { tdef =>
@@ -3055,7 +3030,7 @@ final class GraftDatabase private (
             val touchedKeys =
               changed.toSeq ++ engine.deletedRows.get(n).map(decollate)
             defs.get(n).filter(tdef => touchedKeys.nonEmpty &&
-              tableExists(n) && state.columns.contains(tdef.pk) &&
+              snap.tables.contains(n) && state.columns.contains(tdef.pk) &&
               touchedKeys.forall(_.columns.contains(tdef.pk))) match {
               case Some(tdef) =>
                 val keys = touchedKeys.map(_.select(col(tdef.pk)))
@@ -3070,12 +3045,10 @@ final class GraftDatabase private (
                   // data the statement actually read — and so does the
                   // granular commit's binding. If an interleaved commit
                   // replaced one of them, the commit's conflict check
-                  // from engineBase fires. Resolving at head instead
-                  // would let a commuting patch silently revert a
-                  // concurrent writer's rows.
-                  val marked = txlog
-                    .readMarkedAt(engineBase, n, "_graft_file")
-                    .getOrElse(txlog.readMarked(n, "_graft_file").get)
+                  // from the snapshot's version fires. Resolving at head
+                  // instead would let a commuting patch silently revert
+                  // a concurrent writer's rows.
+                  val marked = markedIn(snap, n)
                   // commuting patch only for statements that add NO
                   // PKs (UPDATE/DELETE/insert-free MERGE) on
                   // constraint-free tables — two concurrent patches
@@ -3088,10 +3061,8 @@ final class GraftDatabase private (
                   // (null-safe: a null PK is a key too) keep; its
                   // changed rows land beside them
                   val gone = keys.select(col(tdef.pk).as("_graft_key"))
-                  keyedRewrite(n, tdef, engineBase,
-                    txlog.snapshotAt(engineBase), marked,
+                  keyedRewrite(snap, tdef, marked,
                     probeHits(n, tdef.pk, marked, keys),
-                    marked.drop("_graft_file").schema,
                     emptyHitsAppend = true, patchSafe = stmtPatchSafe,
                     extra = Nil)(check(n, state0)) { scan =>
                     changed.foldLeft(scan.join(gone,
@@ -3106,7 +3077,7 @@ final class GraftDatabase private (
                 // writer since then must conflict, not be silently
                 // overwritten
                 check(n, state0)
-                writeReplace(n, state, base = engineBase, readTables =
+                writeReplace(snap, n, state, readTables =
                   defs.get(n).fold(Set.empty[String])(
                     _.fks.map(_.parentTable).toSet))
             }
@@ -3154,7 +3125,9 @@ final class GraftDatabase private (
     // the raw directory tree (which also holds not-yet-vacuumed files
     // of older versions)
     def dataTables: Seq[(String, String)] =
-      tables.filter(tableExists).flatMap(t => liveFiles(t).map(f => t -> f))
+      txlog.snapshot().tables.toSeq.sortBy(_._1).flatMap { case (t, fs) =>
+        fs.map(f => t -> s"$root/$f")
+      }
     name match {
       case "$database"     => SystemCollections.sysDatabase(this)
       case "$cols"         => SystemCollections.sysCols(this)
@@ -3190,10 +3163,12 @@ final class GraftDatabase private (
     * in the reference, with INCLUDE joins resolved from `defineTable`
     * FK declarations and the database collation applied.
     */
-  def find(nlQuery: String): DataFrame =
+  def find(nlQuery: String): DataFrame = {
+    val snap = txlog.snapshot()
     new graft.query.NaturalQuery(spark,
-      (n: String) => if (tableExists(n)) Some(table(n)) else None,
-      fkRegistry, collation).run(nlQuery)
+      (n: String) => readPinned(snap, norm(n)), fkRegistry, collation)
+      .run(nlQuery)
+  }
 
   // ---- corpus curation (training-data pipeline, COVERAGE §LLM ops) -------
 
@@ -3210,6 +3185,12 @@ final class GraftDatabase private (
 }
 
 object GraftDatabase {
+
+  /** Hit files a caller probed through [[GraftDatabase.tableMarked]]
+    * (as its file column names them) and the log version that frame
+    * read — see [[GraftDatabase.mergeBatch]].
+    */
+  final case class KnownHits(version: Long, files: Seq[String])
 
   /** The database-level feed's fixed schema (see [[GraftDatabase.changesAllTables]]). */
   val MultiplexEnvelope: org.apache.spark.sql.types.StructType =

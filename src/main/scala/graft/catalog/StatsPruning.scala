@@ -40,24 +40,47 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object GraftStatsRegistry {
 
-  // normalized absolute database root -> a WEAK ref to its TxLog: a
-  // session can open thousands of (often temporary) databases over its
-  // lifetime, and the registry must neither pin them past their
-  // owner's reachability nor charge every later query for their
-  // corpses — dead entries self-prune on the next touch
-  private val roots =
-    new ConcurrentHashMap[String, java.lang.ref.WeakReference[TxLog]]()
+  // the newest head snapshot any TxLog on a root resolved, its
+  // per-file stats flattened to rel-path -> json on first use — one
+  // map fetch per QUERY, then O(1) lookups per file
+  private final class Head(val snap: TxLog.Snapshot) {
+    lazy val relStats: Map[String, String] =
+      snap.stats.map { case ((_, r), js) => r -> js }
+  }
 
-  private[catalog] def register(rootAbs: String, log: TxLog): Unit =
-    roots.put(rootAbs, new java.lang.ref.WeakReference(log))
+  // normalized absolute database root -> that head, with a WEAK ref to
+  // the TxLog that last resolved one: a session can open thousands of
+  // (often temporary) databases over its lifetime, and the registry
+  // must neither pin them past their owner's reachability nor charge
+  // every later query for their corpses — dead entries self-prune on
+  // the next touch
+  private final class Entry(val log: java.lang.ref.WeakReference[TxLog],
+      val head: Head)
 
-  private def live(r: String): Option[TxLog] = {
-    val ref = roots.get(r)
-    if (ref == null) None
-    else {
-      val log = ref.get()
-      if (log == null) { roots.remove(r, ref); None } else Some(log)
-    }
+  private val roots = new ConcurrentHashMap[String, Entry]()
+
+  /** Record a head snapshot `log` resolved. The rule plans from the
+    * newest one and lists nothing itself: data files are immutable and
+    * uniquely named, so a map older than a reader's binding can only
+    * MISS (missing entry = scan, conservative), never serve wrong
+    * bounds.
+    */
+  private[catalog] def published(rootAbs: String, log: TxLog,
+      snap: TxLog.Snapshot): Unit = {
+    roots.compute(rootAbs, (_, old) => {
+      val newer = old == null || old.head.snap.version < snap.version
+      if (!newer && (old.log.get() eq log)) old
+      else new Entry(new java.lang.ref.WeakReference(log),
+        if (newer) new Head(snap) else old.head)
+    })
+    ()
+  }
+
+  private def live(r: String): Option[Head] = {
+    val e = roots.get(r)
+    if (e == null) None
+    else if (e.log.get() == null) { roots.remove(r, e); None }
+    else Some(e.head)
   }
 
   /** Normalize a FileIndex path (a `file:` URI) to a raw fs path. */
@@ -75,12 +98,11 @@ object GraftStatsRegistry {
       (s.startsWith(r + "/") || s == r) && live(r).isDefined)
   }
 
-  /** One stats resolver per QUERY — and per-ROOT LAZY: only the log
-    * actually owning a probed path resolves its snapshot (one
-    * version-cached map fetch), never every database the session has
-    * ever opened. Per-file lookups are then O(1) map gets — at a
-    * million files the rule touches no snapshot (or filesystem) per
-    * file.
+  /** One stats resolver per QUERY — and per-ROOT LAZY: only the root
+    * actually owning a probed path flattens its head's stats (once per
+    * version), never every database the session has ever opened.
+    * Per-file lookups are then O(1) map gets — the rule lists no log
+    * and touches no filesystem.
     */
   def resolver(): String => Option[String] = {
     val prefixes = roots.keys.asScala.toSeq.map(r => (r + "/", r))
@@ -90,7 +112,7 @@ object GraftStatsRegistry {
       prefixes.collectFirst {
         case (prefix, r) if s.startsWith(prefix) =>
           fetched.getOrElseUpdate(r,
-            live(r).map(_.relStatsSnapshot()).getOrElse(Map.empty))
+            live(r).map(_.relStats).getOrElse(Map.empty))
             .get(s.stripPrefix(prefix))
       }.flatten
     }

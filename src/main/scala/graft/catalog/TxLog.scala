@@ -73,10 +73,10 @@ final class TxLog(spark: SparkSession, root: String,
   private val logDir = Paths.get(root, "_txlog")
   Files.createDirectories(logDir)
 
-  // make this log's stats reachable by the session-wide auto-skipping
-  // rule (StatsPruneRule): registry key is the normalized absolute root
-  GraftStatsRegistry.register(
-    Paths.get(root).toAbsolutePath.normalize.toString, this)
+  // the session-wide auto-skipping rule (StatsPruneRule) reads the
+  // stats of the newest head snapshot any log on this root resolved:
+  // registry key is the normalized absolute root
+  private val registryKey = Paths.get(root).toAbsolutePath.normalize.toString
 
   // timestamps stage as TIMESTAMP_MICROS, not Spark's INT96 default:
   // INT96 is a deprecated non-standard encoding whose footers carry NO
@@ -103,20 +103,10 @@ final class TxLog(spark: SparkSession, root: String,
 
   /** Latest committed version (0 = empty log). Counts a zero-byte
     * IN-FLIGHT head too — the raw slot counter the publish CAS needs.
-    * Readers and DML validation bases want [[settledVersion]] instead.
+    * Readers and DML validation bases want the head [[snapshot]]'s
+    * version instead.
     */
   def version: Long = listVersions().lastOption.getOrElse(0L)
-
-  /** The newest SETTLED version — the head snapshot's version, which
-    * resolves BELOW a zero-byte in-flight publish. DML validation
-    * bases and change-feed cursors MUST use this, not raw [[version]]:
-    * a base taken at an unsettled head v sits at-or-above the
-    * in-flight slot, so commit()'s conflict check (readVersion+1 ..)
-    * would never inspect v — its actions, landing later, would be
-    * silently skipped by validation (lost conflict) and by any feed
-    * whose cursor already moved past v.
-    */
-  def settledVersion: Long = snapshot().version
 
   /** ONE log-directory listing serving both discoveries: (versions,
     * checkpoints), each sorted. On an object store a LIST is a charged
@@ -137,7 +127,7 @@ final class TxLog(spark: SparkSession, root: String,
   // new commits never change — only vacuum does, and vacuum's retention
   // floor (keepVersions + minAgeMs grace) makes a listing taken moments
   // ago equivalent to one taken now for any version inside retention.
-  // Head discovery (version / settledVersion) ALWAYS lists fresh.
+  // Head discovery (version / snapshot) ALWAYS lists fresh.
   @volatile private var lastListing: (Long, (Seq[Long], Seq[Long])) =
     (0L, (Vector.empty, Vector.empty))
 
@@ -164,7 +154,17 @@ final class TxLog(spark: SparkSession, root: String,
   // cache it keyed by version (one cheap dir listing validates it)
   @volatile private var headCache: Option[Snapshot] = None
 
-  /** Table → relative-file-list binding at the latest committed version.
+  /** Table → relative-file-list binding at the latest SETTLED version:
+    * one LIST. A statement resolves this once and reads, stages and
+    * commits from it (its version is the commit's read version).
+    *
+    * Its version resolves BELOW a zero-byte in-flight publish. DML
+    * bases and change-feed cursors MUST use it, not raw [[version]]: a
+    * base taken at an unsettled head v sits at-or-above the in-flight
+    * slot, so commit()'s conflict check (readVersion+1 ..) would never
+    * inspect v — its actions, landing later, would be silently skipped
+    * by validation (lost conflict) and by any feed whose cursor already
+    * moved past v.
     *
     * Defense against publishers without full-content atomicity (the
     * [[CommitPrimitive]] contract forbids it, but a legacy claim→move
@@ -178,7 +178,7 @@ final class TxLog(spark: SparkSession, root: String,
     */
   def snapshot(): Snapshot = {
     val v = version
-    headCache match {
+    val s = headCache match {
       case Some(s) if s.version == v => s
       case _ =>
         if (v > 0 && !settled(versionFile(v))) {
@@ -191,28 +191,8 @@ final class TxLog(spark: SparkSession, root: String,
           s
         }
     }
-  }
-
-  // head snapshot's stats flattened to rel-path -> json, rebuilt once
-  // per version — the auto-skipping rule does one map fetch per QUERY
-  // and then O(1) lookups per file (never a snapshot resolve per file)
-  @volatile private var relStatsCache: (Long, Map[String, String]) =
-    (-1L, Map.empty)
-
-  /** The head snapshot's per-file stats keyed by root-relative path
-    * (for [[GraftStatsRegistry]]). Files are immutable, so a stale map
-    * can only MISS (missing entry = scan, conservative), never serve
-    * wrong bounds.
-    */
-  def relStatsSnapshot(): Map[String, String] = {
-    val s = snapshot()
-    val c = relStatsCache
-    if (c._1 == s.version) c._2
-    else {
-      val built = s.stats.map { case ((_, r), js) => r -> js }
-      relStatsCache = (s.version, built)
-      built
-    }
+    GraftStatsRegistry.published(registryKey, this, s)
+    s
   }
 
   /** Spin briefly for an in-flight (zero-byte) file to land its
@@ -625,21 +605,9 @@ final class TxLog(spark: SparkSession, root: String,
     fs.foreach(_.join())
   }
 
-  /** [[read]] with the scan-time file id materialized as `fileCol`
-    * below the DV mask joins — see [[maskedRead]].
+  /** [[readFilesMasked]] with each row's source file as `fileCol`
+    * materialized below the DV mask joins — see [[maskedRead]].
     */
-  def readMarked(table: String, fileCol: String): Option[DataFrame] =
-    readMarkedAt(-1L, table, fileCol)
-
-  /** [[readMarked]] at version `v` (-1 = head). */
-  def readMarkedAt(v: Long, table: String, fileCol: String)
-      : Option[DataFrame] = {
-    val s = if (v < 0) snapshot() else snapshotAt(v)
-    s.tables.get(table).map(
-      readFilesMarked(s, table, _, s.schemas.get(table), fileCol))
-  }
-
-  /** [[readFilesMasked]] with each row's source file as `fileCol`. */
   def readFilesMarked(s: Snapshot, table: String, rel: Seq[String],
       schemaJson: Option[String], fileCol: String): DataFrame =
     maskedRead(s, table, rel, schemaJson, Some(fileCol))
@@ -719,25 +687,14 @@ final class TxLog(spark: SparkSession, root: String,
     best
   }
 
-  /** The table's log-held authoritative schema, when one was committed
-    * (addColumn / a write that widened it). Tables without one read
-    * with parquet footer inference, as before.
+  /** The file schema the files `rel` actually carry — unioned across
+    * footers (`mergeSchema`), so a heterogeneous un-pinned table adopts
+    * EVERY physical column when DDL first pins it.
     */
-  def storedSchema(table: String): Option[
-      org.apache.spark.sql.types.StructType] =
-    snapshot().schemas.get(table).map(parseSchema)
-
-  private def parseSchema(json: String) =
-    org.apache.spark.sql.types.DataType.fromJson(json)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-
-  /** The file schema a table's live files actually carry — unioned
-    * across footers (`mergeSchema`), so a heterogeneous un-pinned table
-    * adopts EVERY physical column when DDL first pins it.
-    */
-  def mergedFileSchema(table: String): org.apache.spark.sql.types.StructType =
+  def mergedFileSchema(
+      rel: Seq[String]): org.apache.spark.sql.types.StructType =
     spark.read.options(ioOptions).option("mergeSchema", "true")
-      .parquet(liveFiles(table): _*).schema
+      .parquet(rel.map(r => s"$root/$r"): _*).schema
 
   /** Schema-pinned when the log holds one: files written BEFORE a
     * column existed null-fill it (metadata-only ADD COLUMN), files
@@ -829,24 +786,28 @@ final class TxLog(spark: SparkSession, root: String,
     rel.headOption.flatMap(stagedSchema).filter(s =>
       rel.forall(r => stagedSchema(r).contains(s)))
 
-  /** Absolute paths of a table's live data files (diagnostics/manifest). */
-  def liveFiles(table: String): Seq[String] =
-    snapshot().tables.getOrElse(table, Vector.empty).map(r => s"$root/$r")
-
   // ---- staging -------------------------------------------------------------
+
+  /** [[stage]] under the head snapshot's pin (a caller with no
+    * statement snapshot of its own).
+    */
+  def stage(table: String, df: DataFrame): Seq[String] =
+    stage(snapshot(), table, df)
 
   /** Write `df` as a fresh immutable file set under the table's
     * directory and return the root-relative paths. A distributed write
     * job; nothing becomes visible until a commit references the files.
+    * Column names map to their physical names under `snap`'s pin (the
+    * statement's snapshot, whose version the commit is checked from).
     */
-  def stage(table: String, df: DataFrame): Seq[String] = {
+  def stage(snap: Snapshot, table: String, df: DataFrame): Seq[String] = {
     val rel = s"Tables/$table/d-${UUID.randomUUID().toString.take(12)}"
     val dir = Paths.get(root, rel)
     // after a metadata-only RENAME COLUMN, files keep writing the
     // PHYSICAL name (the mapping's stable identity) — old and new files
     // stay byte-compatible and the pinned read renames them all back
     graft.core.JobLabel(spark, s"stage $table") {
-      toPhysical(table, df).write.options(ioOptions).mode("error")
+      toPhysical(snap, table, df).write.options(ioOptions).mode("error")
         .parquet(dir.toString)
     }
     val s = Files.list(dir)
@@ -902,10 +863,11 @@ final class TxLog(spark: SparkSession, root: String,
   }
 
   /** Logical→physical column rename for a staged frame, from the
-    * table's CURRENT pin (identity when no mapping exists).
+    * table's pin at `snap` (identity when no mapping exists).
     */
-  private def toPhysical(table: String, df: DataFrame): DataFrame =
-    snapshot().schemas.get(table).map(parseSchema) match {
+  private def toPhysical(snap: Snapshot, table: String,
+      df: DataFrame): DataFrame =
+    snap.schemas.get(table).map(parseSchema) match {
       case Some(pin) =>
         val m = TxLog.logicalFields(pin)
           .filter(f => TxLog.physicalName(f) != f.name)
@@ -967,9 +929,10 @@ final class TxLog(spark: SparkSession, root: String,
     // at the CURRENT head is a replay — skip it (exactly-once state from
     // at-least-once delivery). Re-checked on every publish retry, so two
     // racing replayers of the same batch apply it exactly once.
-    def alreadyApplied(): Boolean = actions.exists {
-      case Txn(a, b) => snapshot().txns.get(a).exists(_ >= b)
-      case _ => false
+    val marks = actions.collect { case t: Txn => t }
+    def alreadyApplied(): Boolean = marks.nonEmpty && {
+      val txns = snapshot().txns // one head resolution for every mark
+      marks.exists(t => txns.get(t.appId).exists(_ >= t.batchId))
     }
     if (alreadyApplied()) return version
     // Conflict granularity (the Delta-style remove/add resolution):
@@ -1479,6 +1442,11 @@ object TxLog {
     * (shuffle/AQE), never a forced over-threshold broadcast.
     */
   val DvBroadcastMaxBytes: Long = 8L << 20
+
+  /** A pinned schema's StructType from its log-held JSON. */
+  def parseSchema(json: String): org.apache.spark.sql.types.StructType =
+    org.apache.spark.sql.types.DataType.fromJson(json)
+      .asInstanceOf[org.apache.spark.sql.types.StructType]
 
   /** One committed state: table → root-relative immutable file list,
     * plus the idempotence ledger (writer appId → highest applied

@@ -223,14 +223,16 @@ object MaterializedView {
     // broadcasts into a map-side semi-probe of the view (plan-gated) —
     // the view never reshuffles. `old` ⊆ delta keys, so a LEFT join
     // from delta sees every old row.
-    val viewExists = viewDb.tableExists(mv.view)
-    val old: DataFrame =
-      if (viewExists) {
-        val o = sel(viewDb.tableMarked(mv.view, FileCol))
+    // the probe's version rides with its hit files into the merge, which
+    // then reads and commits at that version (a commit since conflicts)
+    val (old: DataFrame, probedAt: Option[Long]) =
+      if (viewDb.tableExists(mv.view)) {
+        val (marked, v) = viewDb.tableMarked(mv.view, FileCol)
+        val o = sel(marked)
           .join(broadcast(delta.select(KeyCol)), Seq(KeyCol), "left_semi")
         graft.plans.PlanGates.assertBroadcastProbe(o,
           s"MaterializedView(${mv.view}) state probe")
-        o
+        (o, Some(v))
       } else {
         // bootstrap: no view yet — a typed EMPTY state frame so the
         // merge arithmetic below is uniform
@@ -242,7 +244,7 @@ object MaterializedView {
           e = e.withColumn(s"o_min_$c", lit(null).cast(mmType(c)))
             .withColumn(s"o_max_$c", lit(null).cast(mmType(c)))
         }
-        e.withColumn(FileCol, lit(null).cast(DataTypes.StringType))
+        (e.withColumn(FileCol, lit(null).cast(DataTypes.StringType)), None)
       }
     var m = delta.join(old, Seq(KeyCol), "left_outer")
       .withColumn(CountCol,
@@ -340,7 +342,8 @@ object MaterializedView {
       viewDb.mergeBatch(mv.view, upserts, deleteKeys, appId, batchId,
         alsoRecord = vMaxOpt.map(versionLedgerKey(mv.view) -> _).toSeq,
         replacementsDistinctByPk = true,
-        knownHitFiles = Some(hitFiles))
+        knownHitFiles =
+          probedAt.map(GraftDatabase.KnownHits(_, hitFiles.toSeq)))
       ()
     } finally { out.unpersist(); () }
   }

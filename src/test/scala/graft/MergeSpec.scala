@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.catalog.GraftDatabase
+import graft.catalog.{GraftDatabase, TxLog}
 import graft.dml.ConstrainedDml.TableDef
 import graft.query.LiteSql
 
@@ -341,5 +341,32 @@ class MergeSpec extends AnyFunSuite {
       Seq.empty[Int].toDF("id"), "mb-app3", 0L,
       replacementsDistinctByPk = true))
     assert(db.table("t").count() == 3)
+  }
+
+  test("mergeBatch given hit files probed before another commit fails " +
+      "with a conflict instead of keeping a duplicate PK") {
+    val db = freshDb().defineTable(TableDef("v", "k"))
+    db.insert("v", Seq((1, 10)).toDF("k", "x"))
+    def probe(): GraftDatabase.KnownHits = {
+      val (marked, version) = db.tableMarked("v", "_f")
+      GraftDatabase.KnownHits(version, marked.filter(col("k").isin(1, 2))
+        .select("_f").distinct().collect().map(_.getString(0)).toSeq)
+    }
+    def rows = db.table("v").orderBy("k", "x").collect()
+      .map(r => (r.getInt(0), r.getInt(1))).toSeq
+    def merge(hits: GraftDatabase.KnownHits) = db.mergeBatch("v",
+      Seq((1, 11), (2, 21)).toDF("k", "x"), Seq.empty[Int].toDF("k"),
+      "stale-hits", 1L, replacementsDistinctByPk = true,
+      knownHitFiles = Some(hits))
+    val stale = probe()
+    // a new file now holds k = 2, which the probed hit files miss
+    db.insert("v", Seq((2, 20)).toDF("k", "x"))
+    val v = db.logVersion
+    intercept[TxLog.ConflictException](merge(stale))
+    assert(db.logVersion == v)
+    assert(rows == Seq((1, 10), (2, 20)))
+    // probed again at the head, the retry lands
+    assert(merge(probe()))
+    assert(rows == Seq((1, 11), (2, 21)))
   }
 }

@@ -14,12 +14,13 @@ import graft.catalog.{GraftDatabase, TxLog}
 import graft.dml.ConstrainedDml._
 import graft.plans.PlanGates
 
-/** Job and file budgets of small writes on an IoT-ingest-shaped
-  * database (points; readings and point_state, each with an FK to
-  * points): a small batch is checked with a fixed handful of Spark jobs
-  * and opens no existing file its keys cannot be in; a read after a
-  * write infers no schema; and a keyed write whose check fails while
-  * its stage runs commits nothing.
+/** Job, file and log-listing budgets of small writes on an
+  * IoT-ingest-shaped database (points; readings and point_state, each
+  * with an FK to points): a small batch is checked with a fixed handful
+  * of Spark jobs and opens no existing file its keys cannot be in; a
+  * statement lists the log once for its snapshot and once to commit; a
+  * read after a write infers no schema; and a keyed write whose check
+  * fails while its stage runs commits nothing.
   */
 class SmallWriteBudgetSpec extends AnyFunSuite {
   import SparkSessionFixture._
@@ -217,5 +218,58 @@ class SmallWriteBudgetSpec extends AnyFunSuite {
       noDeletes, "app", 1L, replacementsDistinctByPk = true))
     assert(db.table("t").orderBy("id").collect().map(r =>
       (r.getInt(0), r.getString(1))).toSeq == Seq((1, "x"), (2, "b"), (3, "c")))
+  }
+
+  /** Log LISTs (`TxLog.logListings`) per warm call on a quiet head: one
+    * resolves the statement's snapshot, one finds the commit's slot, and
+    * a ledger mark (`mergeBatch`, `insertBatch`, `applyChanges`) re-reads
+    * the head once for its replay check; a commit that writes a
+    * checkpoint lists once more. Before every statement resolved the
+    * head once, warm calls on this database shape listed: `insert`
+    * (500 rows) 8, `upsert` (~440 rows) 7, `update` (1 row) 7,
+    * `updateMany` 13, `delete` (1 row) 12, `mergeBatch` 8, `findById`
+    * 3, `count` 2, a filtered `table(..)` read 2. (This case's own calls
+    * there: `insert` 7, `upsert` 9, `insertBatch` 8, `applyChanges` 14,
+    * the rest as listed.)
+    */
+  test("a warm statement lists the log once for its snapshot, and a " +
+    "write once more to commit") {
+    val db = ingestDb("budget-lists")
+    val calls: Seq[(String, Long, Long => Any)] = Seq(
+      ("insert", 2L, i => db.insert("readings",
+        readingRows(10000 + 1000 * i.toInt, 500))),
+      ("upsert", 2L, i => db.upsert("point_state",
+        (1 to Points by 5).map(p => (p, i + 3.0)).toDF("point_id", "value"))),
+      ("update", 2L, i => db.update("point_state",
+        Seq((7, i + 1.5)).toDF("point_id", "value"))),
+      ("updateMany", 2L, i => db.updateMany("point_state",
+        $"point_id" === 11,
+        Map("value" -> org.apache.spark.sql.functions.lit(i + 9.0)))),
+      ("delete", 2L, i => db.delete("readings", $"reading_id" === 20L + i)),
+      ("mergeBatch", 3L, i => db.mergeBatch("point_state",
+        Seq((13, i + 2.0)).toDF("point_id", "value"),
+        Seq(14 + i.toInt).toDF("point_id"), "budget-merge", i)),
+      ("insertBatch", 3L, i => db.insertBatch("readings",
+        readingRows(30000 + 1000 * i.toInt, 10), "budget-insert", i)),
+      ("applyChanges", 3L, i => db.applyChanges("point_state",
+        Seq((15, i + 4.0, "insert")).toDF("point_id", "value", "_change_type"),
+        "budget-cdc", i)),
+      ("findById", 1L, _ => db.findById("points", 7)),
+      ("count", 1L, _ => db.count("readings")),
+      ("filtered read", 1L, _ => db.table("readings")
+        .filter($"point_id" === 7).collect()))
+    val over = calls.flatMap { case (what, bound, call) =>
+      call(0L) // warm
+      val v0 = db.logVersion
+      val before = TxLog.logListings.get()
+      call(1L)
+      val lists = TxLog.logListings.get() - before
+      val checkpointed =
+        (v0 + 1 to db.logVersion).exists(_ % TxLog.checkpointEvery == 0)
+      val allowed = bound + (if (checkpointed) 1L else 0L)
+      info(s"$what: $lists LISTs (allowed $allowed)")
+      Option.when(lists > allowed)(s"$what: $lists LISTs (allowed $allowed)")
+    }
+    assert(over.isEmpty, over)
   }
 }

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.catalog.GraftDatabase
+import graft.catalog.{GraftDatabase, TxLog}
 import graft.dml.ConstrainedDml.TableDef
 
 /** Automatic data skipping on the DEFAULT read path — the analog of
@@ -319,5 +319,35 @@ class StatsPruneRuleSpec extends AnyFunSuite {
       new org.apache.hadoop.fs.Path(
         s"file:${root}0/Tables/m/d-x/p.parquet")),
       "a sibling root sharing the string prefix must not be covered")
+  }
+
+  test("planning a pruned read lists the log only for the read's own " +
+      "snapshot, and a second facade's commit and read still prune") {
+    val base = java.nio.file.Files.createTempDirectory("graft_prune_lists")
+      .toString
+    val db = GraftDatabase(spark, "pl", base)
+    val n = seed(db)
+    /** The files a range read over `d` scans, and the log LISTs its
+      * resolution and planning took.
+      */
+    def planned(d: GraftDatabase, lo: Long, hi: Long): (Int, Long) = {
+      val before = TxLog.logListings.get()
+      val files = d.table("m").filter(col("k") >= lo && col("k") <= hi)
+        .inputFiles.length
+      (files, TxLog.logListings.get() - before)
+    }
+    val (scanned, lists) = planned(db, 100L, 299L)
+    assert(lists == 1L, s"a read resolves the head once: $lists LISTs")
+    assert(scanned <= math.max(1, n / 2), s"scanned $scanned of $n files")
+    val db2 = GraftDatabase(spark, "pl", base).defineTable(TableDef("m", "k"))
+    db2.insert("m", (1000 until 1200).map(i => (i.toLong, s"v$i", i % 7))
+      .toDF("k", "s", "grp").repartitionByRange(2, col("k")))
+    val total = db2.liveFiles("m").size
+    Seq(db2, db).foreach { d =>
+      val (scanned2, lists2) = planned(d, 1100L, 1199L)
+      assert(lists2 == 1L, s"$lists2 LISTs")
+      assert(scanned2 <= 2, s"scanned $scanned2 of $total files")
+      assert(d.table("m").filter(col("k") >= 1100L).count() == 100)
+    }
   }
 }

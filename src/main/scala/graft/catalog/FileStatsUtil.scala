@@ -15,7 +15,7 @@ import org.apache.spark.sql.types.StructType
 /** Per-file column min/max, harvested once from a freshly staged file's
   * own parquet footer and carried in the commit log (the Delta-style
   * data-skipping record; SURVEY §4.1's zone-map idea lifted from row
-  * groups to the FILE level). At read time [[GraftDatabase.seek]]
+  * groups to the FILE level). At read time [[StatsPruneRule]]
   * prunes a table's file list from the log alone — no footer opens, no
   * file listings — which is the difference between "skip row groups
   * after opening a million footers" and "never open them".
@@ -288,7 +288,7 @@ object FileStatsUtil {
     "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
 
   /** A compiled range probe: one pattern + one bound conversion,
-    * reused across EVERY file of a seek — per-file work is a single
+    * reused across EVERY file of a query — per-file work is a single
     * regex match, not a Pattern.compile (at the million-file scale the
     * design targets, per-file compilation would dominate the planner).
     */
@@ -339,8 +339,8 @@ object FileStatsUtil {
     * side it has). The auto-skipping rule builds these from whatever
     * conjuncts the WHERE clause happens to carry. Instant-like bounds
     * (java.sql.Timestamp, Instant → instant domain; LocalDateTime →
-    * wall-clock domain) build a typed timestamp probe, so `seek` takes
-    * time ranges directly.
+    * wall-clock domain) build a typed timestamp probe, so a caller can
+    * probe time ranges directly.
     */
   def probeBounds(column: String, lo: Option[Any],
       hi: Option[Any]): StatsProbe = {

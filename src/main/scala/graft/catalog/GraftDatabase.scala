@@ -172,9 +172,8 @@ final class GraftDatabase private (
   def tableMarked(name: String, fileCol: String): (DataFrame, Long) = {
     val snap = txlog.snapshot()
     val n = norm(name)
-    val rel = snap.tables.getOrElse(n, throw noTable(n))
-    (txlog.readFilesMarked(snap, n, rel, snap.schemas.get(n), fileCol),
-      snap.version)
+    if (!snap.tables.contains(n)) throw noTable(n)
+    (txlog.readMarked(snap, n, fileCol), snap.version)
   }
 
   /** The table's live data files at the current snapshot (diagnostics,
@@ -602,48 +601,29 @@ final class GraftDatabase private (
     val dvsT = snapT.dvs.collect { case ((t, f), dv) if t == n => f -> dv }
     (TxLog.Put(n, files) +:
       snapT.schemas.get(n).map(js => TxLog.Sch(n, js)).toSeq) ++
-      files.flatMap(f =>
+      (files ++ dvsT.values).flatMap(f =>
         snapT.stats.get((n, f)).map(js => TxLog.Sta(n, f, js))) ++
       dvsT.toSeq.map { case (f, dv) => TxLog.Dvec(n, f, dv) } ++
       files.filter(f => !dvsT.contains(f) && headNow.dvs.contains((n, f)))
         .map(f => TxLog.Dvec(n, f, ""))
   }
 
-  /** Stats-pruned range read: resolve the file list from the snapshot,
-    * drop every file whose LOG-HELD min/max (harvested once at stage
-    * time, [[FileStatsUtil]]) provably excludes [lo, hi], and scan only
-    * the survivors — zero footer opens at read time, the difference at
-    * a million files between "skip row groups after opening every
-    * footer" and "never open them". Row-group pruning (pushdown) still
-    * applies INSIDE the surviving files, and the exact filter runs on
-    * top, so results never depend on stats: a file without usable
-    * stats (legacy import, foreign writer) is simply always scanned.
-    * Pair with `ensureIndex` (range-clustering) to make per-file ranges
-    * disjoint and the pruning ratio sharp.
+  /** Stats-pruned range read: the table at the head filtered to
+    * `column` in [lo, hi]. [[StatsPruneRule]] drops every file whose
+    * LOG-HELD min/max (harvested once at stage time, [[FileStatsUtil]])
+    * provably excludes the range — zero footer opens at read time, the
+    * difference at a million files between "skip row groups after
+    * opening every footer" and "never open them". Row-group pruning
+    * (pushdown) still applies INSIDE the surviving files, and the exact
+    * filter runs on top, so results never depend on stats: a file
+    * without usable stats (legacy import, foreign writer) is simply
+    * always scanned. Pair with `ensureIndex` (range-clustering) to make
+    * per-file ranges disjoint and the pruning ratio sharp.
     */
   def seek(name: String, column: String, lo: Any, hi: Any): DataFrame = {
-    val n = norm(name)
-    val snap = txlog.snapshot()
-    val files = snap.tables.getOrElse(n, throw noTable(n))
-    val probe = FileStatsUtil.probe(statsColumn(snap, n, column), lo, hi)
-    val keep = files.filter(f => probe.admits(snap.stats.get((n, f))))
     val c = col(column)
-    if (keep.isEmpty) // provably empty: keep the schema, scan nothing
-      txlog.readFiles(n, files.take(1), snap.schemas.get(n)).limit(0)
-        .filter(c >= lit(lo) && c <= lit(hi))
-    else txlog.readFilesMasked(snap, n, keep) // DV-masked logical rows
-      .filter(c >= lit(lo) && c <= lit(hi))
+    tableIn(txlog.snapshot(), norm(name)).filter(c >= lit(lo) && c <= lit(hi))
   }
-
-  /** The name `column` of table `n` carries in `snap`'s file stats: they
-    * are harvested under PHYSICAL names, so a renamed column translates
-    * (identity when no mapping exists).
-    */
-  private def statsColumn(snap: TxLog.Snapshot, n: String,
-      column: String): String =
-    pinOf(snap, n).flatMap(pin => TxLog.logicalFields(pin)
-        .find(_.name.equalsIgnoreCase(column)).map(TxLog.physicalName))
-      .getOrElse(column)
 
   /** Apply a change feed (the output of [[changes]]/[[changesSince]] on
     * a same-shape source table) to THIS table — the replication
@@ -675,7 +655,11 @@ final class GraftDatabase private (
     try {
       val ins = f.filter(col("_change_type") === "insert")
         .drop("_change_type")
-      val touchedKeys = f.select(col(tdef.pk)).distinct()
+      // null-safe: a feed row with a null PK addresses the null-PK row
+      val touchedKeys = f.select(col(tdef.pk).as("_graft_key")).distinct()
+      def untouched(df: DataFrame): DataFrame =
+        df.join(touchedKeys, df(tdef.pk) <=> touchedKeys("_graft_key"),
+          "left_anti")
       if (!snap.tables.contains(n)) {
         // bootstrap: the first batch materializes the replica —
         // validation and staging run concurrently (see insert)
@@ -697,7 +681,8 @@ final class GraftDatabase private (
       // file id is an absolute path and can never equal it
       val dupSentinel = "_graft_pkdup"
       val cnt = org.apache.spark.sql.functions.count(lit(1))
-      val hitQ = marked.join(touchedKeys, Seq(tdef.pk), "left_semi")
+      val hitQ = marked.join(touchedKeys,
+          marked(tdef.pk) <=> touchedKeys("_graft_key"), "left_semi")
         .select(col("_graft_file").as("_k")).groupBy(col("_k"))
         .agg(cnt.as("_n"))
       val dupQ = ConstrainedDml.repeated(ins.groupBy(col(tdef.pk)))
@@ -729,7 +714,7 @@ final class GraftDatabase private (
       // I/O is churn-file bytes, never a whole-replica semi-join scan
       // (at 100 TB the difference between "read the touched 128 MB"
       // and "rescan the table per batch")
-      def result = tableIn(snap, n).join(touchedKeys, Seq(tdef.pk), "left_anti")
+      def result = untouched(tableIn(snap, n))
         .unionByName(ins, allowMissingColumns = true)
       // NEVER patch-safe: the batch inserts NEW PKs, and two concurrent
       // appliers (multi-source replication) committing commuting
@@ -741,8 +726,7 @@ final class GraftDatabase private (
         patchSafe = false, extra = Seq(TxLog.Txn(appId, batchId)))(
         requireClean(ConstrainedDml.validateUpdate(spark, tdef, ins, result,
           parentsOf(snap, tdef), pkImmutable = true)))(
-        _.join(touchedKeys, Seq(tdef.pk), "left_anti")
-          .unionByName(ins, allowMissingColumns = true))(result)
+        untouched(_).unionByName(ins, allowMissingColumns = true))(result)
       true
     } finally f.unpersist() // best-effort; checkpoint blocks GC-release
   }
@@ -1285,7 +1269,7 @@ final class GraftDatabase private (
     val actions =
       (TxLog.Put(d0, files) +:
         snapSrc.schemas.get(s0).map(js => TxLog.Sch(d0, js)).toSeq) ++
-        files.flatMap(f =>
+        (files ++ dvs.values).flatMap(f =>
           snapSrc.stats.get((s0, f)).map(js => TxLog.Sta(d0, f, js))) ++
         dvs.toSeq.map { case (f, dv) => TxLog.Dvec(d0, f, dv) }
     val v = txlog.commit(actions, readVersion = head.version,
@@ -1630,7 +1614,7 @@ final class GraftDatabase private (
       // batch PK and which PKs exist, so the match needs no job of its own
       case Some(held) =>
         val pkAt = held.fields(tdef.pk)
-        val hits = hitsOf(snap, n, existing, tdef.pk,
+        val hits = hitsOf(n, markedIn(snap, n), tdef.pk,
           held.rows.toSeq.map(_.get(pkAt)).filter(_ != null))
         val present = hits.map(h => ConstrainedDml.key(h._2)).toSet
         val matched = held.rows.filter(r =>
@@ -1674,7 +1658,7 @@ final class GraftDatabase private (
     val merged = ConstrainedDml.upsert(existing, batch, tdef.pk, rows)
     val marked = markedIn(snap, n)
     def probe = hits.getOrElse(held match {
-      case Some(lb) => hitsOf(snap, n, existing, tdef.pk,
+      case Some(lb) => hitsOf(n, marked, tdef.pk,
         lb.rows.toSeq.map(_.get(lb.fields(tdef.pk)))).map(_._1).distinct
       case None => probeHits(n, tdef.pk, marked, batch.select(col(tdef.pk)))
     })
@@ -1694,51 +1678,23 @@ final class GraftDatabase private (
     ConstrainedDml.localBatch(rows,
       Seq(pk -> existing.toSeq.map(ConstrainedDml.typeOf(_, pk))))
 
-  /** The (file, PK) pairs of `snap`'s table `n` (read as `existing`)
-    * whose PK is one of `keys` (null-safe: a null key finds the null-PK
-    * row). ONE labelled job that reads only the files whose log stats
-    * may hold a key — the keys' min/max (and null counts), the way
-    * [[seek]] prunes. A plain filter would not prune here: the file
-    * column is a nondeterministic projection no filter is pushed below,
-    * so the stats rule never sees a filter over the relation. The files
-    * read with `existing`'s schema, so a table without a stored schema
-    * infers none for the subset.
+  /** The (file, PK) pairs of `marked` (table `n` with each row's
+    * `_graft_file`) whose PK is one of `keys` (null-safe: a null key
+    * finds the null-PK row). ONE labelled job; the key filter pushes
+    * down to the scan, so [[StatsPruneRule]] reads only the files whose
+    * log stats may hold a key.
     */
-  private def hitsOf(snap: TxLog.Snapshot, n: String, existing: DataFrame,
-      pk: String, keys: Seq[Any]): Array[(String, Any)] = {
+  private def hitsOf(n: String, marked: DataFrame, pk: String,
+      keys: Seq[Any]): Array[(String, Any)] = {
     val present = keys.filter(_ != null)
-    val withNull = keys.contains(null)
-    val statCol = statsColumn(snap, n, pk)
-    val range = keyRange(present).map { case (lo, hi) =>
-      FileStatsUtil.probe(statCol, lo, hi) }
-    val nulls = FileStatsUtil.nullProbe(statCol, wantNull = true)
-    val files = snap.tables.getOrElse(n, Vector.empty).filter { f =>
-      val st = snap.stats.get((n, f))
-      range.exists(_.admits(st)) || (withNull && nulls.admits(st))
+    val cond = (Option.when(present.nonEmpty)(col(pk).isin(present: _*)) ++
+      Option.when(keys.contains(null))(col(pk).isNull)).reduceOption(_ || _)
+    cond.fold(Array.empty[(String, Any)]) { c =>
+      graft.core.JobLabel(spark, s"keyed hit probe $n") {
+        marked.filter(c).select(col("_graft_file"), col(pk)).collect()
+      }.map(r => r.getString(0) -> r.get(1))
     }
-    val cond = (range.map(_ => col(pk).isin(present: _*)) ++
-      Option.when(withNull)(col(pk).isNull)).reduceOption(_ || _)
-    if (files.isEmpty) Array.empty
-    else graft.core.JobLabel(spark, s"keyed hit probe $n") {
-      txlog.readFilesMarked(snap, n, files,
-        snap.schemas.get(n).orElse(Some(existing.schema.json)), "_graft_file")
-        .filter(cond.get).select(col("_graft_file"), col(pk)).collect()
-    }.map(r => r.getString(0) -> r.get(1))
   }
-
-  /** The least and greatest of `keys` (one column's non-null values),
-    * strings in the UTF-8 order the file stats use.
-    */
-  private def keyRange(keys: Seq[Any]): Option[(Any, Any)] =
-    keys.headOption.map { head =>
-      val lte: (Any, Any) => Boolean = head match {
-        case _: String => (a, b) =>
-          FileStatsUtil.utf8LteForPrune(a.toString, b.toString)
-        case _ => (a, b) => a.asInstanceOf[Comparable[Any]].compareTo(b) <= 0
-      }
-      (keys.reduce((a, b) => if (lte(a, b)) a else b),
-        keys.reduce((a, b) => if (lte(a, b)) b else a))
-    }
 
   /** UpdateMany with column transforms over rows matching `predicate`
     * (TableCollection.cs:1305-1328, `UPDATE ... SET col = expr WHERE ...`):
@@ -1765,8 +1721,7 @@ final class GraftDatabase private (
     // count, validation, and rewrite — and every later step reads the
     // churn-sized materialized hits, never a re-evaluated table scan.
     val marked = markedIn(snap, n0)
-    val hits = marked.withColumn("_graft_hit", coalesce(predicate, lit(false)))
-      .filter(col("_graft_hit"))
+    val hits = marked.filter(predicate)
       .select(col(tdef.pk).as("_graft_hit_pk"), col("_graft_file"))
       .localCheckpoint(eager = true)
     val perFile = hits.groupBy("_graft_file").count().collect()
@@ -2091,11 +2046,12 @@ final class GraftDatabase private (
   private def clearClusterMeta(name: String): Unit =
     Files.deleteIfExists(Paths.get(s"$tablesDir/.${norm(name)}_cluster"))
 
-  /** The one map from a scan's ABSOLUTE hit-file URIs (input_file_name
-    * form) back to `snap`'s root-relative binding entries: (URI, entry)
-    * pairs in binding order. Every hit-file path resolves through here.
-    * The hits come from a frame read at `snap` itself, so each maps; one
-    * that does not is an engine bug, refused before anything stages.
+  /** The one map from a scan's ABSOLUTE hit-file URIs (the `_metadata`
+    * file-path form) back to `snap`'s root-relative binding entries:
+    * (URI, entry) pairs in binding order. Every hit-file path resolves
+    * through here. The hits come from a frame read at `snap` itself, so
+    * each maps; one that does not is an engine bug, refused before
+    * anything stages.
     */
   private def hitEntries(snap: TxLog.Snapshot, table: String,
       hitRaw: Seq[String]): Vector[(String, String)] = {
@@ -2194,8 +2150,7 @@ final class GraftDatabase private (
 
   /** `snap`'s table `n` with each row's data file as `_graft_file`. */
   private def markedIn(snap: TxLog.Snapshot, n: String): DataFrame =
-    txlog.readFilesMarked(snap, n, snap.tables(n), snap.schemas.get(n),
-      "_graft_file")
+    txlog.readMarked(snap, n, "_graft_file")
 
   private def requireClean(vs: Seq[ConstrainedDml.Violation]): Unit =
     if (vs.nonEmpty)

@@ -12,14 +12,16 @@ import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, 
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Automatic data skipping for the DEFAULT read path — the analog of
-  * the reference's query optimizer picking an index per AND-term with
-  * no user hint (`LiteDB/Engine/Query/QueryOptimization.cs:168-294`,
-  * `IndexOptimization` over the WHERE's conjuncts). [[GraftDatabase.seek]]
-  * prunes file lists from log-held stats only when CALLED; this rule
-  * makes the same pruning fire on every `db.sql(...)`, `db.table(...)
-  * .filter(...)`, `db.find(...)` — any Spark plan whose filter sits
-  * over a graft-owned parquet relation — with zero API changes.
+/** Automatic data skipping — the analog of the reference's query
+  * optimizer picking an index per AND-term with no user hint
+  * (`LiteDB/Engine/Query/QueryOptimization.cs:168-294`,
+  * `IndexOptimization` over the WHERE's conjuncts). The one file-skipping
+  * path: it fires on every `db.sql(...)`, `db.table(...).filter(...)`,
+  * `db.find(...)`, [[GraftDatabase.seek]] (a range filter) and every
+  * keyed write's hit probe (a filter over the frame whose source-file
+  * column is Spark's deterministic `_metadata` path, so the filter still
+  * reaches the relation) — any Spark plan whose filter sits over a
+  * graft-owned parquet relation.
   *
   * Mechanics: a logical-plan rule (installed once per session into
   * `spark.experimental.extraOptimizations`, so it runs AFTER filter
@@ -31,7 +33,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * files whose stats admit the range. The ORIGINAL filter stays in the
   * plan, so results never depend on stats precision; a file without
   * usable stats (foreign writer, stat-less column, vacuumed history)
-  * is always scanned — identical conservatism to `seek`.
+  * is always scanned.
   *
   * Scale: per query the rule does one in-memory map lookup per file
   * and one compiled-regex probe per (file, bounded column) — no I/O,

@@ -442,12 +442,16 @@ final class TxLog(spark: SparkSession, root: String,
     else {
       val live = snap.tables.map { case (t, fs) => t -> fs.toSet }
       def bound(t: String, f: String) = live.get(t).exists(_.contains(f))
-      snap.copy(
-        stats = snap.stats.filter { case ((t, f), _) => bound(t, f) },
-        // a DV lives exactly as long as its data file: a rewrite of the
-        // file (Patch/Put) already materialized the mask into the
-        // replacement, and a stale DV entry would orphan its sidecar
-        dvs = snap.dvs.filter { case ((t, f), _) => bound(t, f) })
+      // a DV lives exactly as long as its data file: a rewrite of the
+      // file (Patch/Put) already materialized the mask into the
+      // replacement, and a stale DV entry would orphan its sidecar
+      val dvs = snap.dvs.filter { case ((t, f), _) => bound(t, f) }
+      // a bound mask keeps its sidecar's stats: a filter's key bounds,
+      // inferred across the mask anti-join, then prune the sidecar too
+      val masks = dvs.map { case ((t, _), dv) => (t, dv) }.toSet
+      snap.copy(dvs = dvs, stats = snap.stats.filter {
+        case (k @ (t, f), _) => bound(t, f) || masks(k)
+      })
     }
   }
 
@@ -467,7 +471,7 @@ final class TxLog(spark: SparkSession, root: String,
 
   /** [[readFiles]] minus the files' deletion-vector masks at snapshot
     * `s` — THE logical-content read for any file subset (full table
-    * reads, seek's pruned lists, the change feed's exchanged sets).
+    * reads, keyed writes' hit files, the change feed's exchanged sets).
     *
     * A DV masks rows ONLY IN ITS OWN FILE: a PK that was DV-deleted and
     * later re-inserted lives in a NEWER file the stale mask must not
@@ -482,7 +486,7 @@ final class TxLog(spark: SparkSession, root: String,
     *   - above it (mass vectorized deletes before OPTIMIZE): ONE scan
     *     of all masked files + ONE anti-join keyed on (source file, PK)
     *     — the mask side carries its file identity as a literal, the
-    *     scan side derives it from `input_file_name()`'s invariant
+    *     scan side derives it from the file-metadata column's invariant
     *     `Tables/<t>/<dir>/<part>` suffix — so plan size stays O(1)
     *     instead of O(masked files)
     */
@@ -495,9 +499,9 @@ final class TxLog(spark: SparkSession, root: String,
     readFilesMasked(s, table, rel, s.schemas.get(table))
 
   /** File-granular DV subtraction (see [[readFilesMasked]]); `fileCol`
-    * additionally materializes each row's source file BELOW the mask
-    * joins (`input_file_name()` must sit directly over a file source —
-    * Spark's PreReadCheck rejects it above a join).
+    * additionally carries each row's source file, Spark's `_metadata`
+    * file path, a deterministic column: a filter over the marked frame
+    * still pushes down to the scan, so [[StatsPruneRule]] prunes it.
     */
   private def maskedRead(s: Snapshot, table: String, rel: Seq[String],
       schemaJson: Option[String], fileCol: Option[String]): DataFrame = {
@@ -506,8 +510,12 @@ final class TxLog(spark: SparkSession, root: String,
     val dvOf = s.dvs.collect {
       case ((t, f), dv) if t == table && relSet(f) => (f, dv)
     }.toMap
+    // metadataColumn resolves the file source's own column, so a user
+    // column named `_metadata` cannot shadow it
+    def fileOf(d: DataFrame) =
+      d.metadataColumn("_metadata").getField("file_path")
     def mark(d: DataFrame): DataFrame =
-      fileCol.fold(d)(c => d.withColumn(c, input_file_name()))
+      fileCol.fold(d)(c => d.withColumn(c, fileOf(d)))
     if (dvOf.isEmpty) return mark(readFiles(table, rel, schemaJson))
     // DV sidecars carry the pk under its PHYSICAL name (they stage like
     // data); the data read surfaces LOGICAL names — rename mask columns
@@ -528,7 +536,7 @@ final class TxLog(spark: SparkSession, root: String,
       else Some(mark(readFiles(table, plainRel, schemaJson)))
     // staged data files are always root-relative Tables/<t>/<dir>/<part>
     // (4 components) — the suffix identity the single-scan path keys
-    // on. The scan side derives its key from input_file_name()'s URI,
+    // on. The scan side derives its key from the file path's URI,
     // which URL-ENCODES exotic characters, so the key equality also
     // requires every path char to be URI-verbatim; anything else (an
     // exotic table name, a foreign layout) takes the per-file path —
@@ -555,8 +563,9 @@ final class TxLog(spark: SparkSession, root: String,
           m.select(col(m.columns.head), lit(f).as("_graft_dv_file"))
         }.reduce(_ unionByName _)
         val pk = masks.columns.head
-        val scanned = mark(readFiles(table, maskedRel, schemaJson)).withColumn(
-          "_graft_dv_scan_file", substring_index(input_file_name(), "/", -4))
+        val scan = readFiles(table, maskedRel, schemaJson)
+        val scanned = mark(scan).withColumn(
+          "_graft_dv_scan_file", substring_index(fileOf(scan), "/", -4))
         scanned.join(masks,
           scanned(pk) === masks(pk) &&
             scanned("_graft_dv_scan_file") === masks("_graft_dv_file"),
@@ -605,12 +614,11 @@ final class TxLog(spark: SparkSession, root: String,
     fs.foreach(_.join())
   }
 
-  /** [[readFilesMasked]] with each row's source file as `fileCol`
-    * materialized below the DV mask joins — see [[maskedRead]].
+  /** `s`'s table `table`, DV-masked, with each row's source file as
+    * `fileCol` — see [[maskedRead]].
     */
-  def readFilesMarked(s: Snapshot, table: String, rel: Seq[String],
-      schemaJson: Option[String], fileCol: String): DataFrame =
-    maskedRead(s, table, rel, schemaJson, Some(fileCol))
+  def readMarked(s: Snapshot, table: String, fileCol: String): DataFrame =
+    maskedRead(s, table, s.tables(table), s.schemas.get(table), Some(fileCol))
 
   /** True when `snapshotAt(v)` can faithfully reconstruct version v:
     * either a checkpoint at or below v survives, or the log was never
@@ -819,8 +827,9 @@ final class TxLog(spark: SparkSession, root: String,
       val all = parts.map(p => s"$rel/$p")
       // harvest per-file column min/max AND row counts from the
       // just-written footers (bounded by THIS write's file count — the
-      // one moment stats are free) so the commit can carry them; `seek`
-      // then prunes file lists from the log with ZERO further I/O.
+      // one moment stats are free) so the commit can carry them; the
+      // stats rule then prunes file lists from the log with ZERO further
+      // I/O.
       // Best-effort: a file whose footer cannot be read (or a column
       // without usable stats) simply never prunes.
       // footers are independent local reads — harvest them in parallel
@@ -918,7 +927,7 @@ final class TxLog(spark: SparkSession, root: String,
       case Add(t, fs)      => fs.map(t -> _)
       case Patch(t, _, ad) => ad.map(t -> _)
       // a DV sidecar is staged like data (its stagedStats entry must be
-      // consumed, not leak); the Sta that rides is gc'd as non-bound
+      // consumed, not leak); its Sta rides and lives as long as the mask
       case Dvec(t, _, dv)  => Seq(t -> dv)
       case _               => Nil
     }
@@ -928,13 +937,14 @@ final class TxLog(spark: SparkSession, root: String,
     // idempotence: a commit carrying an (appId, batchId) already applied
     // at the CURRENT head is a replay — skip it (exactly-once state from
     // at-least-once delivery). Re-checked on every publish retry, so two
-    // racing replayers of the same batch apply it exactly once.
+    // racing replayers of the same batch apply it exactly once. The
+    // head's ledger folds off the listing that found `head` (snapshotAt
+    // reuses it), so the check lists nothing of its own.
     val marks = actions.collect { case t: Txn => t }
-    def alreadyApplied(): Boolean = marks.nonEmpty && {
-      val txns = snapshot().txns // one head resolution for every mark
+    def alreadyApplied(head: Long): Boolean = marks.nonEmpty && {
+      val txns = snapshotAt(head).txns
       marks.exists(t => txns.get(t.appId).exists(_ >= t.batchId))
     }
-    if (alreadyApplied()) return version
     // Conflict granularity (the Delta-style remove/add resolution):
     //  - tables I touch with an ABSOLUTE action (Put/Add/Del/Ren), plus
     //    my read set, conflict with ANY interleaved touch;
@@ -1010,6 +1020,7 @@ final class TxLog(spark: SparkSession, root: String,
     // and the attempted slot, never conflict-checked (the first-try
     // publish succeeds, so the lost-race recheck never runs)
     val head = version
+    if (alreadyApplied(head)) return head
     if (readVersion >= 0) assertNoConflict(readVersion + 1, head)
     // attach the harvested per-file stats to the commit PUBLISHING each
     // staged file (derived metadata: Sta touches nothing, so conflict
@@ -1042,7 +1053,7 @@ final class TxLog(spark: SparkSession, root: String,
           // interleaved commit — overlap is a real write-write conflict;
           // a BLIND commit commutes by contract and just retries.
           val latest = version
-          if (alreadyApplied()) return latest
+          if (alreadyApplied(latest)) return latest
           if (readVersion >= 0) assertNoConflict(attempt, latest)
           if (latest < attempt)
             // the slot is CLAIMED but nothing has landed (fallback-lock
@@ -1494,8 +1505,9 @@ object TxLog {
   /** Per-file column min/max harvested from the file's own footer at
     * stage time (the Delta-style data-skipping record). Derived
     * metadata riding the data action that publishes the file —
-    * `touches` nothing, so it never changes conflict semantics. `seek`
-    * prunes file lists from these with zero read-time I/O.
+    * `touches` nothing, so it never changes conflict semantics.
+    * [[StatsPruneRule]] prunes file lists from these with zero
+    * read-time I/O.
     */
   final case class Sta(table: String, file: String,
       statsJson: String) extends Action {

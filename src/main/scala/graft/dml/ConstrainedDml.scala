@@ -751,8 +751,10 @@ object ConstrainedDml {
   /** [[deleteCascade]] plus, per changed table, the frame of rows the
     * walk TOUCHED there (deleted or FK-set-null) — the facade derives
     * file-granular rewrites from it (only files holding a touched row
-    * rewrite). Every hit frame descends directly from that table's scan,
-    * so scan-time columns like `input_file_name()` survive into it.
+    * rewrite). Every hit frame descends directly from that table's
+    * frame, so a column it carries (the facade's source-file column)
+    * survives into it; the root's is `predicate` over that frame, so the
+    * predicate reaches the scan (file skipping applies).
     */
   def deleteCascadeWithHits(
       spark: SparkSession,
@@ -761,17 +763,23 @@ object ConstrainedDml {
       predicate: org.apache.spark.sql.Column)
       : (Map[String, DataFrame], Map[String, DataFrame]) = {
     val (rows, tdef) = states(table)
-    val doomedKeys = rows.filter(predicate).select(col(tdef.pk)).cache()
-    deleteByKeys(spark, states, table, doomedKeys)
+    // a null PK never equi-matches the removal below, so such a row is
+    // not deleted, and not a hit
+    deleteByKeys(spark, states, table,
+      rows.filter(predicate && col(tdef.pk).isNotNull).cache())
   }
 
+  /** Delete `doomed` (rows of `table`'s state, evaluated once) and walk
+    * its children's FKs.
+    */
   private def deleteByKeys(
       spark: SparkSession,
       states: Map[String, (DataFrame, TableDef)],
       table: String,
-      doomedKeys: DataFrame)
+      doomed: DataFrame)
       : (Map[String, DataFrame], Map[String, DataFrame]) = {
     val (rows, tdef) = states(table)
+    val doomedKeys = doomed.select(col(tdef.pk))
     // thread state updates through the walk: if two FK paths reach the same
     // table (diamond), the second pass must see the first pass's deletes
     var current: Map[String, (DataFrame, TableDef)] = states
@@ -793,10 +801,8 @@ object ConstrainedDml {
             if (n > 0) throw new IllegalStateException(
               s"restrictive FK: $childName.${fk.childCol} has $n dependent rows")
           case Cascade =>
-            addHit(childName, affected)
-            val childDoomed = affected.select(col(childDef.pk)).cache()
             val (sub, subHits) =
-              deleteByKeys(spark, current - table, childName, childDoomed)
+              deleteByKeys(spark, current - table, childName, affected.cache())
             current = current.map { case (n, (df, d)) =>
               n -> ((sub.getOrElse(n, df), d))
             }
@@ -819,9 +825,7 @@ object ConstrainedDml {
     val remaining = rows.join(broadcast(doomedKeys
         .withColumnRenamed(tdef.pk, "_doomed")),
       rows(tdef.pk) === col("_doomed"), "left_anti")
-    addHit(table, rows.join(broadcast(doomedKeys
-        .withColumnRenamed(tdef.pk, "_doomed2")),
-      rows(tdef.pk) === col("_doomed2"), "left_semi"))
+    addHit(table, doomed)
     // report every table whose state changed (plus this one)
     val changed = current.collect {
       case (n, (df, _)) if !(df eq states(n)._1) => n -> df

@@ -73,6 +73,19 @@ class KeyedRewriteSpec extends AnyFunSuite {
     assert(rows == Seq(Row(1, "a"), Row(2, "b")))
   }
 
+  test("applyChanges matches a null PK null-safely: a feed replacing " +
+    "the null-PK row leaves one null-PK row") {
+    val db = freshDb("cdcnull")
+    db.sql("""INSERT INTO t VALUES {"v": "n"}""")
+    db.delete("t", $"id" === 2)
+    val feed = Seq((None: Option[Int], "n", "delete"),
+      (None: Option[Int], "z", "insert")).toDF("id", "v", "_change_type")
+    assert(db.applyChanges("t", feed, "cdc", 1L))
+    assert(db.table("t").orderBy("v").collect().toSeq ==
+      Seq(Row(1, "a"), Row(null, "z")))
+    assert(db.validateConstraints("t").isEmpty)
+  }
+
   test("a LiteSql statement that matches no row commits nothing, and " +
     "neither does the statement after it") {
     val db = freshDb("zerohit")

@@ -116,15 +116,62 @@ class SmallWriteBudgetSpec extends AnyFunSuite {
     assert(jobs.nonEmpty && jobs.forall(_.contains("constraint check")), jobs)
   }
 
+  /** The files of `db`'s point_state, at its head, whose log stats admit
+    * a probe for `keys`: their range, and a non-null key.
+    */
+  private def admittedFiles(db: GraftDatabase, keys: Seq[Int]): Set[String] = {
+    import graft.catalog.FileStatsUtil
+    val snap = db.txlogSnapshotForTest
+    val range = FileStatsUtil.probe("point_id", keys.min, keys.max)
+    val notNull = FileStatsUtil.nullProbe("point_id", wantNull = false)
+    snap.tables("point_state").filter { f =>
+      val st = snap.stats.get(("point_state", f))
+      range.admits(st) && notNull.admits(st)
+    }.map(f => java.nio.file.Paths.get(db.root, f).toString).toSet
+  }
+
+  /** The files each scan of point_state in `plans` that carries the
+    * source-file column (a hit probe's marked read) opened.
+    */
+  private def probeScans(db: GraftDatabase,
+      plans: Seq[SparkPlan]): Seq[Set[String]] =
+    plans.flatMap(PlanGates.allNodes).collect {
+      case s: FileSourceScanExec
+          if s.relation.location.rootPaths.exists(
+            _.toString.contains(db.tablePath("point_state"))) &&
+            s.output.exists(_.name == "file_path") =>
+        s.relation.location.inputFiles
+          .map(f => new org.apache.hadoop.fs.Path(f).toUri.getPath).toSet
+    }
+
   test("an upsert's hit probe is one job") {
     val db = ingestDb("budget-upsert")
-    val states = (1 to Points by 5).map(p => (p, 2.0)).toDF("point_id", "value")
-    val (jobs, _) = observed(db.upsert("point_state", states))
+    val keys = 1 to Points by 5
+    val admitted = admittedFiles(db, keys)
+    val states = keys.map(p => (p, 2.0)).toDF("point_id", "value")
+    val (jobs, plans) = observed(db.upsert("point_state", states))
     assert(jobs.count(_.contains("hit probe")) == 1, jobs)
     assert(jobs.count(_.contains("constraint check")) <= 1, jobs)
     assert(db.count("point_state") == Points)
     assert(db.table("point_state").filter($"value" === 2.0).count() ==
       (1 to Points by 5).size)
+    // the probe opens exactly the files whose stats admit the batch keys:
+    // all four here (the ingest layout spreads every key range over every
+    // file), a few of them once point_state is range-clustered
+    val opened = probeScans(db, plans)
+    assert(admitted.size == 4 && opened.nonEmpty && opened.forall(_ == admitted),
+      (admitted, opened))
+    db.delete("point_state", org.apache.spark.sql.functions.lit(true))
+    db.insert("point_state", (1 to Points).map(p => (p, 0.0))
+      .toDF("point_id", "value").repartitionByRange(4, $"point_id"))
+    val few = 1 to 40 by 5
+    val admitted2 = admittedFiles(db, few)
+    val files2 = db.liveFiles("point_state").size
+    val (_, plans2) = observed(db.upsert("point_state",
+      few.map(p => (p, 3.0)).toDF("point_id", "value")))
+    val opened2 = probeScans(db, plans2)
+    assert(admitted2.size < files2 && opened2.nonEmpty &&
+      opened2.forall(_ == admitted2), (files2, admitted2, opened2))
   }
 
   private def readingRows(from: Int, n: Int) = (from until from + n).map(i =>
@@ -221,10 +268,10 @@ class SmallWriteBudgetSpec extends AnyFunSuite {
   }
 
   /** Log LISTs (`TxLog.logListings`) per warm call on a quiet head: one
-    * resolves the statement's snapshot, one finds the commit's slot, and
-    * a ledger mark (`mergeBatch`, `insertBatch`, `applyChanges`) re-reads
-    * the head once for its replay check; a commit that writes a
-    * checkpoint lists once more. Before every statement resolved the
+    * resolves the statement's snapshot and one finds the commit's slot,
+    * which also answers a ledger mark's (`mergeBatch`, `insertBatch`,
+    * `applyChanges`) replay check; a commit that writes a checkpoint
+    * lists once more. Before every statement resolved the
     * head once, warm calls on this database shape listed: `insert`
     * (500 rows) 8, `upsert` (~440 rows) 7, `update` (1 row) 7,
     * `updateMany` 13, `delete` (1 row) 12, `mergeBatch` 8, `findById`
@@ -246,12 +293,12 @@ class SmallWriteBudgetSpec extends AnyFunSuite {
         $"point_id" === 11,
         Map("value" -> org.apache.spark.sql.functions.lit(i + 9.0)))),
       ("delete", 2L, i => db.delete("readings", $"reading_id" === 20L + i)),
-      ("mergeBatch", 3L, i => db.mergeBatch("point_state",
+      ("mergeBatch", 2L, i => db.mergeBatch("point_state",
         Seq((13, i + 2.0)).toDF("point_id", "value"),
         Seq(14 + i.toInt).toDF("point_id"), "budget-merge", i)),
-      ("insertBatch", 3L, i => db.insertBatch("readings",
+      ("insertBatch", 2L, i => db.insertBatch("readings",
         readingRows(30000 + 1000 * i.toInt, 10), "budget-insert", i)),
-      ("applyChanges", 3L, i => db.applyChanges("point_state",
+      ("applyChanges", 2L, i => db.applyChanges("point_state",
         Seq((15, i + 4.0, "insert")).toDF("point_id", "value", "_change_type"),
         "budget-cdc", i)),
       ("findById", 1L, _ => db.findById("points", 7)),

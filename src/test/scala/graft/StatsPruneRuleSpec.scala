@@ -350,4 +350,61 @@ class StatsPruneRuleSpec extends AnyFunSuite {
       assert(d.table("m").filter(col("k") >= 1100L).count() == 100)
     }
   }
+
+  test("a point filter over a marked frame prunes, and updateMany, " +
+    "deleteVectorized and delete find a point predicate's rows in the " +
+    "one file that can hold them") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    /** Files opened by each scan of `dir` in the queries `f` runs, other
+      * than its staged writes (a write runs as a `command`).
+      */
+    def scans(dir: String)(f: => Any): Seq[Int] = {
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+      val ql = new QueryExecutionListener {
+        def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit =
+          if (fn != "command")
+            graft.plans.PlanGates.allNodes(qe.executedPlan).foreach {
+              case s: FileSourceScanExec if s.relation.location.rootPaths
+                  .exists(_.toString.contains(dir)) =>
+                seen.add(s.relation.location.inputFiles.length)
+              case _ =>
+            }
+        def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      org.apache.spark.graft.ListenerDrain(spark.sparkContext)
+      spark.listenerManager.register(ql)
+      try { f; org.apache.spark.graft.ListenerDrain(spark.sparkContext) }
+      finally spark.listenerManager.unregister(ql)
+      import scala.jdk.CollectionConverters._
+      seen.asScala.toSeq
+    }
+    /** 1..400 range-clustered into 4 files on id. */
+    def clustered(tag: String): GraftDatabase = {
+      val db = freshDb(tag).defineTable(TableDef("t", "id"))
+      db.insert("t", (1 to 400).map(i => (i, i * 10L)).toDF("id", "v")
+        .repartitionByRange(4, col("id")))
+      assert(db.liveFiles("t").size == 4)
+      db
+    }
+    val db = clustered("prune_marked")
+    val marked = db.tableMarked("t", "f")._1.filter(col("id").isin(5, 7))
+    assert(marked.count() == 2)
+    assert(marked.inputFiles.length == 1,
+      s"marked point filter scanned ${marked.inputFiles.length} of 4 files")
+    val writes: Seq[(String, GraftDatabase => Any)] = Seq(
+      "updateMany" -> (_.updateMany("t", col("id") === 5,
+        Map("v" -> lit(0L)))),
+      "deleteVectorized" -> (_.deleteVectorized("t", col("id") === 5)),
+      "delete" -> (_.delete("t", col("id") === 5)))
+    writes.foreach { case (what, write) =>
+      val d = clustered(s"prune_$what")
+      val opened = scans(d.tablePath("t"))(write(d))
+      assert(opened.nonEmpty && opened.forall(_ == 1),
+        s"$what: files opened per scan $opened")
+      assert(d.table("t").filter(col("id") === 5 && col("v") === 50L)
+        .count() == 0, what)
+      assert(d.count("t") == (if (what == "updateMany") 400 else 399), what)
+    }
+  }
 }
